@@ -105,14 +105,19 @@ object SnapshotJson {
   /** T5 — the latest `count` snapshot files in a directory by embedded
     * `_fetched_at` (reference: :88–103). Small manifest — collected to
     * the driver exactly like the reference's file listing. */
-  def latestFiles(spark: SparkSession, dir: String, count: Int = 2): Seq[String] = {
-    val snaps = read(spark, s"$dir/bike_rides_*.json")
-    snaps.select(col("_file"), col("_fetched_at"))
+  def latestFiles(spark: SparkSession, dir: String, count: Int = 2): Seq[String] =
+    latestSnapshots(spark, dir, count).map(_._2)
+
+  /** (`_fetched_at`, `_file`) of the latest `count` snapshot files in
+    * `dir`, oldest first. Order is (`_fetched_at`, file name): files with
+    * equal `_fetched_at` keep file-name order. */
+  def latestSnapshots(spark: SparkSession, dir: String,
+      count: Int): IndexedSeq[(String, String)] =
+    read(spark, s"$dir/bike_rides_*.json")
+      .select(col("_file"), col("_fetched_at"))
       .collect()
       .map(r => (Option(r.getString(1)).getOrElse(""), r.getString(0)))
-      .sortBy(_._1)
+      .sorted
       .takeRight(count)
-      .map(_._2)
-      .toSeq
-  }
+      .toIndexedSeq
 }

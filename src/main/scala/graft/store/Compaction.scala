@@ -5,9 +5,11 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Small-file compaction for append-heavy parquet logs.
   *
-  * The streaming event log (graft.streaming.StatusStream) appends a few
-  * rows per micro-batch — after a day that's ~1440 tiny files, and at
-  * fleet scale the NameNode/listing cost dominates reads. Compaction
+  * The streaming event log (graft.streaming.StatusStream) gets one
+  * append of a few rows per micro-batch, however many snapshots the
+  * batch holds (and none when the batch has no events) — after a day of
+  * minute batches that's ~1440 tiny files, and at fleet scale the
+  * NameNode/listing cost dominates reads. Compaction
   * rewrites the log into ~`targetBytes` files (computed from the actual
   * on-disk size, not a guessed partition count), atomically swapping via
   * a temp dir — the same write-then-rename pattern the state store uses.

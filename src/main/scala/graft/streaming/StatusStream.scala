@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -21,10 +22,12 @@ import graft.status.SnapshotDiff
   * NOT "fix" that here.
   *
   * Scale: state is one fleet snapshot (thousands of rows — broadcast
-  * territory); the diff join shuffles at most the fleet size; the event
-  * log appends partitioned files. A `flatMapGroupsWithState` variant
-  * would keep per-bike state inside Spark, but changes gap semantics —
-  * kept as a possible extension, not parity.
+  * territory). A micro-batch of K snapshots costs a fixed number of jobs,
+  * not a number per snapshot: all K pairs diff in one join (each side
+  * shuffles at most K fleets), and the event log gets one append per
+  * batch (none for an event-free batch). A `flatMapGroupsWithState` variant would
+  * keep per-bike state inside Spark, but changes gap semantics — kept as
+  * a possible extension, not parity.
   */
 object StatusStream {
 
@@ -52,8 +55,12 @@ object StatusStream {
       .start()
 
   /** One micro-batch: snapshots are diffed against the persisted state
-    * in `_fetched_at` order, events appended, state replaced with the
-    * newest snapshot's positions. */
+    * in order, events appended, state replaced with the newest
+    * snapshot's positions.
+    *
+    * Snapshot order is (`_fetched_at`, file name): snapshots with equal
+    * `_fetched_at` apply in file-name order. A file without bike
+    * positions is not a snapshot here and leaves the state as it is. */
   def processBatch(
       spark: SparkSession,
       snapshots: DataFrame,
@@ -66,32 +73,24 @@ object StatusStream {
         col("bike_type"), col("battery"))
       .cache()
     try {
+      // The one collect of the batch; it also fills the positions cache.
       val order = positions.select(col("_file"), col("_fetched_at"))
         .distinct().collect()
         .map(r => (Option(r.getString(1)).getOrElse(""), r.getString(0)))
-        .sortBy(_._1)
-
-      var state: Option[DataFrame] =
-        if (exists(spark, statePath)) Some(spark.read.parquet(statePath)) else None
-      var written = 0L
-
-      order.foreach { case (ts, file) =>
-        val snap = positions.filter(col("_file") === file).drop("_file", "_fetched_at")
-        state.foreach { prev =>
-          val events = SnapshotDiff.events(prev, snap, ts)
-          val n = events.count()
-          if (n > 0) events.write.mode(SaveMode.Append).parquet(eventsPath)
-          written += n
-        }
-        state = Some(snap)
-      }
+        .sorted.toIndexedSeq
+      if (order.isEmpty) return 0L
+      val state =
+        if (fs(spark, statePath).exists(new Path(statePath)))
+          Some(spark.read.schema(positions.drop("_file", "_fetched_at").schema)
+            .parquet(statePath))
+        else None
+      val written = appendDiffs(spark, positions, order, state, eventsPath)
 
       // Persist the newest snapshot as the next batch's diff base.
-      state.foreach { s =>
-        val tmp = statePath + "_tmp"
-        s.write.mode(SaveMode.Overwrite).parquet(tmp)
-        replace(spark, tmp, statePath)
-      }
+      val tmp = statePath + "_tmp"
+      positions.filter(col("_file") === order.last._2).drop("_file", "_fetched_at")
+        .write.mode(SaveMode.Overwrite).parquet(tmp)
+      replace(spark, tmp, statePath)
       written
     } finally positions.unpersist()
   }
@@ -99,34 +98,79 @@ object StatusStream {
   /** Batch one-shot mirroring the reference CLI (src/bike_status_changes
     * .py:216–239): diff the latest two snapshots in `dir`, append. */
   def runOnce(spark: SparkSession, dir: String, eventsPath: String): Long = {
-    val files = SnapshotJson.latestFiles(spark, dir, 2)
-    if (files.size < 2) return 0L
+    val order = SnapshotJson.latestSnapshots(spark, dir, 2)
+    if (order.size < 2) return 0L
     val snaps = SnapshotJson.read(spark, s"$dir/bike_rides_*.json")
-      .filter(col("_file").isin(files: _*))
-    val positions = SnapshotJson.positions(snaps)
-    val tsOf = snaps.select(col("_file"), col("_fetched_at")).collect()
-      .map(r => r.getString(0) -> Option(r.getString(1)).getOrElse("")).toMap
-    val Seq(prevFile, currFile) = files
-    val events = SnapshotDiff.events(
-      positions.filter(col("_file") === prevFile),
-      positions.filter(col("_file") === currFile),
-      tsOf(currFile))
-    val n = events.count()
-    if (n > 0) events.write.mode(SaveMode.Append).parquet(eventsPath)
+      .filter(col("_file").isin(order.map(_._2): _*))
+    appendDiffs(spark, SnapshotJson.positions(snaps), order, None, eventsPath)
+  }
+
+  /** Diffs snapshots 1..K pairwise in one join and appends all their
+    * events to `eventsPath` in one write.
+    *
+    * @param positions bike positions keyed by `_file`
+    * @param order (`_fetched_at`, `_file`) of snapshots 1..K, oldest first
+    * @param state snapshot 0, the diff base of snapshot 1, if there is one
+    * @return events appended */
+  private def appendDiffs(
+      spark: SparkSession,
+      positions: DataFrame,
+      order: IndexedSeq[(String, String)],
+      state: Option[DataFrame],
+      eventsPath: String
+  ): Long = {
+    // Snapshot r is the newer side of pair r and the older side of pair
+    // r + 1; the state is the older side of pair 1.
+    val k = order.size
+    val first = if (state.isDefined) 1 else 2
+    if (first > k) return 0L
+    val ranked = positions
+      .withColumn("_rank",
+        element_at(typedLit(order.map(_._2).zip(1 to k).toMap), col("_file")))
+      .drop("_file", "_fetched_at")
+    val curr = ranked.filter(col("_rank") >= first).withColumnRenamed("_rank", "_pair")
+    val older =
+      if (k > 1) Seq(ranked.filter(col("_rank") < k)
+        .withColumn("_pair", col("_rank") + 1).drop("_rank"))
+      else Nil
+    val prev = (state.map(_.withColumn("_pair", lit(1))).toSeq ++ older)
+      .reduce(_.unionByName(_))
+    val timestamps = (first to k).map(r => r -> order(r - 1)._1).toMap
+    append(spark, SnapshotDiff.pairEvents(prev, curr, timestamps), eventsPath)
+  }
+
+  /** Appends `events` to the log in one write and returns its row count,
+    * observed on that same write. The write lands in a staging directory
+    * whose part files move into the log only when there are rows: Spark
+    * writes an empty part file even for zero rows, and an event-free
+    * batch must add no file to the log (see graft.store.Compaction). */
+  private def append(spark: SparkSession, events: DataFrame, eventsPath: String): Long = {
+    val obs = Observation()
+    val staging = new Path(eventsPath + "_staging")
+    events.observe(obs, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val n = obs.get("n").asInstanceOf[Long]
+    val fsys = fs(spark, eventsPath)
+    if (n > 0) {
+      val log = new Path(eventsPath)
+      fsys.mkdirs(log)
+      fsys.listStatus(staging).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .foreach { f =>
+          if (!fsys.rename(f, new Path(log, f.getName)))
+            sys.error(s"could not move $f into $log")
+        }
+    }
+    fsys.delete(staging, true)
     n
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def replace(spark: SparkSession, from: String, to: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(from)
-    val dst = new org.apache.hadoop.fs.Path(to)
-    val fs = src.getFileSystem(conf)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(src, dst)
+    val fsys = fs(spark, from)
+    val dst = new Path(to)
+    if (fsys.exists(dst)) fsys.delete(dst, true)
+    fsys.rename(new Path(from), dst)
   }
 }

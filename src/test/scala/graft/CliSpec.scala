@@ -77,10 +77,10 @@ class CliSpec extends SparkSpec {
   test("status-once through the CLI") {
     val landing = tmpDir("cliland")
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/data/sample/snapA.json"),
+      java.nio.file.Paths.get(Fixtures.snapA),
       java.nio.file.Paths.get(landing, "bike_rides_a.json"))
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/data/sample/snapB.json"),
+      java.nio.file.Paths.get(Fixtures.snapB),
       java.nio.file.Paths.get(landing, "bike_rides_b.json"))
     val events = tmpDir("cliev") + "/log"
     Main.run(spark, List("status-once", landing, events))

@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.SnapshotJson
@@ -10,11 +11,12 @@ import graft.status.SnapshotDiff
 import graft.streaming.StatusStream
 
 /** Goldens from reference tests/test_bike_status_changes.py against the
-  * curated snapA.json/snapB.json samples. */
+  * snapA.json/snapB.json fixtures (FIXTURES.md §3), and the one-pass
+  * micro-batch checked against a per-pair loop over `SnapshotDiff.events`. */
 class SnapshotDiffSpec extends SparkSpec {
 
-  private val snapA = "/root/reference/data/sample/snapA.json"
-  private val snapB = "/root/reference/data/sample/snapB.json"
+  private val snapA = Fixtures.snapA
+  private val snapB = Fixtures.snapB
 
   private lazy val posA = SnapshotJson.positions(SnapshotJson.read(spark, snapA))
   private lazy val posB = SnapshotJson.positions(SnapshotJson.read(spark, snapB))
@@ -107,4 +109,112 @@ class SnapshotDiffSpec extends SparkSpec {
       SnapshotJson.read(spark, snapB), eventsPath, statePath)
     assert(n2 === 0)
   }
+
+  test("latestFiles breaks _fetched_at ties by file name") {
+    val dir = tmpDir("latesttie")
+    def mini(ts: String) =
+      s"""{"_fetched_at": "$ts", "data": [{"cities": [{"places": []}]}]}"""
+    Files.write(Paths.get(dir, "bike_rides_b.json"), mini("2025-01-01T00:00:02").getBytes)
+    Files.write(Paths.get(dir, "bike_rides_a.json"), mini("2025-01-01T00:00:02").getBytes)
+    Files.write(Paths.get(dir, "bike_rides_c.json"), mini("2025-01-01T00:00:01").getBytes)
+    val latest = SnapshotJson.latestFiles(spark, dir, 2).map(f => f.split('/').last)
+    assert(latest === Seq("bike_rides_a.json", "bike_rides_b.json"))
+  }
+
+  test("re-delivering the newest snapshot appends no event and no file") {
+    val eventsPath = tmpDir("events") + "/status"
+    val statePath = tmpDir("state") + "/last"
+    val dir = tmpDir("batch")
+    Files.copy(Paths.get(snapA), Paths.get(dir, "bike_rides_a.json"))
+    Files.copy(Paths.get(snapB), Paths.get(dir, "bike_rides_b.json"))
+    assert(StatusStream.processBatch(spark, SnapshotJson.read(spark, dir),
+      eventsPath, statePath) > 0)
+    def logFiles() = new java.io.File(eventsPath).list().toSeq.sorted
+    val before = logFiles()
+    assert(StatusStream.processBatch(spark, SnapshotJson.read(spark, snapB),
+      eventsPath, statePath) === 0)
+    assert(logFiles() === before)
+  }
+
+  // ---- one-pass batch == per-pair loop over SnapshotDiff.events ----
+
+  /** Snapshot `i` of a 12-bike fleet as Nextbike JSON: four detailed
+    * stations, one `bikeNumbers`-only station, freestanding (electric)
+    * bikes as their own places. Bike 105 vanishes on odd snapshots and
+    * reappears on even ones; bike 101 is listed in two places, and the
+    * last listing is its position. */
+  private def snapshotJson(i: Int, ts: String): String = {
+    val rnd = new scala.util.Random(1000 + i)
+    val stations = (1 to 5).map(s => s"S$s")
+    def at() = if (rnd.nextInt(4) == 0) "FREE" else stations(rnd.nextInt(5))
+    val fleet = (100 until 112).map(_.toString)
+      .filter(b => if (b == "105") i % 2 == 0 else b == "101" || rnd.nextInt(7) != 0)
+    val placed = fleet.map(b => b -> at()) :+ ("101" -> at())
+    def bike(b: String) = {
+      val battery = if (b.toInt % 3 == 0) (10 + rnd.nextInt(90)).toString else "null"
+      val kind = if (b.toInt % 3 == 0) "ELECTRIC_4G" else "STANDARD_4G"
+      s"""{"number": $b, "bikeType": "$kind", "battery": $battery}"""
+    }
+    def geo(k: Int) = s""""geoCoords": {"lat": ${51.0 + k / 100.0}, "lng": ${17.0 + k / 100.0}}"""
+    val docked = stations.zipWithIndex.map { case (s, k) =>
+      val here = placed.filter(_._2 == s).map(_._1)
+      val list =
+        if (s == "S5") s""""bikeNumbers": [${here.map(b => s""""$b"""").mkString(", ")}]"""
+        else s""""bikes": [${here.map(bike).mkString(", ")}]"""
+      s"""{"uid": "${9000 + k}", "name": "Station $s", "placeType": "STATION", ${geo(k)}, $list}"""
+    }
+    val free = placed.zipWithIndex.filter(_._1._2 == "FREE").map { case ((b, _), k) =>
+      val kind = if (b.toInt % 3 == 0) "FREESTANDING_ELECTRIC_BIKE" else "FREESTANDING_BIKE"
+      s"""{"uid": "${7000 + k}", "name": "BIKE $b", "placeType": "$kind", ${geo(k)}, "bikes": [${bike(b)}]}"""
+    }
+    s"""{"_fetched_at": "$ts", "data": [{"cities": [{"places": [
+       |${(docked ++ free).mkString(",\n")}
+       |]}]}]}""".stripMargin
+  }
+
+  private def positionsOf(path: String): DataFrame =
+    SnapshotJson.positions(SnapshotJson.read(spark, path)).drop("_file", "_fetched_at")
+
+  private def rowKeys(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.mkString("|")).sorted
+
+  for (k <- Seq(1, 2, 4, 7); withState <- Seq(false, true))
+    test(s"one-pass batch of $k snapshot(s), ${if (withState) "with" else "no"} state " +
+        "== per-pair SnapshotDiff.events loop") {
+      val dir = tmpDir("backlog")
+      // file names run against _fetched_at order; snapshots 2 and 3 share one
+      val snaps = (1 to k).map { i =>
+        val ts = f"2025-08-21T15:${10 + (if (i == 3) 2 else i)}%02d:02+02:00"
+        val name = f"bike_rides_${99 - i}%02d.json"
+        Files.write(Paths.get(dir, name),
+          snapshotJson(i, ts).getBytes(StandardCharsets.UTF_8))
+        (ts, name)
+      }
+      val base = tmpDir("base") + "/bike_rides_base.json"
+      Files.write(Paths.get(base),
+        snapshotJson(0, "2025-08-21T15:09:02+02:00").getBytes(StandardCharsets.UTF_8))
+
+      // reference: the per-pair loop, in (_fetched_at, file name) order
+      var state = if (withState) Some(positionsOf(base)) else None
+      var expected = Seq.empty[Row]
+      snaps.sorted.foreach { case (ts, name) =>
+        val curr = positionsOf(s"$dir/$name")
+        state.foreach(prev => expected ++= SnapshotDiff.events(prev, curr, ts).collect())
+        state = Some(curr)
+      }
+
+      val eventsPath = tmpDir("events") + "/status"
+      val statePath = tmpDir("state") + "/last"
+      if (withState)
+        assert(StatusStream.processBatch(spark, SnapshotJson.read(spark, base),
+          eventsPath, statePath) === 0)
+      val n = StatusStream.processBatch(spark, SnapshotJson.read(spark, dir),
+        eventsPath, statePath)
+      val got =
+        if (Files.exists(Paths.get(eventsPath))) rowKeys(spark.read.parquet(eventsPath))
+        else Nil
+      assert(n === expected.size)
+      assert(got === expected.map(_.toSeq.mkString("|")).sorted)
+      assert(rowKeys(spark.read.parquet(statePath)) === rowKeys(state.get))
+    }
 }

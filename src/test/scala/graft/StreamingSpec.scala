@@ -18,8 +18,8 @@ case class DedupEv(ts: java.sql.Timestamp, uid: String, v: Double)
   * flatMapGroupsWithState extension. */
 class StreamingSpec extends SparkSpec {
 
-  private val snapA = "/root/reference/data/sample/snapA.json"
-  private val snapB = "/root/reference/data/sample/snapB.json"
+  private val snapA = Fixtures.snapA
+  private val snapB = Fixtures.snapB
 
   test("file-source stream end-to-end: two micro-batches of snapshots") {
     val landing = tmpDir("landing")

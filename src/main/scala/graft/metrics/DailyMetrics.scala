@@ -13,17 +13,23 @@ import graft.model.{DayMetrics, RouteStat, StationStat}
   * scan with the same `date(start_time)=? AND duration>2` predicate
   * (§3.2 of SURVEY.md). Here ALL days are computed in one job:
   *  - one scan with the global duration filter (F2);
-  *  - one partial+final hash agg per metric family, grouped by ride day;
-  *  - busiest stations as a native full-outer join of the per-day
-  *    departure/arrival aggregates (the reference emulates FULL OUTER
-  *    with UNION + 2 LEFT JOINs — a SQLite limitation, :112–141);
+  *  - one partial+final hash agg per metric family, grouped by ride day
+  *    (the scalars and the hourly histogram share one: 24 conditional
+  *    counts);
+  *  - busiest stations from one conditional agg over each ride's
+  *    (station, role) contributions (the reference emulates a FULL OUTER
+  *    join of departures and arrivals with UNION + 2 LEFT JOINs — a
+  *    SQLite limitation, :112–141);
   *  - per-day top-5 via row_number window over the (small) aggregated
   *    frames, NOT a global sort of facts.
   *
-  * Scale: grouping keys are (day[, station/route]); with the rides table
-  * partitioned by ride_date (see [[graft.store.RidesTable]]) a single-day
-  * run prunes to one partition, and the full-history run is one shuffle
-  * per metric family rather than days × 11 scans.
+  * Scale: grouping keys are (day[, station/route]); the full-history run
+  * is one shuffle per metric family rather than days × 11 scans. The
+  * families stay separate plans so that a consumer reading only some
+  * columns (the range requests of [[RangeMetrics]]) lets Catalyst drop
+  * the others. On the rides store (see [[graft.store.RidesTable]])
+  * [[forDay]] also filters on the `ride_date` partition column, so a
+  * single-day run reads one partition.
   *
   * Parity notes (SURVEY.md §7.4): Python round() is HALF_EVEN ⇒ `bround`;
   * `round(x,3) if x else 0.0` maps NULL→0.0 ⇒ coalesce AFTER rounding;
@@ -40,33 +46,33 @@ object DailyMetrics {
     rides
       .filter(col("duration") > 2)
       .withColumn("day", to_date(col("start_time")))
+      .withColumn("hour", hour(col("start_time")))
       .filter(col("day").isNotNull)
 
-  /** Scalar metrics per day: total/avg distance+duration, counts. */
-  private def scalars(b: DataFrame): DataFrame =
+  /** Scalar metrics per day — total/avg distance+duration, counts — and
+    * A2, the sparse hourly histogram (keys "0"…"23" ascending, hours
+    * without rides absent), from 24 conditional counts in the same agg. */
+  private def scalars(b: DataFrame): DataFrame = {
+    val hours = 0 until 24
+    val byHour = hours.map(h => count(when(col("hour") === h, 1)).as(s"h$h"))
     b.groupBy(col("day")).agg(
       count(lit(1)).as("total_rides"),
-      coalesce(bround(avg(col("distance")), 3), lit(0.0)).as("avg_distance_km"),
-      coalesce(bround(avg(col("duration")), 2), lit(0.0)).as("avg_duration_min"),
-      coalesce(bround(sum(col("distance")), 3), lit(0.0)).as("total_distance_km"),
-      coalesce(sum(col("duration")), lit(0L)).cast("long").as("total_duration_min"),
-      count(when(
-        col("start_station").isNotNull && col("end_station").isNotNull &&
-          col("start_station") === col("end_station"), 1)).as("round_trips"),
-      count(when(col("end_station") === OutsideStation, 1))
-        .as("left_outside_station")
-    )
-
-  /** A2 — sparse hourly histogram per day, keys "0"…"23" ascending. */
-  private def histogram(b: DataFrame): DataFrame =
-    b.groupBy(col("day"), hour(col("start_time")).as("h"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col("day"))
-      .agg(map_from_entries(array_sort(collect_list(struct(col("h"), col("n")))))
-        .as("hist_by_hour"))
-      .select(col("day"),
-        transform_keys(col("hist_by_hour"), (k, _) => k.cast("string"))
-          .as("bike_rentals_histogram"))
+      Seq(
+        coalesce(bround(avg(col("distance")), 3), lit(0.0)).as("avg_distance_km"),
+        coalesce(bround(avg(col("duration")), 2), lit(0.0)).as("avg_duration_min"),
+        coalesce(bround(sum(col("distance")), 3), lit(0.0)).as("total_distance_km"),
+        coalesce(sum(col("duration")), lit(0L)).cast("long").as("total_duration_min"),
+        count(when(
+          col("start_station").isNotNull && col("end_station").isNotNull &&
+            col("start_station") === col("end_station"), 1)).as("round_trips"),
+        count(when(col("end_station") === OutsideStation, 1))
+          .as("left_outside_station")
+      ) ++ byHour: _*)
+      .withColumn("bike_rentals_histogram", map_from_entries(filter(
+        array(hours.map(h => struct(lit(h.toString).as("k"), col(s"h$h").as("v"))): _*),
+        _.getField("v") > 0)))
+      .drop(hours.map(h => s"h$h"): _*)
+  }
 
   /** J3/T1 — busiest stations top-5 per day. The reference computes
     * dep/arr as two scans + a (UNION-emulated) full-outer join; the
@@ -130,20 +136,18 @@ object DailyMetrics {
         )).as("top_routes_top5"))
   }
 
-  /** All-days metrics frame: one row per day with every metric. The
-    * reference's per-day 11-scan loop collapses into 4 grouped aggs
-    * joined on the (small) day key. */
+  /** All-days metrics frame: one row per day with every metric, in date
+    * order. The reference's per-day 11-scan loop collapses into 3
+    * grouped aggs joined on the (small) day key. */
   def allDays(rides: DataFrame): DataFrame = {
     val b = base(rides)
     scalars(b)
-      .join(histogram(b), Seq("day"), "left")
       .join(busiest(b), Seq("day"), "left")
       .join(routes(b), Seq("day"), "left")
       .select(
         date_format(col("day"), "yyyy-MM-dd").as("date"),
         col("total_rides"),
-        coalesce(col("bike_rentals_histogram"),
-          map_from_arrays(array(), array())).as("bike_rentals_histogram"),
+        col("bike_rentals_histogram"),
         col("avg_distance_km"), col("avg_duration_min"),
         col("total_distance_km"), col("total_duration_min"),
         col("round_trips"), col("left_outside_station"),
@@ -151,15 +155,29 @@ object DailyMetrics {
           .as("busiest_stations_top5"),
         coalesce(col("top_routes_top5"), array()).as("top_routes_top5")
       )
-      .orderBy(col("date"))
+      // one row per day: a single partition holds the frame, and a sort
+      // inside it needs no range-partition sampling job
+      .coalesce(1).sortWithinPartitions(col("date"))
   }
 
   /** Single-day metrics as a typed document (reference `compute_metrics`
-    * result shape). Collects ONE row — never fact data. */
+    * result shape). Collects ONE row — never fact data.
+    *
+    * On a frame with the store's `ride_date` partition column the filter
+    * also names `ride_date`, which the scan turns into a partition
+    * filter: one partition is read. That is exact because the store
+    * keeps `ride_date = to_date(start_time)` (session zone, UTC — see
+    * [[graft.store.RidesTable]]); the `start_time` filter stays, so the
+    * result does not depend on it. */
   def forDay(rides: DataFrame, day: String): DayMetrics = {
     val spark = rides.sparkSession
     import spark.implicits._
-    val rows = allDays(rides.filter(to_date(col("start_time")) === lit(day)))
+    val onDay = to_date(col("start_time")) === lit(day)
+    val filtered =
+      if (rides.columns.contains("ride_date"))
+        rides.filter(col("ride_date") === lit(day).cast("date") && onDay)
+      else rides.filter(onDay)
+    val rows = allDays(filtered)
       .as[DayMetrics]
       .collect()
     rows.headOption.getOrElse(

@@ -31,20 +31,20 @@ object RangeMetrics {
       .orderBy(col("date"))
 
   /** A14 — hour histogram averaged over the days of the range;
-    * all 24 hours present, Math.round (HALF_UP) like the browser. */
-  def histogramAvg(daily: DataFrame, start: String, end: String): DataFrame = {
-    val ranged = inRange(daily, start, end)
-    val nDays = math.max(1L, ranged.count())
-    ranged
+    * all 24 hours present, Math.round (HALF_UP) like the browser. Each
+    * day contributes exactly one row per hour (absent hours as 0), so
+    * the per-hour row count is the number of days: no separate count
+    * job. An empty range yields no rows. */
+  def histogramAvg(daily: DataFrame, start: String, end: String): DataFrame =
+    inRange(daily, start, end)
       .select(explode(sequence(lit(0), lit(23))).as("hour"),
         col("bike_rentals_histogram").as("h"))
       .select(col("hour"),
         coalesce(element_at(col("h"), col("hour").cast("string")), lit(0L)).as("n"))
       .groupBy(col("hour"))
-      .agg(floor(sum(col("n")).cast("double") / nDays + 0.5).cast("long")
+      .agg(floor(sum(col("n")).cast("double") / count(lit(1)) + 0.5).cast("long")
         .as("avg_rentals"))
       .orderBy(col("hour"))
-  }
 
   /** A15/T3 — busiest stations over the range: sum each day's top-5
     * entries per station, re-rank by summed total. */

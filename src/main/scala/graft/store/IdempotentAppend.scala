@@ -26,11 +26,8 @@ object IdempotentAppend {
       .dropDuplicates(keys)
       .join(existing.select(keys.map(existing.col): _*), keys, "left_anti")
 
-  /** Full semantic: dedup + anti-join + append to `path` as parquet. */
-  def appendTo(incoming: DataFrame, existing: DataFrame, keys: Seq[String], path: String): Long = {
-    val delta = newRows(incoming, existing, keys)
-    val n = delta.count()
-    if (n > 0) delta.write.mode("append").parquet(path)
-    n
-  }
+  /** Full semantic: dedup + anti-join + append to `path` as parquet, in
+    * one observed write ([[LogAppend]]). Returns rows written. */
+  def appendTo(incoming: DataFrame, existing: DataFrame, keys: Seq[String], path: String): Long =
+    LogAppend(newRows(incoming, existing, keys), path)
 }

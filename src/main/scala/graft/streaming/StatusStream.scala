@@ -1,13 +1,14 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ingest.SnapshotJson
 import graft.model.Schemas
 import graft.status.SnapshotDiff
+import graft.store.LogAppend
 
 /** ST1–ST4 — the status track as Structured Streaming (reference:
   * src/pipeline.py + src/fetch_nextbike.py cadence: one snapshot JSON per
@@ -84,7 +85,7 @@ object StatusStream {
           Some(spark.read.schema(positions.drop("_file", "_fetched_at").schema)
             .parquet(statePath))
         else None
-      val written = appendDiffs(spark, positions, order, state, eventsPath)
+      val written = appendDiffs(positions, order, state, eventsPath)
 
       // Persist the newest snapshot as the next batch's diff base.
       val tmp = statePath + "_tmp"
@@ -102,7 +103,7 @@ object StatusStream {
     if (order.size < 2) return 0L
     val snaps = SnapshotJson.read(spark, s"$dir/bike_rides_*.json")
       .filter(col("_file").isin(order.map(_._2): _*))
-    appendDiffs(spark, SnapshotJson.positions(snaps), order, None, eventsPath)
+    appendDiffs(SnapshotJson.positions(snaps), order, None, eventsPath)
   }
 
   /** Diffs snapshots 1..K pairwise in one join and appends all their
@@ -113,7 +114,6 @@ object StatusStream {
     * @param state snapshot 0, the diff base of snapshot 1, if there is one
     * @return events appended */
   private def appendDiffs(
-      spark: SparkSession,
       positions: DataFrame,
       order: IndexedSeq[(String, String)],
       state: Option[DataFrame],
@@ -136,32 +136,7 @@ object StatusStream {
     val prev = (state.map(_.withColumn("_pair", lit(1))).toSeq ++ older)
       .reduce(_.unionByName(_))
     val timestamps = (first to k).map(r => r -> order(r - 1)._1).toMap
-    append(spark, SnapshotDiff.pairEvents(prev, curr, timestamps), eventsPath)
-  }
-
-  /** Appends `events` to the log in one write and returns its row count,
-    * observed on that same write. The write lands in a staging directory
-    * whose part files move into the log only when there are rows: Spark
-    * writes an empty part file even for zero rows, and an event-free
-    * batch must add no file to the log (see graft.store.Compaction). */
-  private def append(spark: SparkSession, events: DataFrame, eventsPath: String): Long = {
-    val obs = Observation()
-    val staging = new Path(eventsPath + "_staging")
-    events.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val n = obs.get("n").asInstanceOf[Long]
-    val fsys = fs(spark, eventsPath)
-    if (n > 0) {
-      val log = new Path(eventsPath)
-      fsys.mkdirs(log)
-      fsys.listStatus(staging).map(_.getPath).filter(_.getName.startsWith("part-"))
-        .foreach { f =>
-          if (!fsys.rename(f, new Path(log, f.getName)))
-            sys.error(s"could not move $f into $log")
-        }
-    }
-    fsys.delete(staging, true)
-    n
+    LogAppend(SnapshotDiff.pairEvents(prev, curr, timestamps), eventsPath)
   }
 
   private def fs(spark: SparkSession, path: String): FileSystem =

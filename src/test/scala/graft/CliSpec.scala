@@ -8,8 +8,8 @@ import graft.cli.Main
   * compute_daily_metrics CLI shapes), driven through Main.run. */
 class CliSpec extends SparkSpec {
 
-  private val sampleDir = "/root/reference/data/sample"
-  private val stationsCsv = "/root/reference/data/bike_stations_coords.csv"
+  private val sampleDir = Fixtures.ridesDir
+  private val stationsCsv = Fixtures.stationsCsv
 
   test("load-folder + metrics-latest + metrics-day through the CLI") {
     val base = tmpDir("cli")

@@ -2,8 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.metrics.{DailyMetrics, MetricsJson}
-import graft.model.Ride
+import graft.model.{Ride, RouteStat, StationStat}
 
 /** Goldens from reference tests/test_compute_daily_metrics.py:16–101
   * (the 6-ride fixture) and the JSON write/merge tests (:103–163). */
@@ -67,6 +69,97 @@ class DailyMetricsSpec extends SparkSpec {
     assert(m.total_rides === 0 && m.avg_distance_km === 0.0 &&
       m.total_duration_min === 0 && m.bike_rentals_histogram.isEmpty &&
       m.busiest_stations_top5.isEmpty && m.top_routes_top5.isEmpty)
+  }
+
+  test("forDay on the store filters on the ride_date partition") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val store = tmpDir("forday") + "/bike_rides"
+    graft.store.RidesTable.append(spark, fixture, store)
+    val table = graft.store.RidesTable.read(spark, store)
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val m = try DailyMetrics.forDay(table, "2025-04-07") finally {
+      // listener events arrive asynchronously: wait for forDay's query
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      spark.listenerManager.unregister(listener)
+    }
+    object Plans extends AdaptiveSparkPlanHelper
+    val scans = seen.asScala.toSeq.flatMap(qe => Plans.collect(qe.executedPlan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
+        _.toString.endsWith("bike_rides")) => s
+    })
+    assert(scans.nonEmpty, "forDay's query scans the store")
+    scans.foreach { s =>
+      assert(s.partitionFilters.exists(_.references.exists(_.name == "ride_date")),
+        s.toString)
+    }
+    // same document as the unpartitioned frame, where no pruning applies
+    assert(m === DailyMetrics.forDay(fixture, "2025-04-07"))
+  }
+
+  test("allDays equals a plain-Scala tally on seeded random rides") {
+    import java.time.{LocalDateTime, ZoneOffset}
+    import spark.implicits._
+    val stations = Seq("A", "B", "C", "D", "E", "F", "G")
+    val days = (1 to 4).map(d => LocalDateTime.of(2025, 3, d, 0, 0))
+    (1 to 4).foreach { seed =>
+      val r = new scala.util.Random(seed)
+      // each day gets rides in only a few hours, so most hours are absent
+      val hoursOf = days.map(_ => r.shuffle((0 until 24).toList).take(2 + r.nextInt(5)))
+      def station(): Option[String] = r.nextInt(20) match {
+        case 0 => None
+        case 1 | 2 => Some(DailyMetrics.OutsideStation)
+        case _ => Some(stations(r.nextInt(stations.size)))
+      }
+      val rides = (1 to 150 + r.nextInt(150)).map { uid =>
+        val d = r.nextInt(days.size)
+        val start = days(d).plusHours(hoursOf(d)(r.nextInt(hoursOf(d).size)).toLong)
+          .plusMinutes(r.nextInt(60).toLong)
+        val from = station()
+        val to = if (r.nextInt(8) == 0) from else station()
+        Ride(Some(uid.toLong), Some("b"),
+          if (r.nextInt(50) == 0) None else Some(Timestamp.from(start.toInstant(ZoneOffset.UTC))),
+          None, from, to, Some(r.nextInt(30)), None, None, None, None, None)
+      }
+
+      def utc(x: Ride) = x.start_time.get.toInstant.atOffset(ZoneOffset.UTC)
+      val counted = rides.filter(x => x.duration.exists(_ > 2) && x.start_time.isDefined)
+      val want = counted.groupBy(utc(_).toLocalDate).map { case (day, rs) =>
+        val hist = rs.groupBy(utc(_).getHour).map { case (h, xs) => h.toString -> xs.size.toLong }
+        def real(s: Option[String]) = s.filter(_ != DailyMetrics.OutsideStation)
+        val contributions = rs.flatMap(x =>
+          real(x.start_station).map(_ -> (0L, 1L)).toSeq ++
+            real(x.end_station).map(_ -> (1L, 0L)).toSeq)
+        val busiest = contributions.groupBy(_._1).map { case (st, cs) =>
+          val arr = cs.map(_._2._1).sum; val dep = cs.map(_._2._2).sum
+          StationStat(st, arr, dep, arr + dep)
+        }.toSeq.sortBy(x => (-x.total, x.station)).take(5)
+        val routes = rs.flatMap(x => (real(x.start_station), real(x.end_station)) match {
+          case (Some(a), Some(b)) if a != b => Some((a, b))
+          case _ => None
+        }).groupBy(identity).map { case ((a, b), xs) => RouteStat(a, b, xs.size.toLong) }
+          .toSeq.sortBy(x => (-x.rides, x.start_station, x.end_station)).take(5)
+        day.toString -> (rs.size.toLong, rs.flatMap(_.duration).map(_.toLong).sum,
+          rs.count(x => x.start_station.isDefined && x.start_station == x.end_station).toLong,
+          rs.count(_.end_station.contains(DailyMetrics.OutsideStation)).toLong,
+          hist, busiest, routes)
+      }
+
+      val got = DailyMetrics.allDaysTyped(rides.toDF()).collect().map(m =>
+        m.date -> (m.total_rides, m.total_duration_min, m.round_trips,
+          m.left_outside_station, m.bike_rentals_histogram,
+          m.busiest_stations_top5, m.top_routes_top5)).toMap
+      assert(got === want, s"seed $seed")
+      assert(want.values.exists(_._5.size < 24), s"seed $seed covers missing hours")
+    }
   }
 
   test("datesForYear and latestDate") {

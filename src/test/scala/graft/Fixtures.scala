@@ -16,4 +16,15 @@ object Fixtures {
     * in snapA and docked at `Wrocław Leśnica, stacja kolejowa` in snapB. */
   lazy val snapA: String = path("status/snapA.json")
   lazy val snapB: String = path("status/snapB.json")
+
+  /** Rides sample (FIXTURES.md §1/§2, see [[RideFixtures]]), written once
+    * per test JVM into a temporary directory: `ridesDir` holds the seven
+    * daily CSV exports, `stationsCsv` is the station dimension. */
+  private lazy val rides: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-rides-fixture")
+    RideFixtures.write(root)
+    root
+  }
+  lazy val ridesDir: String = rides.resolve("sample").toString
+  lazy val stationsCsv: String = rides.resolve("bike_stations_coords.csv").toString
 }

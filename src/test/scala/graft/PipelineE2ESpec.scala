@@ -8,14 +8,14 @@ import graft.store.RidesTable
 import graft.transform.RideTransform
 
 /** The reference's full daily flow (§3.1+§3.2 of SURVEY.md) end-to-end on
-  * ALL seven real sample CSVs: ingest → transform → idempotent
+  * all seven daily sample CSVs ([[RideFixtures]]): ingest → transform → idempotent
   * partitioned store → metrics → yearly JSON. Also asserts the
   * scale-critical plan property: single-day reads prune to one
   * ride_date partition. */
 class PipelineE2ESpec extends SparkSpec {
 
-  private val sampleDir = "/root/reference/data/sample"
-  private val stationsCsv = "/root/reference/data/bike_stations_coords.csv"
+  private val sampleDir = Fixtures.ridesDir
+  private val stationsCsv = Fixtures.stationsCsv
 
   test("seven daily loads -> store -> all-days metrics -> yearly JSON") {
     val store = tmpDir("e2e") + "/bike_rides"

@@ -130,8 +130,8 @@ class RideTransformSpec extends SparkSpec {
   }
 
   test("sample CSV from the reference loads and transforms end-to-end") {
-    val sample = "/root/reference/data/sample/Historia_przejazdow_2024-6-8_22_21_5.csv"
-    val stations = "/root/reference/data/bike_stations_coords.csv"
+    val sample = s"${Fixtures.ridesDir}/Historia_przejazdow_2024-6-8_22_21_5.csv"
+    val stations = Fixtures.stationsCsv
     val out = RideTransform(RideCsv.read(spark, sample), StationCsv.read(spark, stations))
     val n = out.count()
     assert(n > 8000, s"expected ~8125 rows, got $n")

@@ -333,28 +333,33 @@ object Graph {
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")),
       checkpointDir)
     val n = deg.agg(count(lit(1)).as("cnt"))
-    val nNodes = deg.count()
     // driver loop ONLY in convergence mode: it replaces the per-round
     // materialize + probe chain. The fixed-round mode plans ONE lazy
     // unrolled superstep chain with no per-round jobs at all — measured
     // FASTER than the driver loop's per-round collect round-trips
-    // (q134: 2.4 s lazy vs 2.9 s driver-looped), so it stays lazy.
-    if (checkConvergence && isLongType(deg, "node") && nNodes > 0 &&
-        nNodes <= driverLoopMaxNodes(deg)) {
+    // (q134: 2.4 s lazy vs 2.9 s driver-looped), so it stays lazy and
+    // pays no gate job. In convergence mode ONE bounded collect of the
+    // node-sized degree frame answers the gate and seeds the loop
+    // ([[ScaleGate.collectUnder]]).
+    val driverDeg =
+      if (checkConvergence && isLongType(deg, "node"))
+        ScaleGate.collectUnder(deg, driverLoopMaxNodes(deg)).filter(_.nonEmpty)
+      else None
+    driverDeg.foreach { degCollected =>
       // Driver-loop fixpoint (r18, the [[coreness]] pattern): the rank
       // vector is node-sized, so each superstep is ONE job — scan the
       // pinned REVERSE adjacency, per-row damped sum of the mapped
       // in-neighbor contributions (`r div d`, the exact integer
       // arithmetic of the join step), collect the node-sized result.
       // Replaces the per-step join + dst agg + materialize + probe
-      // chain; convergence = map equality; fixed-round mode runs
-      // exactly maxIterations applications, as the q134 oracle unrolls.
+      // chain; convergence = map equality.
       val radj = TextDedup.materialize(
         e.join(deg.select(col("node").as("dst")), Seq("dst"), "left_semi")
           .groupBy(col("dst")).agg(collect_list(col("src")).as("ins")),
         checkpointDir)
       val sess = edges.sparkSession
-      val degRows = deg.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val degRows = degCollected.map(r => (r.getLong(0), r.getLong(1)))
+      val nNodes = degRows.length.toLong
       val dMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       degRows.foreach { case (node, d) => dMap.put(node, d) }
       val bcD = sess.sparkContext.broadcast(dMap)
@@ -383,7 +388,7 @@ object Graph {
         val next = new java.util.HashMap[java.lang.Long, java.lang.Long]()
         degRows.foreach { case (node, _) => next.put(node, restart) }
         rows.foreach(r => next.put(r.getLong(0), r.getLong(1)))
-        if (checkConvergence) converged = next == cur
+        converged = next == cur
         cur = next
         iter += 1
       }
@@ -719,15 +724,15 @@ object Graph {
         checkpointDir)
     val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
       .union(canon.select(col("v").as("node"), col("u").as("nb")))
-    var h = TextDedup.materialize(
-      nbrRaw.groupBy(col("node")).agg(count(lit(1)).as("h")),
-      checkpointDir)
-    // node-sized value frame vs edge-sized nbr: [[valueAttach]] keeps
-    // the per-round join from re-sorting the edge-sized side every
-    // H-application (the localCheckpoint's unknown stats otherwise
-    // force a sort-merge join)
-    val nNodes = h.count()
-    if (isLongType(h, "node") && nNodes <= driverLoopMaxNodes(h)) {
+    val h0 = nbrRaw.groupBy(col("node")).agg(count(lit(1)).as("h"))
+    // ONE bounded collect of the node-sized degree frame answers the
+    // gate and seeds the driver loop ([[ScaleGate.collectUnder]]); the
+    // materialize + count below run only on the distributed path
+    val driverH =
+      if (isLongType(h0, "node"))
+        ScaleGate.collectUnder(h0, driverLoopMaxNodes(h0))
+      else None
+    driverH.foreach { hRows =>
       // Driver-loop fixpoint (r18): the h-vector is node-sized, so the
       // whole iteration state fits a broadcast map. Each H-application
       // becomes ONE job — scan the pinned adjacency, compute each
@@ -744,7 +749,7 @@ object Graph {
         checkpointDir)
       val sess = edges.sparkSession
       var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      h.collect().foreach(r => cur.put(r.getLong(0), r.getLong(1)))
+      hRows.foreach(r => cur.put(r.getLong(0), r.getLong(1)))
       var round = 0
       while (round < maxRounds) {
         val bc = sess.sparkContext.broadcast(cur)
@@ -780,6 +785,12 @@ object Graph {
           "(propagation depth exceeds maxRounds); raise maxRounds")
     }
     // distributed regime.
+    var h = TextDedup.materialize(h0, checkpointDir)
+    // node-sized value frame vs edge-sized nbr: [[valueAttach]] keeps
+    // the per-round join from re-sorting the edge-sized side every
+    // H-application (the localCheckpoint's unknown stats otherwise
+    // force a sort-merge join)
+    val nNodes = h.count()
     // Static across rounds — pinned with persist(), NOT a checkpoint:
     // an InMemoryRelation REPORTS its hashpartitioning(nb) to the
     // planner, so every round's value join genuinely reuses this one

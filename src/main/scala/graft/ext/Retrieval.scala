@@ -248,19 +248,15 @@ object Retrieval {
       checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lamNum >= 1 && lamNum <= lamDen, s"need 0 < lamNum/lamDen <= 1")
-    val cand = TextDedup.materialize(
-      candidates.select(col(idCol).as("id"), col(relCol).as("rel")),
-      checkpointDir)
+    val candSel = candidates.select(col(idCol).as("id"), col(relCol).as("rel"))
     // dedupe AFTER symmetrizing: a pair supplied in both directions (or
     // twice) would otherwise double npres past nChosen and let a
     // negative recorded max-sim slip past the absent=0 floor below
-    val sym = TextDedup.materialize(
-      sims.select(col(aCol).as("x"), col(bCol).as("y"),
-          col(simCol).as("sim"))
-        .unionByName(sims.select(col(bCol).as("x"), col(aCol).as("y"),
-          col(simCol).as("sim")))
-        .groupBy(col("x"), col("y")).agg(max(col("sim")).as("sim")),
-      checkpointDir)
+    val symSel = sims.select(col(aCol).as("x"), col(bCol).as("y"),
+        col(simCol).as("sim"))
+      .unionByName(sims.select(col(bCol).as("x"), col(aCol).as("y"),
+        col(simCol).as("sim")))
+      .groupBy(col("x"), col("y")).agg(max(col("sim")).as("sim"))
     // Driver-loop greedy (r18, the Graph fixpoint pattern): MMR pools
     // are rerank-sized by construction (a top-N list), so under the
     // bound the whole greedy runs on the collected (id, rel) and
@@ -271,24 +267,28 @@ object Retrieval {
     // guard; integer (long) score domain only.
     val mmrBound = candidates.sparkSession.conf
       .get("graft.mmrDriverMaxCandidates", "4096").toLong
-    val nCand = cand.count()
     val longTyped = Seq("id", "rel").forall(c =>
-      cand.schema(c).dataType == org.apache.spark.sql.types.LongType) &&
-      sym.schema("sim").dataType == org.apache.spark.sql.types.LongType
+      candSel.schema(c).dataType == org.apache.spark.sql.types.LongType) &&
+      symSel.schema("sim").dataType == org.apache.spark.sql.types.LongType
     // r19: the candidate bound alone does not bound the sims collect —
     // a dense pool at the default bound is bound² ≈ 16.7M symmetrized
-    // pairs (a GB-class driver map). Gate the sym frame's OWN row
-    // count (cheap: sym is already materialized) at
-    // min(bound², graft.mmrDriverMaxSims); beyond it the distributed
-    // greedy below runs unchanged.
-    val maxSims = math.min(mmrBound * mmrBound,
+    // pairs (a GB-class driver map). The sym frame is collected under
+    // its OWN bound, min(bound², graft.mmrDriverMaxSims); beyond either
+    // bound the distributed greedy below runs unchanged. (bound² is
+    // capped where it would overflow: no collect exceeds Int.MaxValue.)
+    val maxSims = math.min(
+      if (mmrBound > Int.MaxValue) Long.MaxValue else mmrBound * mmrBound,
       candidates.sparkSession.conf
         .get("graft.mmrDriverMaxSims", "2097152").toLong)
-    if (longTyped && nCand <= mmrBound && sym.count() <= maxSims) {
+    val driverInput =
+      if (!longTyped) None
+      else ScaleGate.collectUnder(candSel, mmrBound).flatMap(c =>
+        ScaleGate.collectUnder(symSel, maxSims).map(c -> _))
+    driverInput.foreach { case (candCollected, symCollected) =>
       val sess = candidates.sparkSession
-      val candRows = cand.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val candRows = candCollected.map(r => (r.getLong(0), r.getLong(1)))
       val simMap = new java.util.HashMap[(Long, Long), java.lang.Long]()
-      sym.collect().foreach(r =>
+      symCollected.foreach(r =>
         simMap.put((r.getLong(0), r.getLong(1)), r.getLong(2)))
       var chosen = List.empty[Long]
       var outRows = Seq.empty[(Long, Long, Long, Long, Long)]
@@ -321,6 +321,8 @@ object Retrieval {
       import sess.implicits._
       return outRows.toDF("rank", "id", "rel", "maxsim", "mmr_scaled")
     }
+    val cand = TextDedup.materialize(candSel, checkpointDir)
+    val sym = TextDedup.materialize(symSel, checkpointDir)
     var out = Seq.empty[DataFrame]
     var chosen: Option[DataFrame] = None
     var nChosen = 0

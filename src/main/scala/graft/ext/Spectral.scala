@@ -435,20 +435,21 @@ object Spectral {
       vecCol: String): Option[Array[Array[Float]]] = {
     val bound = emb.sparkSession.conf
       .get("graft.spectralDriverMaxRows", "131072").toLong
-    if (bound <= 0) return None
     emb.schema(vecCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _) =>
       case _ => return None
     }
-    // ONE bounded collect answers the gate AND ships the data — a
-    // count-first probe was tried in r19 and reverted on an A/B (see
-    // the measurement note in [[graft.ext.VectorIndex.driverLloydRows]]:
-    // the under-bound path is the common regime and the manufactured
-    // count cost one extra job per call).
-    val got = emb.select(col(vecCol)).limit((bound + 1).toInt).collect()
-    if (got.length > bound || got.isEmpty) return None
-    if (got.exists(r => r.isNullAt(0) || r.getSeq[Any](0).contains(null)))
+    // ONE bounded collect answers the gate AND ships the data
+    // ([[ScaleGate.collectUnder]]) — a count-first probe was tried in
+    // r19 and reverted on an A/B (see the measurement note in
+    // [[graft.ext.VectorIndex.driverLloydRows]]: the under-bound path
+    // is the common regime and the manufactured count cost one extra
+    // job per call).
+    val got = ScaleGate.collectUnder(emb.select(col(vecCol)), bound)
+      .getOrElse(return None)
+    if (got.isEmpty ||
+        got.exists(r => r.isNullAt(0) || r.getSeq[Any](0).contains(null)))
       return None
     val rows = got.map(_.getSeq[Float](0).toArray)
     val d = rows.head.length

@@ -110,7 +110,6 @@ object VectorIndex {
       idCol: String): Option[Array[(Long, Array[Double])]] = {
     val bound = embeddings.sparkSession.conf
       .get("graft.kmeansDriverMaxRows", "131072").toLong
-    if (bound <= 0) return None
     val idOk = embeddings.schema(idCol).dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType => true
@@ -128,22 +127,19 @@ object VectorIndex {
       case _ => false
     }
     if (!idOk || !(isFloat || isDouble)) return None
-    // ONE bounded collect answers the gate AND ships the data. A
-    // count-first probe (count job, then collect only when provably
-    // inside the bound — the graph gates' discipline) was tried in r19
-    // and REVERTED on an alternating subset A/B: trainer inputs are
+    // ONE bounded collect answers the gate AND ships the data
+    // ([[ScaleGate.collectUnder]]). A count-first probe (count job,
+    // then collect only when provably inside the bound) was tried in
+    // r19 and REVERTED on an alternating subset A/B: trainer inputs are
     // sample-sized by contract, so the UNDER-bound path is the common
     // regime (every bench trainer query, every production codebook
     // train) and the manufactured count cost it one extra job per call
     // (q49 +0.06/+0.12 s, q199 +0.10/+0.19, q200 +0.11/+0.17 across
-    // two A/B pairs). The graph gates reuse a count that ALREADY
-    // exists; here none does. The over-bound ship this re-accepts is
-    // ≤ bound+1 rows, once, immediately before a many-job distributed
-    // loop.
-    val got = embeddings
-      .select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"))
-      .limit((bound + 1).toInt).collect()
-    if (got.length > bound) return None
+    // two A/B pairs). The over-bound ship this accepts is ≤ bound+1
+    // rows, once, immediately before a many-job distributed loop.
+    val got = ScaleGate.collectUnder(embeddings
+      .select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v")),
+      bound).getOrElse(return None)
     // a null id / null array / null element puts the input outside the
     // expressions' replicated non-null fast paths — keep distributed
     if (got.exists(r => r.isNullAt(0) || r.isNullAt(1) ||

@@ -34,6 +34,14 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The session's SQL conf (classic.SparkSession.sessionState is
+    * private[sql]) — what Spark's own readers build their parquet
+    * schema converter from. */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+
   /** The analyzed logical plan of a DataFrame. */
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

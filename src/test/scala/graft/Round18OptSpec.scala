@@ -7,6 +7,15 @@ import org.apache.spark.sql.functions._
   * against the formulation it replaced. */
 class Round18OptSpec extends SparkSpec {
 
+  private def withConf[T](key: String, value: Long)(f: => T): T = {
+    spark.conf.set(key, value.toString)
+    try f finally spark.conf.unset(key)
+  }
+
+  /** Bounds whose `bound + 1` overflowed the old inline `.toInt` limit:
+    * Int.MaxValue gave a negative limit, 2^32 − 1 gave `limit(0)`. */
+  private val hugeBounds = Seq(Int.MaxValue.toLong, 4294967295L, Long.MaxValue)
+
   test("trainCentroids / pqTrain: driver-loop Lloyd == distributed Lloyd " +
     "(graft.kmeansDriverMaxRows gates the two paths)") {
     import spark.implicits._
@@ -33,6 +42,16 @@ class Round18OptSpec extends SparkSpec {
       graft.ext.VectorIndex.pqTrain(df, "embedding", "vec_id",
         m = 2, k = 4, iterations = 3).map(_.map(_.toSeq).toSeq).toSeq)
     assert(pd === px, "pqTrain driver path diverged")
+    hugeBounds.foreach { b =>
+      withConf("graft.kmeansDriverMaxRows", b) {
+        assert(graft.ext.VectorIndex.trainCentroids(df, "embedding", k = 5,
+          iterations = 3).map(_.toSeq).toSeq === cd,
+          s"trainCentroids diverged at bound $b")
+        assert(graft.ext.VectorIndex.pqTrain(df, "embedding", "vec_id",
+          m = 2, k = 4, iterations = 3).map(_.map(_.toSeq).toSeq).toSeq === pd,
+          s"pqTrain diverged at bound $b")
+      }
+    }
   }
 
   test("Spectral.iterate: driver-loop power steps == distributed scans " +
@@ -53,6 +72,9 @@ class Round18OptSpec extends SparkSpec {
     val dist = try run()
     finally spark.conf.unset("graft.spectralDriverMaxRows")
     assert(driver === dist, "spectral driver path diverged")
+    hugeBounds.foreach(b => withConf("graft.spectralDriverMaxRows", b) {
+      assert(run() === driver, s"spectral diverged at bound $b")
+    })
   }
 
   test("hashSortedIntersect over hashSortTokens structs == the hash-set " +
@@ -190,16 +212,48 @@ class Round18OptSpec extends SparkSpec {
       a <- 1L to 20L; b <- (a + 1) to 20L
       if rnd.nextDouble() < 0.4
     } yield (a, b, rnd.nextInt(200).toLong - 60L))
-    def run(): Seq[(Long, Long, Long, Long, Long)] = graft.ext.Retrieval
-      .mmrSelect(cand.toDF("id", "rel"), sims.toDF("a", "b", "sim"),
-        "id", "rel", k = 8, lamNum = 7, lamDen = 10)
+    def mmr(c: Seq[(Long, Long)], sm: Seq[(Long, Long, Long)],
+        k: Int): Seq[(Long, Long, Long, Long, Long)] = graft.ext.Retrieval
+      .mmrSelect(c.toDF("id", "rel"), sm.toDF("a", "b", "sim"),
+        "id", "rel", k = k, lamNum = 7, lamDen = 10)
       .orderBy($"rank")
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    def run(): Seq[(Long, Long, Long, Long, Long)] = mmr(cand, sims, 8)
     val driver = run()
-    spark.conf.set("graft.mmrDriverMaxCandidates", "0")
-    val dist = try run()
-    finally spark.conf.unset("graft.mmrDriverMaxCandidates")
+    val dist = withConf("graft.mmrDriverMaxCandidates", 0L)(run())
     assert(driver === dist)
+    // gate boundaries: exactly `bound` rows run the driver greedy,
+    // `bound + 1` fall back; both must give the distributed rows. k
+    // ranks every candidate, so a candidate the collect dropped shows.
+    def distOf(c: Seq[(Long, Long)], sm: Seq[(Long, Long, Long)]) =
+      withConf("graft.mmrDriverMaxCandidates", 0L)(mmr(c, sm, c.size))
+    val all = distOf(cand, sims)
+    Seq(cand.size.toLong, cand.size - 1L).foreach(b =>
+      withConf("graft.mmrDriverMaxCandidates", b) {
+        assert(mmr(cand, sims, cand.size) === all,
+          s"mmr diverged at candidate bound $b")
+      })
+    // the sims bound: the frame and two one-pair frames whose candidates
+    // are picked in opposite orders, so whichever direction of the pair
+    // a short collect dropped, one of them reads it
+    val pair = Seq((1L, 2L, 500L))
+    Seq((cand, sims), (Seq((1L, 100L), (2L, 90L)), pair),
+        (Seq((1L, 90L), (2L, 100L)), pair)).foreach { case (c, sm) =>
+      val want = distOf(c, sm)
+      val nSym = 2L * sm.size // distinct a < b pairs, both directions
+      Seq(nSym, nSym - 1).foreach(b =>
+        withConf("graft.mmrDriverMaxSims", b) {
+          assert(mmr(c, sm, c.size) === want, s"mmr diverged at sims bound $b")
+        })
+    }
+    hugeBounds.foreach { b =>
+      withConf("graft.mmrDriverMaxCandidates", b) {
+        assert(run() === driver, s"mmr diverged at candidate bound $b")
+      }
+      withConf("graft.mmrDriverMaxSims", b) {
+        assert(run() === driver, s"mmr diverged at sims bound $b")
+      }
+    }
   }
 
   test("WinnowFps on inputs below one full window returns empty " +

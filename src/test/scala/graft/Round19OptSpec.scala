@@ -7,6 +7,11 @@ import org.apache.spark.sql.functions._
   * against the formulation it replaced (the Round18OptSpec doctrine). */
 class Round19OptSpec extends SparkSpec {
 
+  private def withConf[T](key: String, value: Long)(f: => T): T = {
+    spark.conf.set(key, value.toString)
+    try f finally spark.conf.unset(key)
+  }
+
   test("coOccurrenceEdges: packed-long distinct == struct distinct == " +
     "brute-force pair join (32-bit gate picks the path)") {
     import spark.implicits._
@@ -94,6 +99,42 @@ class Round19OptSpec extends SparkSpec {
       }
       assert(cS === cB && cS === cP, s"trial $trial: coreness diverged")
       assert(lS === lB && lS === lP, s"trial $trial: LPA diverged")
+      // driver-loop gate boundaries: a degree frame of exactly `bound`
+      // nodes runs the driver loop, `bound + 1` the distributed one;
+      // bounds past Int.MaxValue must not overflow the collect limit
+      def coreness(): Set[(Long, Long)] = graft.ext.Graph.coreness(df)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val nNodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
+      (Seq(nNodes.toLong, nNodes - 1L) ++
+        Seq(Int.MaxValue.toLong, 4294967295L, Long.MaxValue)).foreach(b =>
+        withConf("graft.driverLoopMaxNodes", b) {
+          assert(coreness() === cS, s"trial $trial: coreness at bound $b")
+        })
+    }
+  }
+
+  test("pageRank with convergence: driver loop at the node bound and " +
+    "distributed loop past it == forced distributed, random graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    (0 until 2).foreach { trial =>
+      val n = 30 + trial * 25
+      val edges = (for (_ <- 1 to 4 * n) yield
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter { case (a, b) => a != b }.distinct
+      val df = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+        .distinct.toDF("src", "dst")
+      def run(): Set[(Long, Long, Long)] = graft.ext.Graph
+        .pageRank(df, maxIterations = 30, checkConvergence = true)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val dist = withConf("graft.driverLoopMaxNodes", 0L)(run())
+      val nSrc = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
+      (Seq(nSrc.toLong, nSrc - 1L) ++
+        Seq(Int.MaxValue.toLong, 4294967295L, Long.MaxValue)).foreach(b =>
+        withConf("graft.driverLoopMaxNodes", b) {
+          assert(run() === dist, s"trial $trial: pageRank at bound $b")
+        })
+      assert(run() === dist, s"trial $trial: pageRank at the default bound")
     }
   }
 

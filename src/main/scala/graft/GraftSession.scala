@@ -37,11 +37,7 @@ object GraftSession {
       // full-bench A/B — it helped the two verify kernels (q145
       // execute 2.4 → 1.8 s) but widened EVERY tiny shuffle in the
       // suite (steady total 203 → 255 s, the bench's own load1 went
-      // 4 → 16). A surgical explicit-width repartition at the two
-      // proven CPU-dense sites (TextDedup.similarityJoin /
-      // containmentJoin) also lost its alternating subset A/Bs at
-      // sf0.1 and stays available but OFF via graft.verifyWidth — see
-      // the note there.
+      // 4 → 16).
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -14,7 +14,8 @@ import scala.collection.concurrent.TrieMap
   *  - build time (DataFrame construction — includes any eager actions
   *    the query fn performs, e.g. monitor state merges) vs execute
   *    time (`queryExecution.toRdd.count()`, the Bench action);
-  *  - one line per Spark job: wall duration, description;
+  *  - one line per Spark job: wall duration, description (the
+  *    summary line carries their count);
   *  - one line per stage: task-time sum, shuffle read/write bytes,
   *    input bytes, records.
   * Output lines are prefixed `[prof]` for grepping.
@@ -43,7 +44,10 @@ object ProfileQuery {
         jobs.put(e.jobId, (System.nanoTime(), desc))
         ()
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (enabled) {
+      // not gated on `enabled`: the bus may deliver the last job's end
+      // after the action returned; only jobs started while enabled are
+      // in `jobs`
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         jobs.remove(e.jobId).foreach { case (t0, desc) =>
           val ms = (System.nanoTime() - t0) / 1e6
           jobLines.add(f"[prof]   job ${e.jobId}%4d ${ms}%9.1f ms  $desc")
@@ -88,7 +92,8 @@ object ProfileQuery {
       enabled = false
       Thread.sleep(300) // let listener events drain
       println(f"[prof] ===== $name: build ${(t1 - t0) / 1e9}%.3f s, " +
-        f"execute ${(t2 - t1) / 1e9}%.3f s, total ${(t2 - t0) / 1e9}%.3f s")
+        f"execute ${(t2 - t1) / 1e9}%.3f s, total ${(t2 - t0) / 1e9}%.3f s, " +
+        s"jobs ${jobLines.size}")
       jobLines.forEach(l => println(l))
       val top = stages.toSeq.sortBy(-_._2.taskMs).take(14)
       top.foreach { case (id, a) =>

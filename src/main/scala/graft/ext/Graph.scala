@@ -23,17 +23,6 @@ import scala.jdk.CollectionConverters._
   */
 object Graph {
 
-  /** Connected components — delegates to
-    * [[TextDedup.connectedComponents]] (min-label propagation,
-    * O(diameter) rounds) so the graph shelf exposes the whole family;
-    * for adversarial diameters use
-    * [[TextDedup.connectedComponentsStar]] (O(log n) rounds). */
-  def connectedComponents(edges: DataFrame, nodes: DataFrame,
-      srcCol: String = "u", dstCol: String = "v", nodeCol: String = "id",
-      checkpointDir: Option[String] = None): DataFrame =
-    TextDedup.connectedComponents(edges, nodes, srcCol, dstCol, nodeCol,
-      checkpointDir = checkpointDir)
-
   /** Normalize an arbitrary pair list to canonical undirected form:
     * (u, v) with u < v, self-loops dropped, duplicates removed. */
   def canonicalEdges(edges: DataFrame,
@@ -61,51 +50,53 @@ object Graph {
     * hold tens of items); for a heavy-tailed group column keep the
     * self-join form instead. */
   def coOccurrenceEdges(rows: DataFrame, grpCol: String,
-      itemCol: String): DataFrame = {
-    val grouped = rows.groupBy(col(grpCol))
+      itemCol: String): DataFrame =
+    // a packed-long pair key (u << 32 | v) lost its A/B here: the 32-bit
+    // proof costs a min/max scan that outweighs the narrower exchange
+    // (OPTIMIZATION_r19.md §7)
+    rows.groupBy(col(grpCol))
       .agg(sort_array(collect_set(col(itemCol))).as("items"))
-    // r19 (guide §2.3 — narrower types shrink the exchange): when the
-    // item ids provably fit 32 bits, each (u, v) pair can travel the
-    // edge-distinct exchange as ONE packed long (u << 32 | v —
-    // injective for 0 ≤ u < v < 2³¹, order-preserving since items are
-    // sorted) instead of a two-long row, unpacked right after the
-    // distinct — output rows IDENTICAL. Measured at sf0.1 and kept
-    // OFF by default: the 32-bit proof costs one min/max scan of the
-    // input (no parquet aggregate pushdown on the v1 source), and on
-    // the co-order workload (pairs ≈ 3×rows) that scan outweighs the
-    // exchange savings — two A/B subset pairs read q160 +0.4 s,
-    // q165 +0.3/+0.6 s, q179 +0.2 s with packing ON vs OFF (q152
-    // mixed ±). Enable `graft.packEdgeKeys` for quadratic-per-group
-    // workloads where the pair exchange dominates the source scan;
-    // ids beyond 32 bits keep the two-column path either way.
-    val packable = rows.sparkSession.conf
-      .get("graft.packEdgeKeys", "false").toBoolean &&
-      isLongType(rows, itemCol) && {
-        val b = rows.agg(min(col(itemCol)), max(col(itemCol))).head()
-        !b.isNullAt(0) && b.getLong(0) >= 0 && b.getLong(1) < (1L << 31)
-      }
-    if (packable)
-      grouped
-        .select(explode(flatten(transform(col("items"), (x, i) =>
-          transform(slice(col("items"), i + lit(2), size(col("items"))),
-            y => shiftleft(x, 32).bitwiseOR(y))))).as("pk"))
-        .distinct()
-        .select(shiftright(col("pk"), 32).as("u"),
-          col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("v"))
-    else
-      grouped
-        .select(explode(flatten(transform(col("items"), (x, i) =>
-          transform(slice(col("items"), i + lit(2), size(col("items"))),
-            y => struct(x.as("u"), y.as("v")))))).as("e"))
-        .select(col("e.u"), col("e.v"))
-        .distinct()
-  }
+      .select(explode(flatten(transform(col("items"), (x, i) =>
+        transform(slice(col("items"), i + lit(2), size(col("items"))),
+          y => struct(x.as("u"), y.as("v")))))).as("e"))
+      .select(col("e.u"), col("e.v"))
+      .distinct()
 
   /** Degree of every node with at least one edge. */
   def degrees(edges: DataFrame,
       srcCol: String = "u", dstCol: String = "v"): DataFrame =
     edges.select(explode(array(col(srcCol), col(dstCol))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
+
+  /** Max edge count for which [[triangleCount]] broadcasts the edge /
+    * degree frames instead of shuffling the (quadratic) wedge stream;
+    * the distributed [[kCore]] and [[TextDedup.connectedComponents]]
+    * loops broadcast their node-sized frames under the same bound.
+    * ~4M edges ≈ 64 MB of raw keys — comfortably inside the broadcast
+    * cap on any executor sizing; override per session with
+    * `spark.conf.set("graft.broadcastMaxEdges", n)`. */
+  private[ext] def broadcastMaxEdges(df: DataFrame): Long =
+    df.sparkSession.conf.get("graft.broadcastMaxEdges", "4000000").toLong
+
+  /** Max node count for which the iterative fixpoints (kCore, coreness,
+    * LPA, convergent PageRank / PPR, min-label CC) run as a DRIVER LOOP
+    * over a pinned adjacency frame, decided by one
+    * [[ScaleGate.collectUnder]] of the node-sized frame that seeds the
+    * loop: the node→value map is collected once, re-broadcast per
+    * round, and each round is ONE job (adjacency scan + per-row
+    * argmax/h-index — no join, no shuffle, no per-round materialization
+    * or probe jobs).
+    * The value frame is node-sized by definition, so collecting it is
+    * the same data volume the per-round broadcast join ships anyway
+    * (guide §8 — broadcast the plan); beyond the bound the distributed
+    * join loops below are unchanged. Override per session with
+    * `spark.conf.set("graft.driverLoopMaxNodes", n)`. */
+  private[ext] def driverLoopMaxNodes(df: DataFrame): Long =
+    df.sparkSession.conf.get("graft.driverLoopMaxNodes", "1000000").toLong
+
+  private[ext] def isLongType(df: DataFrame, colName: String): Boolean =
+    df.schema(colName).dataType ==
+      org.apache.spark.sql.types.LongType
 
   /** Exact triangle count via degree-ordered orientation
     * (Schank / Suri–Vassilvitskii): each edge points from its
@@ -134,57 +125,6 @@ object Graph {
     *   intermediates; None = localCheckpoint
     * @return one row: (n_triangles)
     */
-  /** Max edge count for which [[triangleCount]] broadcasts the edge /
-    * degree frames instead of shuffling the (quadratic) wedge stream.
-    * ~4M edges ≈ 64 MB of raw keys — comfortably inside the broadcast
-    * cap on any executor sizing; override per session with
-    * `spark.conf.set("graft.broadcastMaxEdges", n)`. */
-  private def broadcastMaxEdges(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.broadcastMaxEdges", "4000000").toLong
-
-  /** Max node count for which the iterative fixpoints (coreness, LPA,
-    * min-label CC) run as a DRIVER LOOP over a pinned adjacency frame:
-    * the node→value map is collected once, re-broadcast per round, and
-    * each round is ONE job (adjacency scan + per-row argmax/h-index —
-    * no join, no shuffle, no per-round materialization or probe jobs).
-    * The value frame is node-sized by definition, so collecting it is
-    * the same data volume the per-round broadcast join ships anyway
-    * (guide §8 — broadcast the plan); beyond the bound the distributed
-    * join loops below are unchanged. Override per session with
-    * `spark.conf.set("graft.driverLoopMaxNodes", n)`. */
-  private[ext] def driverLoopMaxNodes(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.driverLoopMaxNodes", "1000000").toLong
-
-  /** Attach the node-sized VALUE frame (h-values / labels) to the
-    * pinned, pre-partitioned neighbor frame for a per-round fixpoint
-    * join. `graft.valueJoinMode` selects the strategy:
-    * `shuffle_hash` (default — hint the value side as the SHJ build:
-    * the edge-sized nbr side is never re-sorted AND the value frame
-    * moves ONCE per round as a node-sized exchange), `broadcast` (the
-    * r18 gate, ≤ [[broadcastMaxEdges]]), anything else = leave the
-    * planner alone (SMJ re-sorts the nbr side each round).
-    *
-    * Default set by r19 Stress A/Bs at the only scales that reach this
-    * code (matched-position sequences, min-of-runs): at 2M nodes
-    * coreness 18.1 s SHJ / 19.6 plain / 26.6 broadcast, lpa 14.9 /
-    * 15.2 / 16.6; at 500k forced-distributed coreness 10.6 / 11.0 /
-    * 14.0, lpa 8.3 / 9.2 / 9.5. The r18 broadcast form lost at every
-    * measured point: the value frame is node-sized EVERY round (h/label
-    * frames never shrink), so per-round broadcast build+ship scales
-    * with n × executors while the exchange it avoids moves n rows once
-    * — and the nbr side never exchanges under any mode (it is pinned
-    * partitioned on the join key). */
-  private def valueAttach(df: DataFrame, nNodes: Long): DataFrame =
-    df.sparkSession.conf.get("graft.valueJoinMode", "shuffle_hash") match {
-      case "broadcast" if nNodes <= broadcastMaxEdges(df) => broadcast(df)
-      case "shuffle_hash" => df.hint("shuffle_hash")
-      case _ => df
-    }
-
-  private[ext] def isLongType(df: DataFrame, colName: String): Boolean =
-    df.schema(colName).dataType ==
-      org.apache.spark.sql.types.LongType
-
   def triangleCount(edges: DataFrame,
       srcCol: String = "u", dstCol: String = "v",
       assumeCanonical: Boolean = false,
@@ -264,20 +204,12 @@ object Graph {
       // aggregate), so its build shuffle is planned once and reused.
       // Long keys only (fitsLong); the struct-key fallback keeps the
       // wedge plan below.
-      def maybeBAdj(df: DataFrame): DataFrame =
-        if (small) broadcast(df) else df
-      // measurement-only escape hatch: force the wedge plan so the two
-      // closes stay A/B-able at any scale (Stress/NOTES adjudications);
-      // never set in production or by the driver
-      if (e.sparkSession.conf
-          .get("graft.triangleWedgeClose", "false").toBoolean)
-        return wedgeClose(oriented, maybeB)
       val adj = oriented.groupBy(col("lo"))
         .agg(sort_array(collect_list(col("hi"))).as("nb"))
       oriented
-        .join(maybeBAdj(adj.select(col("lo"), col("nb").as("nb_lo"))),
+        .join(maybeB(adj.select(col("lo"), col("nb").as("nb_lo"))),
           Seq("lo"))
-        .join(maybeBAdj(adj.select(col("lo").as("hi"), col("nb").as("nb_hi"))),
+        .join(maybeB(adj.select(col("lo").as("hi"), col("nb").as("nb_hi"))),
           Seq("hi"), "left")
         .agg(coalesce(sum(when(col("nb_hi").isNull, lit(0L))
           .otherwise(graft.plans.GraphExpressions
@@ -286,9 +218,9 @@ object Graph {
     } else wedgeClose(oriented, maybeB)
   }
 
-  /** The wedge-join triangle close — the struct-key fallback (and the
-    * [[triangleCount]] A/B baseline): every wedge materializes as a
-    * join row and hash-probes the oriented edge set. Wedges are
+  /** The wedge-join triangle close — the struct-key fallback of
+    * [[triangleCount]] (ids that do not fit the long key): every wedge
+    * materializes as a join row and hash-probes the oriented edge set. Wedges are
     * distinct by construction (distinct edges ⇒ distinct (x, y, z)),
     * so the closing inner join counts each triangle once. */
   private def wedgeClose(oriented: DataFrame,
@@ -475,11 +407,15 @@ object Graph {
           when(col("__seed").isNotNull, expr("1000000000000 div ns"))
             .otherwise(lit(0L)).as("r0")),
       checkpointDir)
-    val nUniverse = base.count()
     // convergence mode only — see [[pageRank]]'s r18 note: the lazy
-    // fixed-round unroll has no per-round jobs to replace
-    if (checkConvergence && isLongType(base, "node") && nUniverse > 0 &&
-        nUniverse <= driverLoopMaxNodes(base)) {
+    // fixed-round unroll has no per-round jobs to replace and pays no
+    // gate job; ONE bounded collect of the node universe answers the
+    // gate and seeds the loop ([[ScaleGate.collectUnder]])
+    val driverBase =
+      if (checkConvergence && isLongType(base, "node"))
+        ScaleGate.collectUnder(base, driverLoopMaxNodes(base)).filter(_.nonEmpty)
+      else None
+    driverBase.foreach { baseCollected =>
       // Driver-loop fixpoint — identical shape to [[pageRank]]'s r18
       // branch, with the restart mass per node read from the pinned
       // base frame instead of the uniform constant. Every src in `e`
@@ -490,7 +426,7 @@ object Graph {
           .groupBy(col("dst")).agg(collect_list(col("src")).as("ins")),
         checkpointDir)
       val sess = edges.sparkSession
-      val baseRows = base.collect()
+      val baseRows = baseCollected
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       val dMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       val rstMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
@@ -523,7 +459,7 @@ object Graph {
         rows.foreach { r =>
           next.put(r.getLong(0), rstMap.get(r.getLong(0)) + r.getLong(1))
         }
-        if (checkConvergence) converged = next == cur
+        converged = next == cur
         cur = next
         iter += 1
       }
@@ -586,9 +522,15 @@ object Graph {
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       else canonicalEdges(edges, srcCol, dstCol)
     var e = TextDedup.materialize(canon, checkpointDir)
-    val deg0 = TextDedup.materialize(degrees(e), checkpointDir)
-    val nAll = deg0.count()
-    if (isLongType(deg0, "node") && nAll <= driverLoopMaxNodes(deg0)) {
+    // ONE bounded collect of the node ids answers the gate and seeds the
+    // driver loop ([[ScaleGate.collectUnder]]); the degree frame is
+    // materialized only on the distributed path
+    val nodes0 = degrees(e).select(col("node"))
+    val driverNodes =
+      if (isLongType(nodes0, "node"))
+        ScaleGate.collectUnder(nodes0, driverLoopMaxNodes(nodes0))
+      else None
+    driverNodes.foreach { nodeRows =>
       // Driver-loop peel (r18, the [[labelPropagation]] pattern): the
       // loop state that matters is the NODE keep-set, which is
       // node-sized — so instead of materializing the shrinking edge
@@ -607,7 +549,7 @@ object Graph {
         checkpointDir)
       val sess = edges.sparkSession
       var keep = new java.util.HashSet[java.lang.Long]()
-      deg0.collect().foreach(r => keep.add(r.getLong(0)))
+      nodeRows.foreach(r => keep.add(r.getLong(0)))
       var round = 0
       while (round < maxRounds) {
         val bc = sess.sparkContext.broadcast(keep)
@@ -643,9 +585,7 @@ object Graph {
     }
     var round = 0
     while (round < maxRounds) {
-      val deg =
-        if (round == 0) deg0 // already materialized for the gate above
-        else TextDedup.materialize(degrees(e), checkpointDir)
+      val deg = TextDedup.materialize(degrees(e), checkpointDir)
       // ONE scalar read answers both loop questions — fixpoint ("any
       // node below k?", the old isEmpty probe) AND the node count that
       // gates the keep-list join strategy below (guide §3.1): a
@@ -786,11 +726,6 @@ object Graph {
     }
     // distributed regime.
     var h = TextDedup.materialize(h0, checkpointDir)
-    // node-sized value frame vs edge-sized nbr: [[valueAttach]] keeps
-    // the per-round join from re-sorting the edge-sized side every
-    // H-application (the localCheckpoint's unknown stats otherwise
-    // force a sort-merge join)
-    val nNodes = h.count()
     // Static across rounds — pinned with persist(), NOT a checkpoint:
     // an InMemoryRelation REPORTS its hashpartitioning(nb) to the
     // planner, so every round's value join genuinely reuses this one
@@ -803,9 +738,14 @@ object Graph {
     val nbr = nbrRaw.repartition(col("nb")).persist()
     def hStep(cur: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("node")).orderBy(col("val").desc)
+      // the node-sized value side is the shuffle-hash build: the pinned
+      // edge-sized nbr side is never re-sorted (as under SMJ) and the
+      // value frame moves once per round instead of being re-broadcast.
+      // r19 Stress A/Bs (OPTIMIZATION_r19.md §7): shuffle_hash beat
+      // broadcast and SMJ at every measured scale, for coreness and LPA
       nbr
-        .join(valueAttach(
-          cur.select(col("node").as("nb"), col("h").as("val")), nNodes), "nb")
+        .join(cur.select(col("node").as("nb"), col("h").as("val"))
+          .hint("shuffle_hash"), "nb")
         .select(col("node"), col("val"))
         .withColumn("r", row_number().over(w))
         .groupBy(col("node"))
@@ -897,20 +837,16 @@ object Graph {
         checkpointDir)
     val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
       .union(canon.select(col("v").as("node"), col("u").as("nb")))
-    var labels = TextDedup.materialize(
-      nbrRaw.select(col("node")).distinct().withColumn("label", col("node")),
-      checkpointDir)
-    // The label frame is NODE-sized but rides a localCheckpoint, whose
-    // stats are unknown — the planner sort-merge-joined it against the
-    // pinned nbr frame, paying a full sort of the edge-sized side EVERY
-    // round (measured at sf0.1/q165: 6.7 s task time per round, the
-    // whole query's cost). One count on the already-materialized frame
-    // gates the join strategy (guide §3.1, the kCore pattern): under
-    // the broadcast bound each round is a broadcast hash probe fused
-    // into the nbr scan — no sort, no edge-side exchange. Beyond the
-    // bound the SMJ plan below is unchanged.
-    val nNodes = labels.count()
-    if (isLongType(labels, "node") && nNodes <= driverLoopMaxNodes(labels)) {
+    // ONE bounded collect of the node ids answers the gate and seeds the
+    // driver loop (every node starts labeled with its own id —
+    // [[ScaleGate.collectUnder]]); the label frame is materialized only
+    // on the distributed path
+    val nodes0 = nbrRaw.select(col("node")).distinct()
+    val driverNodes =
+      if (isLongType(nodes0, "node"))
+        ScaleGate.collectUnder(nodes0, driverLoopMaxNodes(nodes0))
+      else None
+    driverNodes.foreach { nodeRows =>
       // Driver-loop fixpoint (r18, the [[coreness]] pattern): the
       // labeling is node-sized, so each synchronous round is ONE job —
       // scan the pinned adjacency, per-row argmax of the neighbors'
@@ -925,7 +861,7 @@ object Graph {
         checkpointDir)
       val sess = edges.sparkSession
       var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      labels.collect().foreach(r => cur.put(r.getLong(0), r.getLong(1)))
+      nodeRows.foreach(r => cur.put(r.getLong(0), r.getLong(0)))
       var round = 0
       var converged = false
       while (round < maxRounds && !converged) {
@@ -964,6 +900,8 @@ object Graph {
         .map(e => (e.getKey.longValue, e.getValue.longValue)).toSeq
         .toDF("node", "label")
     }
+    var labels = TextDedup.materialize(
+      nodes0.withColumn("label", col("node")), checkpointDir)
     // distributed regime: label-join exchange pre-satisfied by pinning
     // the neighbor list partitioned on the join key
     // static across rounds — persist() pin, NOT a checkpoint: keeps
@@ -975,7 +913,8 @@ object Graph {
     // a per-node window sort (-c is safe: 1 <= c <= n). Both aggs
     // hash-partition on the same `node` key.
     def lpaStep(cur: DataFrame): DataFrame = nbr
-      .join(valueAttach(cur.withColumnRenamed("node", "nb"), nNodes), "nb")
+      // shuffle-hash value side: the [[coreness]] hStep note
+      .join(cur.withColumnRenamed("node", "nb").hint("shuffle_hash"), "nb")
       .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
       .groupBy(col("node"))
       .agg(min(struct((-col("c")).as("nc"), col("label"))).as("best"))
@@ -1006,7 +945,7 @@ object Graph {
           checkpointDir)
         if (earlyStop)
           converged = next.alias("a")
-            .join(valueAttach(labels.alias("b"), nNodes),
+            .join(labels.alias("b").hint("shuffle_hash"),
               expr("a.node = b.node AND a.label <> b.label"))
             .isEmpty
         labels = next

@@ -15,8 +15,11 @@ import org.apache.spark.sql.{DataFrame, Row}
   *
   * Users: [[VectorIndex]] (Lloyd training rows), [[Spectral]] (power
   * iteration vectors), [[Retrieval.mmrSelect]] (candidates and
-  * symmetrized sims) and [[Graph]]'s coreness and convergent PageRank
-  * (node-sized value frames). */
+  * symmetrized sims), and every graph driver loop on node-sized
+  * frames: [[Graph]]'s kCore, coreness, labelPropagation and
+  * convergent pageRank / personalizedPageRank, and
+  * [[TextDedup.connectedComponents]]. It is the only driver-loop gate
+  * in those operators: none runs a `count()` before deciding. */
 object ScaleGate {
 
   /** The rows of `df` when there are at most `bound` of them, else

@@ -27,13 +27,6 @@ import graft.functions.VectorFns
   */
 object Spectral {
 
-  /** Global float-rounded component mean. */
-  def meanVector(emb: DataFrame, vecCol: String): Array[Float] = {
-    val dim = vecDim(emb, vecCol)
-    emb.agg(VecOps.meanArray(vecCol, dim).as("m"))
-      .head().getSeq[Float](0).toArray
-  }
-
   /** Top principal direction of the centered corpus after `iterations`
     * power steps from the deterministic start v₀ = (1/√d, …, 1/√d).
     * Returns (μ, v) as float-rounded driver metadata. The sign of v is
@@ -87,7 +80,7 @@ object Spectral {
     driverVecRows(emb, vecCol).foreach { rows =>
       return iterateDriver(rows, iterations, stopAt)
     }
-    val dim = vecDim(emb, vecCol)
+    val dim = VecOps.vecDim(emb, vecCol)
     val v0: Array[Float] =
       Array.fill(dim)((1.0 / math.sqrt(dim.toDouble)).toFloat)
     // fused scan 1: raw component sums (→ μ) + v₀-projection sums
@@ -225,7 +218,7 @@ object Spectral {
       : (Array[Float], Seq[Array[Float]], Seq[(Int, Int, Double)]) = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iterations >= 1, "need at least one power step")
-    val dim = vecDim(emb, vecCol)
+    val dim = VecOps.vecDim(emb, vecCol)
     // k = 1 uses only the uniform start (no orthogonality to satisfy
     // — any dim works, matching topComponent's domain); for k ≥ 2 the
     // Walsh block needs bit k−2 balanced: 2^(k−1) | dim exactly
@@ -530,9 +523,6 @@ object Spectral {
     }
     (mu, v, residuals.result())
   }
-
-  private def vecDim(emb: DataFrame, vecCol: String): Int =
-    VecOps.vecDim(emb, vecCol)
 
   private def litF(a: Array[Float]): Column = VecOps.litF(a)
 

@@ -222,16 +222,16 @@ object TextDedup {
         .union(pairs.select(col(dstCol).as("a"), col(srcCol).as("b")))
         .repartition(col("b")),
       checkpointDir)
-    var labels = materialize(
-      nodes.select(col(nodeCol).as("node"), col(nodeCol).as("component")),
-      checkpointDir)
-    // node-sized label frame vs edge-sized sym: broadcast-gate the
-    // per-round joins (guide §3.1, the [[Graph.labelPropagation]] r18
-    // pattern) — the localCheckpoint's unknown stats otherwise force a
-    // sort-merge join that re-sorts the edge-sized side every round
-    val nNodes = labels.count()
-    if (Graph.isLongType(labels, "node") &&
-        nNodes <= Graph.driverLoopMaxNodes(labels)) {
+    // ONE bounded collect of the node ids answers the gate and seeds the
+    // driver loop (every node starts as its own component —
+    // [[ScaleGate.collectUnder]]); the label frame is materialized and
+    // counted only on the distributed path
+    val nodeIds = nodes.select(col(nodeCol).as("node"))
+    val driverNodes =
+      if (Graph.isLongType(nodeIds, "node"))
+        ScaleGate.collectUnder(nodeIds, Graph.driverLoopMaxNodes(nodeIds))
+      else None
+    driverNodes.foreach { nodeRows =>
       // Driver-loop fixpoint (r18, the [[Graph.coreness]] pattern):
       // the component labeling is node-sized, so each min-propagation
       // round is ONE job — scan the pinned adjacency, per-row
@@ -245,7 +245,7 @@ object TextDedup {
         checkpointDir)
       val sess = pairs.sparkSession
       var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      labels.collect().foreach(r => cur.put(r.getLong(0), r.getLong(1)))
+      nodeRows.foreach(r => cur.put(r.getLong(0), r.getLong(0)))
       var round = 0
       var converged = false
       while (!converged && round < maxRounds) {
@@ -279,10 +279,16 @@ object TextDedup {
         .map(e => (e.getKey.longValue, e.getValue.longValue)).toSeq
         .toDF("node", "component")
     }
-    val bound = pairs.sparkSession.conf
-      .get("graft.broadcastMaxEdges", "4000000").toLong
+    var labels = materialize(
+      nodeIds.withColumn("component", col("node")), checkpointDir)
+    // node-sized label frame vs edge-sized sym: broadcast-gate the
+    // per-round joins (guide §3.1) — the localCheckpoint's unknown stats
+    // otherwise force a sort-merge join that re-sorts the edge-sized
+    // side every round
+    val nNodes = labels.count()
     def maybeB(df: DataFrame): DataFrame =
-      if (nNodes <= bound) org.apache.spark.sql.functions.broadcast(df)
+      if (nNodes <= Graph.broadcastMaxEdges(labels))
+        org.apache.spark.sql.functions.broadcast(df)
       else df
     def propagate(cur: DataFrame): DataFrame = {
       val nbMin = sym.join(maybeB(cur), sym("b") === cur("node"))
@@ -495,24 +501,9 @@ object TextDedup {
       .filter((least(col("pna") - col("ra"), col("pnb") - col("rb")) + 1) *
         (simNum + simDen) >= (col("pna") + col("pnb")) * simNum)
       .select(col("doc_a"), col("doc_b"))
-    // graft.verifyWidth > 0 plants an explicit-width repartition before
-    // the verify (exempt from AQE's byte-based partition coalescing,
-    // which squeezes this CPU-dense-over-small-bytes stage into a
-    // handful of tasks — prefix filtering exists to make the candidate
-    // rows few in BYTES while each costs real intersect CPU). Default
-    // OFF: three alternating A/B pairs at sf0.1 showed the extra
-    // exchange + stage costs more than the parallelism buys at this
-    // scale; at corpus scale, where the verify stage holds minutes of
-    // CPU behind a byte-small shuffle, set it to the cluster's core
-    // count. (A session-wide minPartitionSize floor was tried first and
-    // reverted: it widened every tiny shuffle in the suite — see
-    // GraftSession.)
-    val verifyWidth = docs.sparkSession.conf
-      .get("graft.verifyWidth", "0").toInt
-    val verified = if (verifyWidth > 0)
-      cands.repartition(verifyWidth, col("doc_a"), col("doc_b"))
-    else cands
-    verified
+    // No explicit-width repartition before this CPU-dense verify: it
+    // lost its alternating A/Bs at sf0.1 (OPTIMIZATION_r19.md §8)
+    cands
       .join(sets.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"),
         col("n_set").as("na")), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"),
@@ -592,18 +583,10 @@ object TextDedup {
       (if (dfCap == Long.MaxValue) prefixAll
        else prefixAll.filter(col("df") <= dfCap))
         .select(col("tok"), col("doc_id").as("doc_in"))
-    // graft.verifyWidth: same knob, measurement, and default-OFF
-    // verdict as [[similarityJoin]]'s.
-    val verifyWidth = docs.sparkSession.conf
-      .get("graft.verifyWidth", "0").toInt
-    val cands0 = prefix
+    prefix
       .join(ex.select(col("tok"), col("doc_id").as("doc_out")), "tok")
       .filter(col("doc_in") =!= col("doc_out"))
       .select(col("doc_in"), col("doc_out")).distinct()
-    val verified = if (verifyWidth > 0)
-      cands0.repartition(verifyWidth, col("doc_in"), col("doc_out"))
-    else cands0
-    verified
       .join(sets.select(col("doc_id").as("doc_in"), col("toks").as("toks_a"),
         col("n_set").as("n_in")), "doc_in")
       .join(sets.select(col("doc_id").as("doc_out"), col("toks").as("toks_b")),

@@ -10,13 +10,18 @@ import org.apache.spark.sql.functions._
   */
 private[ext] object VecOps {
 
-  /** Vector dimensionality probed from the first row, with a CLEAR
-    * error on an empty frame or a null first vector. */
+  /** Vector dimensionality probed from the first row — with a CLEAR
+    * error on an empty frame or a null first vector (a bare `head()`
+    * throws NoSuchElementException / NPE deep inside the operator,
+    * which reads as an engine bug rather than a caller contract
+    * violation). One bounded 1-row job. */
   def vecDim(df: DataFrame, vecCol: String): Int =
     df.limit(1).select(size(col(vecCol)).cast("int")).collect()
       .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Int]))
       .getOrElse(throw new IllegalArgumentException(
-        s"cannot infer vector dim: input is empty or '$vecCol' is null"))
+        s"cannot infer vector dim: input is empty or '$vecCol' is null " +
+          "in the first row — dimension-dependent operators need at " +
+          "least one non-null vector"))
 
   /** Float-rounded per-component mean aggregation expression (the
     * centroid discipline: rounding absorbs partial-agg ulp drift so a

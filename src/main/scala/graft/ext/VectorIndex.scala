@@ -435,19 +435,6 @@ object VectorIndex {
         col("__dropId").isNull.as("keep"))
   }
 
-  /** Vector dimensionality probed from the first row — with a CLEAR
-    * error on an empty frame or a null first vector (a bare `head()`
-    * throws NoSuchElementException / NPE deep inside the operator,
-    * which reads as an engine bug rather than a caller contract
-    * violation). One bounded 1-row job, the [[requireBandsFit]] shape. */
-  private def vecDim(embeddings: DataFrame, vecCol: String): Int =
-    embeddings.limit(1).select(size(col(vecCol)).cast("int")).collect()
-      .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Int]))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot infer vector dim: input is empty or '$vecCol' is null " +
-          "in the first row — dimension-dependent operators need at " +
-          "least one non-null vector"))
-
   /** Fail FAST on the bands·bits ≤ dim contract (it binds at bands = 1
     * too: bits alone must fit the vector) — a violation otherwise dies
     * mid-job as a bare ANSI INVALID_ARRAY_INDEX in the bucket exchange
@@ -598,7 +585,7 @@ object VectorIndex {
     * @return input plus `outCol` array&lt;double&gt; */
   def hadamardRotate(embeddings: DataFrame, vecCol: String,
       outCol: String = "rvec", seed: String = "opq"): DataFrame = {
-    val dim = vecDim(embeddings, vecCol)
+    val dim = VecOps.vecDim(embeddings, vecCol)
     require(dim > 0 && (dim & (dim - 1)) == 0,
       s"Hadamard rotation needs a power-of-2 dim, got $dim")
     val s = signMatrix(1, dim, seed)(0)
@@ -703,7 +690,7 @@ object VectorIndex {
         }.toArray
       }
     }
-    val dim = vecDim(embeddings, vecCol)
+    val dim = VecOps.vecDim(embeddings, vecCol)
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
     (0 until m).map { j =>
@@ -976,7 +963,7 @@ object VectorIndex {
     require(bits >= 1 && bits <= 64, s"bits must be in [1, 64], got $bits")
     require(query.length >= bits,
       s"query has ${query.length} dims; needs >= $bits")
-    val d = vecDim(embeddings, vecCol)
+    val d = VecOps.vecDim(embeddings, vecCol)
     require(d >= bits, s"vectors have $d dims; bits = $bits needs >= that")
     val qCode = query.take(bits).zipWithIndex
       .collect { case (x, i) if x >= 0 => 1L << i }

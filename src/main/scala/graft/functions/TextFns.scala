@@ -19,9 +19,6 @@ object TextFns {
     * DuckDB's regexp_split_to_array for oracle parity). */
   def tokens(c: Column): Column = split(trim(c), "\\s+")
 
-  /** Whitespace token count. */
-  def tokenCount(c: Column): Column = size(tokens(c))
-
   /** A BPE-ish subword proxy: tokens split further on letter/digit
     * boundaries and every-4-chars, approximating subword token counts
     * without a vocab file. Count = ceil(chars-without-spaces / 4) +
@@ -128,16 +125,11 @@ object TextFns {
       i => substr(c, i, lit(k))
     )
 
-  /** Word n-grams over whitespace tokens, joined with single spaces.
-    *
-    * NOTE: `c` is referenced inside a higher-order-function lambda, which
-    * Catalyst evaluates per array element without common-subexpression
-    * elimination — pass an already-materialized token *attribute*
-    * (`withColumn("toks", tokens(...))`) via [[ngramsFromTokens]] in hot
-    * paths, or the tokenizing `split` re-runs O(n) times per row. */
-  def wordNgrams(c: Column, n: Int): Column = ngramsFromTokens(tokens(c), n)
-
-  /** Word n-grams from a token-array column (hot-path variant). */
+  /** Word n-grams over a token-array column, joined with single spaces.
+    * Pass an already-materialized token attribute
+    * (`withColumn("toks", tokens(...))`): the column is referenced inside
+    * a higher-order-function lambda, which Catalyst evaluates per array
+    * element without common-subexpression elimination. */
   def ngramsFromTokens(t: Column, n: Int): Column =
     transform(
       sequence(lit(1), greatest(size(t) - (n - 1), lit(1))),
@@ -164,10 +156,6 @@ object TextFns {
     require(chunk >= 0 && chunk < 4, "md5 has four 8-hex chunks")
     array_min(transform(digests, d => d.substr(lit(chunk * 8 + 1), lit(8))))
   }
-
-  /** MinHash signature: one [[minhash]] per seed, as an array column. */
-  def minhashSignature(shingles: Column, seeds: Seq[String]): Column =
-    array(seeds.map(minhash(shingles, _)): _*)
 
   /** SimHash over tokens, `bits` wide (<= 32). Bit b of the hash is the
     * sign of sum over tokens of (+1 / -1) by the parity of hex char b of

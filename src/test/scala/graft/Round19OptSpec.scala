@@ -12,35 +12,31 @@ class Round19OptSpec extends SparkSpec {
     try f finally spark.conf.unset(key)
   }
 
-  test("coOccurrenceEdges: packed-long distinct == struct distinct == " +
-    "brute-force pair join (32-bit gate picks the path)") {
+  test("coOccurrenceEdges == brute-force pair join, ids below and " +
+    "past 2^31") {
     import spark.implicits._
     val rnd = new scala.util.Random(19)
     val rows = (1 to 400).flatMap { g =>
       val items = Seq.fill(1 + rnd.nextInt(8))(rnd.nextInt(50).toLong)
       items.map(i => (g.toLong, i))
     }
-    val small = rows.toDF("grp", "item") // ids < 2^31 → packed path
-    // the SAME graph with every id offset past 2^31 → struct path
+    val small = rows.toDF("grp", "item")
+    // the SAME graph with every id offset past 2^31
     val big = rows.map { case (g, i) => (g, i + (1L << 31)) }
       .toDF("grp", "item")
-    spark.conf.set("graft.packEdgeKeys", "true") // default off (A/B'd)
-    val (packed, struct) = try {
-      val p = graft.ext.Graph.coOccurrenceEdges(small, "grp", "item")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val s = graft.ext.Graph.coOccurrenceEdges(big, "grp", "item")
-        .collect()
-        .map(r => (r.getLong(0) - (1L << 31), r.getLong(1) - (1L << 31)))
-        .toSet
-      (p, s)
-    } finally spark.conf.unset("graft.packEdgeKeys")
+    val lo = graft.ext.Graph.coOccurrenceEdges(small, "grp", "item")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val hi = graft.ext.Graph.coOccurrenceEdges(big, "grp", "item")
+      .collect()
+      .map(r => (r.getLong(0) - (1L << 31), r.getLong(1) - (1L << 31)))
+      .toSet
     val brute = rows.groupBy(_._1).values.flatMap { grp =>
       val its = grp.map(_._2).distinct.sorted
       for (i <- its.indices; j <- i + 1 until its.length)
         yield (its(i), its(j))
     }.toSet
-    assert(packed === brute, "packed-long pair set diverged from brute")
-    assert(struct === brute, "struct pair set diverged from brute")
+    assert(lo === brute, "pair set (ids < 2^31) diverged from brute")
+    assert(hi === brute, "pair set (ids > 2^31) diverged from brute")
   }
 
   test("triangleCount: shuffled adjacency close (broadcastMaxEdges=0) == " +
@@ -68,8 +64,29 @@ class Round19OptSpec extends SparkSpec {
     }
   }
 
-  test("coreness/labelPropagation: shuffle_hash value join == broadcast " +
-    "== planner-default, forced-distributed, random graphs") {
+  /** Driver-loop gate boundaries: `run` at driverLoopMaxNodes = `n`
+    * (the size of the frame the gate collects: driver loop) and `n - 1`
+    * (distributed loop), and at bounds past Int.MaxValue (which must
+    * not overflow the collect limit), each == the forced-distributed
+    * rows `dist`. */
+  private def gateSweep[T](what: String, n: Long, dist: T)(run: => T): Unit =
+    Seq(n, n - 1L, Int.MaxValue.toLong, 4294967295L, Long.MaxValue)
+      .foreach(b => withConf("graft.driverLoopMaxNodes", b) {
+        assert(run === dist, s"$what at bound $b")
+      })
+
+  private def forced[T](run: => T): T =
+    withConf("graft.driverLoopMaxNodes", 0L)(run)
+
+  private def pairs(rows: Array[org.apache.spark.sql.Row]): Set[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def triples(
+      rows: Array[org.apache.spark.sql.Row]): Set[(Long, Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("coreness/labelPropagation: forced distributed " +
+    "(driverLoopMaxNodes=0) == driver loop, random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(23)
     (0 until 2).foreach { trial =>
@@ -78,39 +95,84 @@ class Round19OptSpec extends SparkSpec {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
       val df = edges.toDF("u", "v")
-      def runBoth(): (Set[(Long, Long)], Set[(Long, Long)]) = {
-        val c = graft.ext.Graph.coreness(df)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val l = graft.ext.Graph.labelPropagation(df, maxRounds = 4)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        (c, l)
-      }
-      spark.conf.set("graft.driverLoopMaxNodes", "0") // distributed loops
-      val ((cS, lS), (cB, lB), (cP, lP)) = try {
-        val shj = runBoth() // default mode: shuffle_hash
-        spark.conf.set("graft.valueJoinMode", "broadcast")
-        val bc = runBoth()
-        spark.conf.set("graft.valueJoinMode", "smj")
-        val pl = runBoth()
-        (shj, bc, pl)
-      } finally {
-        spark.conf.unset("graft.valueJoinMode")
-        spark.conf.unset("graft.driverLoopMaxNodes")
-      }
-      assert(cS === cB && cS === cP, s"trial $trial: coreness diverged")
-      assert(lS === lB && lS === lP, s"trial $trial: LPA diverged")
-      // driver-loop gate boundaries: a degree frame of exactly `bound`
-      // nodes runs the driver loop, `bound + 1` the distributed one;
-      // bounds past Int.MaxValue must not overflow the collect limit
-      def coreness(): Set[(Long, Long)] = graft.ext.Graph.coreness(df)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      def coreness(): Set[(Long, Long)] =
+        pairs(graft.ext.Graph.coreness(df).collect())
+      def lpa(): Set[(Long, Long)] =
+        pairs(graft.ext.Graph.labelPropagation(df, maxRounds = 4).collect())
+      val (cD, lD) = forced((coreness(), lpa()))
+      assert(coreness() === cD, s"trial $trial: coreness diverged")
+      assert(lpa() === lD, s"trial $trial: LPA diverged")
       val nNodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
-      (Seq(nNodes.toLong, nNodes - 1L) ++
-        Seq(Int.MaxValue.toLong, 4294967295L, Long.MaxValue)).foreach(b =>
-        withConf("graft.driverLoopMaxNodes", b) {
-          assert(coreness() === cS, s"trial $trial: coreness at bound $b")
-        })
+      gateSweep(s"trial $trial: coreness", nNodes, cD)(coreness())
     }
+  }
+
+  test("kCore/labelPropagation/personalizedPageRank/connectedComponents: " +
+    "driver loop at the node bound and distributed loop past it == forced " +
+    "distributed, random graph") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    val n = 45
+    val edges = (for (_ <- 1 to 3 * n) yield
+      (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    val df = edges.toDF("u", "v")
+    val nNodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
+
+    def kCore(): Set[(Long, Long)] =
+      pairs(graft.ext.Graph.kCore(df, k = 3).collect())
+    val kD = forced(kCore())
+    assert(kD.nonEmpty, "the 3-core should not be empty on this graph")
+    gateSweep("kCore", nNodes, kD)(kCore())
+
+    def lpa(): Set[(Long, Long)] =
+      pairs(graft.ext.Graph.labelPropagation(df, maxRounds = 5).collect())
+    gateSweep("labelPropagation", nNodes, forced(lpa()))(lpa())
+
+    // directed both ways; one seed (n + 5) has no out-edges (d = 0)
+    val directed = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .distinct.toDF("src", "dst")
+    val seedIds = Seq(0L, 1L, 2L, n + 5L)
+    val seeds = seedIds.toDF("node")
+    def ppr(): Set[(Long, Long, Long)] = triples(graft.ext.Graph
+      .personalizedPageRank(directed, seeds, maxIterations = 8,
+        checkConvergence = true).collect())
+    val universe = (edges.flatMap { case (a, b) => Seq(a, b) } ++ seedIds)
+      .distinct.size
+    gateSweep("personalizedPageRank", universe, forced(ppr()))(ppr())
+
+    // isolated nodes (n until n + 3) stay singleton components
+    val nodeIds = (0L until n + 3L).toDF("id")
+    val ccPairs = edges.toDF("id_a", "id_b")
+    def cc(): Set[(Long, Long)] = pairs(graft.ext.TextDedup
+      .connectedComponents(ccPairs, nodeIds, maxRounds = 40).collect())
+    gateSweep("connectedComponents", n + 3L, forced(cc()))(cc())
+  }
+
+  test("empty edge set: every graph driver-loop gate == forced " +
+    "distributed (bound 0 takes the distributed path)") {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Long)]
+    val df = none.toDF("u", "v")
+    val directed = none.toDF("src", "dst")
+    val seeds = Seq(3L, 4L).toDF("node")
+    def runAll(): Seq[Any] = Seq(
+      pairs(graft.ext.Graph.coreness(df).collect()),
+      pairs(graft.ext.Graph.kCore(df, k = 2).collect()),
+      pairs(graft.ext.Graph.labelPropagation(df).collect()),
+      triples(graft.ext.Graph.pageRank(directed, checkConvergence = true)
+        .collect()),
+      triples(graft.ext.Graph.personalizedPageRank(directed, seeds,
+        checkConvergence = true).collect()),
+      pairs(graft.ext.TextDedup.connectedComponents(none.toDF("id_a", "id_b"),
+        Seq(7L, 8L).toDF("id")).collect()),
+      pairs(graft.ext.TextDedup.connectedComponents(none.toDF("id_a", "id_b"),
+        Seq.empty[Long].toDF("id")).collect()))
+    val expected = Seq(Set.empty, Set.empty, Set.empty, Set.empty,
+      Set((3L, 0L, 75000000000L), (4L, 0L, 75000000000L)),
+      Set((7L, 7L), (8L, 8L)), Set.empty)
+    assert(runAll() === expected, "default bound")
+    assert(forced(runAll()) === expected, "forced distributed")
   }
 
   test("pageRank with convergence: driver loop at the node bound and " +
@@ -124,16 +186,11 @@ class Round19OptSpec extends SparkSpec {
         .filter { case (a, b) => a != b }.distinct
       val df = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
         .distinct.toDF("src", "dst")
-      def run(): Set[(Long, Long, Long)] = graft.ext.Graph
-        .pageRank(df, maxIterations = 30, checkConvergence = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val dist = withConf("graft.driverLoopMaxNodes", 0L)(run())
+      def run(): Set[(Long, Long, Long)] = triples(graft.ext.Graph
+        .pageRank(df, maxIterations = 30, checkConvergence = true).collect())
+      val dist = forced(run())
       val nSrc = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
-      (Seq(nSrc.toLong, nSrc - 1L) ++
-        Seq(Int.MaxValue.toLong, 4294967295L, Long.MaxValue)).foreach(b =>
-        withConf("graft.driverLoopMaxNodes", b) {
-          assert(run() === dist, s"trial $trial: pageRank at bound $b")
-        })
+      gateSweep(s"trial $trial: pageRank", nSrc, dist)(run())
       assert(run() === dist, s"trial $trial: pageRank at the default bound")
     }
   }

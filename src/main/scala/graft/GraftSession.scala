@@ -25,12 +25,6 @@ object GraftSession {
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // push MAX/MIN/COUNT without filters down to parquet footer
-      // statistics (exact for primitive columns — results unchanged):
-      // the monitor replay gate reads max(batch_id) over the whole
-      // state parquet per merge, which this turns from a full state
-      // scan into a footer read — O(files), not O(rows) (r18)
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       // NOTE (r19): a session-wide
       // spark.sql.adaptive.coalescePartitions.minPartitionSize=64k was
       // tried to keep CPU-dense verify stages wide and REVERTED on a

@@ -81,9 +81,10 @@ object HttpIO {
   }
 
   /** C13 — local ISO timestamp with zone offset, seconds precision
-    * (reference fetch_nextbike.py:29–33). */
+    * (reference fetch_nextbike.py:29–33). A formatter, not `toString`,
+    * which drops `:00` seconds. */
   def nowIso(zone: String = "Europe/Warsaw"): String =
     java.time.ZonedDateTime.now(java.time.ZoneId.of(zone))
       .truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
-      .toOffsetDateTime.toString
+      .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
 }

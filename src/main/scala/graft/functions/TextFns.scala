@@ -136,12 +136,6 @@ object TextFns {
       i => array_join(slice(t, i, lit(n)), " ")
     )
 
-  /** MinHash value for one hash function: min over shingles of
-    * md5(shingle || seed). Hex strings compare lexicographically, which
-    * is a valid uniform order, so the min is a proper minhash. */
-  def minhash(shingles: Column, seed: String): Column =
-    array_min(transform(shingles, s => md5(concat(s, lit(seed)))))
-
   /** One md5 digest per shingle (materialize as an attribute, then feed
     * [[minhashFromDigests]] — computes the digest ONCE for any number of
     * hash functions). */

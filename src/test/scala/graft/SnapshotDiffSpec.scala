@@ -4,15 +4,19 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ingest.SnapshotJson
+import graft.model.Schemas
 import graft.status.SnapshotDiff
 import graft.streaming.StatusStream
 
 /** Goldens from reference tests/test_bike_status_changes.py against the
-  * snapA.json/snapB.json fixtures (FIXTURES.md §3), and the one-pass
-  * micro-batch checked against a per-pair loop over `SnapshotDiff.events`. */
+  * snapA.json/snapB.json fixtures (FIXTURES.md §3), the one-pass
+  * micro-batch checked against a per-pair loop over `SnapshotDiff.events`,
+  * and the whole-text parse checked against the multiLine JSON reader and
+  * two-branch flatten it replaced. */
 class SnapshotDiffSpec extends SparkSpec {
 
   private val snapA = Fixtures.snapA
@@ -217,4 +221,199 @@ class SnapshotDiffSpec extends SparkSpec {
       assert(got === expected.map(_.toSeq.mkString("|")).sorted)
       assert(rowKeys(spark.read.parquet(statePath)) === rowKeys(state.get))
     }
+
+  // ---- whole text + from_json + one explode == multiLine + two branches ----
+
+  /** The multiLine JSON reader the whole-text parse replaced. */
+  private def oldRead(path: String): DataFrame =
+    spark.read.option("multiLine", "true").schema(Schemas.snapshotSchema)
+      .json(path).withColumn("_file", input_file_name())
+
+  /** The two-branch flatten (detailed ∪ minimal) the one-explode
+    * `positions` replaced. */
+  private def oldPositions(snapshots: DataFrame): DataFrame = {
+    val places = snapshots
+      .select(col("_file"), col("_fetched_at"),
+        posexplode(col("data").getItem(0).getField("cities").getItem(0)
+          .getField("places")).as(Seq("place_pos", "place")))
+      .withColumn("bike_numbers",
+        coalesce(col("place.bikeNumbers"), col("place.bike_numbers")))
+      .filter(size(coalesce(col("place.bikes"), array())) > 0 ||
+        size(coalesce(col("bike_numbers"), array())) > 0)
+      .withColumn("station_name",
+        when(upper(coalesce(col("place.placeType"), lit("")))
+          .startsWith("FREESTANDING"), lit("freestanding"))
+          .otherwise(col("place.name")))
+      .withColumn("station_id",
+        when(upper(coalesce(col("place.placeType"), lit("")))
+          .startsWith("FREESTANDING"), lit("freestanding"))
+          .otherwise(col("place.uid")))
+      .withColumn("lat", col("place.geoCoords.lat"))
+      .withColumn("lon", col("place.geoCoords.lng"))
+    val detailed = places
+      .filter(size(coalesce(col("place.bikes"), array())) > 0)
+      .select(col("_file"), col("_fetched_at"), col("place_pos"),
+        col("station_name"), col("station_id"), col("lat"), col("lon"),
+        posexplode(col("place.bikes")).as(Seq("bike_pos", "bike")))
+      .select(col("_file"), col("_fetched_at"), col("place_pos"), col("bike_pos"),
+        col("bike.number").as("bike_id"),
+        col("station_name"), col("station_id"), col("lat"), col("lon"),
+        when(upper(coalesce(col("bike.bikeType"), lit("")))
+          .startsWith("ELECTRIC"), lit("electric"))
+          .otherwise(lit("standard")).as("bike_type"),
+        col("bike.battery").as("battery"))
+    val minimal = places
+      .filter(size(coalesce(col("place.bikes"), array())) === 0 &&
+        size(coalesce(col("bike_numbers"), array())) > 0)
+      .select(col("_file"), col("_fetched_at"), col("place_pos"),
+        col("station_name"), col("station_id"), col("lat"), col("lon"),
+        posexplode(col("bike_numbers")).as(Seq("bike_pos", "bike_id")))
+      .select(col("_file"), col("_fetched_at"), col("place_pos"), col("bike_pos"),
+        col("bike_id"),
+        col("station_name"), col("station_id"), col("lat"), col("lon"),
+        lit(null).cast("string").as("bike_type"),
+        lit(null).cast("double").as("battery"))
+    val w = Window.partitionBy(col("_file"), col("bike_id"))
+      .orderBy(col("place_pos").desc, col("bike_pos").desc)
+    detailed.unionByName(minimal)
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_rn", "place_pos", "bike_pos")
+  }
+
+  /** Every place shape the flattener handles: detailed, `bikeNumbers`-only,
+    * `bike_numbers`, neither (absent and empty lists), empty `bikes` with
+    * ids, both lists, freestanding and freestanding-electric (any case),
+    * a NULL place and a NULL bike; bike 500 is listed twice in one place
+    * and 501 in two places; numbers are numeric, quoted and decimal;
+    * batteries integral, fractional, NULL and absent. */
+  private val shapesJson =
+    """{"_fetched_at": "2025-08-21T16:00:00+02:00", "data": [{"cities": [{"places": [
+      | {"uid": 1, "name": "Detailed", "placeType": "STATION",
+      |  "geoCoords": {"lat": 51.1, "lng": 17.0},
+      |  "bikes": [{"number": 500, "bikeType": "ELECTRIC_4G", "battery": 55},
+      |            {"number": "501", "bikeType": "STANDARD", "battery": null},
+      |            {"number": 502.0},
+      |            {"number": 500, "bikeType": "STANDARD_4G", "battery": 10.5}]},
+      | {"uid": "2", "name": "Numbers only", "placeType": "STATION",
+      |  "geoCoords": {"lat": 51.2, "lng": 17.1}, "bikeNumbers": ["503", 504, "501"]},
+      | {"uid": "3", "name": "Snake case", "bike_numbers": ["505", 506]},
+      | {"uid": "4", "name": "Empty lists", "bikes": [], "bikeNumbers": []},
+      | {"uid": "5", "name": "Neither", "placeType": "STATION"},
+      | {"uid": "6", "name": "Empty bikes", "bikes": [], "bikeNumbers": ["507"]},
+      | {"uid": "7", "name": "BIKE 508", "placeType": "FREESTANDING_BIKE",
+      |  "geoCoords": {"lat": 51.3, "lng": 17.2},
+      |  "bikes": [{"number": 508, "bikeType": "STANDARD_4G", "battery": null}]},
+      | {"uid": "8", "name": "BIKE 509", "placeType": "freestanding_electric_bike",
+      |  "bikes": [{"number": 509, "bikeType": "electric_4g", "battery": 88}]},
+      | {"uid": "9", "name": "Both", "bikes": [{"number": 510}], "bikeNumbers": ["511"]},
+      | {"uid": "10", "name": "Empty first", "bikeNumbers": [], "bike_numbers": ["512"]},
+      | null,
+      | {"uid": "11", "name": "Null bike", "bikes": [null, {"number": 513}]}
+      |]}]}]}""".stripMargin
+
+  /** A landing dir of snapshots, one empty and one malformed file, and
+    * one file the `bike_rides_*.json` glob leaves out. */
+  private def mixedDir(): String = {
+    val dir = tmpDir("mixed")
+    def put(name: String, body: String): Unit =
+      Files.write(Paths.get(dir, name), body.getBytes(StandardCharsets.UTF_8))
+    Files.copy(Paths.get(snapA), Paths.get(dir, "bike_rides_a.json"))
+    Files.copy(Paths.get(snapB), Paths.get(dir, "bike_rides_b.json"))
+    put("bike_rides_shapes.json", shapesJson)
+    (1 to 3).foreach(i => put(s"bike_rides_gen$i.json",
+      snapshotJson(i, s"2025-08-21T15:1$i:02+02:00")))
+    put("bike_rides_empty.json", "")
+    put("bike_rides_bad.json", """{"_fetched_at": "2025-08-21T15:20:02+02:00", "data": [""")
+    put("other.json", snapshotJson(9, "2025-08-21T15:19:02+02:00"))
+    dir
+  }
+
+  test("read + positions == multiLine reader + two-branch positions: " +
+    "a file, a directory and a glob") {
+    val dir = mixedDir()
+    for (path <- Seq(s"$dir/bike_rides_shapes.json", dir, s"$dir/bike_rides_*.json")) {
+      assert(rowKeys(SnapshotJson.read(spark, path)) === rowKeys(oldRead(path)),
+        s"$path: snapshot rows")
+      val got = SnapshotJson.positions(SnapshotJson.read(spark, path))
+      val want = oldPositions(oldRead(path))
+      assert(got.columns.toSeq === want.columns.toSeq)
+      assert(rowKeys(got) === rowKeys(want), s"$path: positions")
+    }
+    // the shapes document: every id shape and the last listing kept
+    val shapes = rowKeys(positionsOf(s"$dir/bike_rides_shapes.json")
+      .select("bike_id", "station_id", "bike_type", "battery"))
+    assert(shapes === Seq(
+      "500|1|standard|10.5", "501|2|null|null", "502.0|1|standard|null",
+      "503|2|null|null", "504|2|null|null", "505|3|null|null", "506|3|null|null",
+      "507|6|null|null", "508|freestanding|standard|null",
+      "509|freestanding|electric|88.0", "510|9|standard|null",
+      "513|11|standard|null", "null|11|standard|null").sorted)
+  }
+
+  test("an empty or malformed file yields no positions, and processBatch " +
+    "on them leaves the state and the event log as they were") {
+    val dir = tmpDir("junk")
+    Files.write(Paths.get(dir, "bike_rides_empty.json"), Array.emptyByteArray)
+    Files.write(Paths.get(dir, "bike_rides_blank.json"), " \n".getBytes)
+    Files.write(Paths.get(dir, "bike_rides_bad.json"), "{\"data\": [".getBytes)
+    Files.write(Paths.get(dir, "bike_rides_nodata.json"), "{\"data\": []}".getBytes)
+    Files.write(Paths.get(dir, "bike_rides_nocity.json"),
+      "{\"data\": [{\"cities\": []}]}".getBytes)
+    new java.io.File(dir).list().foreach(f =>
+      assert(positionsOf(s"$dir/$f").count() === 0, f))
+    val eventsPath = tmpDir("events") + "/status"
+    val statePath = tmpDir("state") + "/last"
+    StatusStream.processBatch(spark, SnapshotJson.read(spark, snapA), eventsPath, statePath)
+    assert(StatusStream.processBatch(spark, SnapshotJson.read(spark, snapB),
+      eventsPath, statePath) > 0)
+    def logFiles() = new java.io.File(eventsPath).list().toSeq.sorted
+    val (log, state) = (logFiles(), rowKeys(spark.read.parquet(statePath)))
+    assert(StatusStream.processBatch(spark, SnapshotJson.read(spark, dir),
+      eventsPath, statePath) === 0)
+    assert(logFiles() === log)
+    assert(rowKeys(spark.read.parquet(statePath)) === state)
+  }
+
+  private def bytesReadBy(f: => Unit): Long = jobStats(f)._2
+
+  test("reading and flattening a snapshot reads its bytes at most twice") {
+    val size = Files.size(Paths.get(snapA))
+    val read = bytesReadBy {
+      SnapshotJson.positions(SnapshotJson.read(spark, snapA)).collect()
+      ()
+    }
+    assert(read > 0 && read <= 2 * size, s"read $read B of a $size-byte snapshot")
+  }
+
+  test("runOnce parses only the latest two files of a longer landing dir") {
+    val dir = tmpDir("landing")
+    // the newest file's name needs URI-decoding and glob-escaping to be
+    // read back from its `_file` value
+    val names = Seq("bike_rides_1.json", "bike_rides_2.json",
+      "bike_rides_3.json", "bike_rides_[4] x.json")
+    names.zipWithIndex.foreach { case (name, i) =>
+      Files.write(Paths.get(dir, name), snapshotJson(i + 1,
+        s"2025-08-21T15:1${i + 1}:02+02:00").getBytes(StandardCharsets.UTF_8))
+    }
+    val latest = SnapshotJson.latestFiles(spark, dir, 2)
+    assert(latest.map(_.split('/').last) === Seq("bike_rides_3.json",
+      "bike_rides_%5B4%5D%20x.json"))
+    val read = SnapshotJson.readFiles(spark, latest)
+    assert(read.inputFiles.length === 2)
+    assert(read.select("_file").collect().map(_.getString(0)).sorted === latest.sorted)
+    val expected = SnapshotDiff.events(positionsOf(s"$dir/${names(2)}"),
+      positionsOf(s"$dir/${names(3).replace("[", "\\[").replace("]", "\\]")}"),
+      "2025-08-21T15:14:02+02:00")
+    val eventsPath = tmpDir("events") + "/status"
+    var n = 0L
+    val bytes = bytesReadBy { n = StatusStream.runOnce(spark, dir, eventsPath) }
+    val sizes = names.map(f => Files.size(Paths.get(dir, f)))
+    // every file once to find the latest two, then those two once for
+    // each side of the diff
+    assert(bytes <= sizes.sum + 2 * sizes.takeRight(2).sum,
+      s"runOnce read $bytes B of a ${sizes.sum}-byte landing dir")
+    assert(n > 0 && n === expected.count())
+    assert(rowKeys(spark.read.parquet(eventsPath)) === rowKeys(expected))
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MetadataBuilder, TimestampType}
 
@@ -14,37 +13,7 @@ class TablesSpec extends SparkSpec {
     * so the test runs from a checkout alone. */
   private val sf = new java.io.File("perfbench/data/sf0.01").getAbsolutePath
 
-  /** Jobs started by `f` on this thread. A sentinel job in the same job
-    * group marks the end: once the listener has seen it, every job `f`
-    * started has been delivered too (the bus is ordered). */
-  private def jobsOf(f: => Unit): Int = {
-    val group = s"tables-spec-${System.nanoTime}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).filter(_ == group)
-          .foreach(_ => seen.add(Option(js.properties
-            .getProperty("spark.job.description")).getOrElse("")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "")
-      f
-      sc.setJobDescription("sentinel")
-      spark.range(1).count()
-      val deadline = System.currentTimeMillis + 30000
-      while (!seen.contains("sentinel") && System.currentTimeMillis < deadline)
-        Thread.sleep(20)
-      assert(seen.contains("sentinel"), "sentinel job never reached the bus")
-      seen.toArray.count(_ != "sentinel")
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(l)
-    }
-  }
+  private def jobsOf(f: => Unit): Int = jobStats(f)._1
 
   test("Tables.load starts no Spark job and its schema equals " +
     "spark.read.parquet's for every checked-in table") {

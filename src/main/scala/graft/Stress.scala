@@ -30,46 +30,15 @@ object Stress {
     // 1-min loadavg stamped per probe line: today's adjudications keep
     // coming back to machine load (identical megapipe code measured
     // 252-884 s across four same-day runs) — a number without its load
-    // context cannot be compared across rounds.
+    // context cannot be compared across rounds. Shuffle bytes settle
+    // plan-shape claims that wall time cannot: a probe whose claim is
+    // "the state is scanned, never shuffled" must show it in shuffleW.
     def load1: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     def timed(name: String)(body: => Long): Unit = {
       val l0 = load1
-      val t0 = System.nanoTime()
-      val n = body
-      println(f"[stress] $name%-12s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows, $rows docs, load1 $l0%.1f -> $load1%.1f)")
-    }
-
-    // Shuffle-bytes accounting for plan-shape adjudications: wall time
-    // on a 128 GB local[32] box cannot distinguish "shuffled the state"
-    // from "scanned it" (everything is memory-resident), but the bytes
-    // can — a probe whose claim is "the state is scanned, never
-    // shuffled" must show it in shuffleWrite. Listener delivery is
-    // async; the 2 s drain after the body is ample for a probe-sized
-    // job count.
-    def timedShuffle(name: String)(body: => Long): Unit = {
-      val w = new java.util.concurrent.atomic.AtomicLong
-      val r = new java.util.concurrent.atomic.AtomicLong
-      val lis = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) {
-            w.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            r.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            ()
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(lis)
-      val l0 = load1
-      val t0 = System.nanoTime()
-      val n = try body finally {
-        Thread.sleep(2000L)
-        spark.sparkContext.removeSparkListener(lis)
-      }
-      println(f"[stress] $name%-12s ${(System.nanoTime() - t0) / 1e9 - 2.0}%8.2f s  ($n rows, shuffleW ${w.get / 1e6}%.1f MB, shuffleR ${r.get / 1e6}%.1f MB, load1 $l0%.1f -> $load1%.1f)")
+      val (n, run) = JobStats.measure(spark)(body)
+      println(f"[stress] $name%-12s ${run.seconds}%8.2f s  ($n rows, $rows docs, shuffleW ${run.shuffleWriteBytes / 1e6}%.1f MB, shuffleR ${run.shuffleReadBytes / 1e6}%.1f MB, load1 $l0%.1f -> $load1%.1f)")
     }
 
     // Cleaner work window between composed-pipeline stages, on by
@@ -214,9 +183,9 @@ object Stress {
         }
         gcWindow()
       }
-      timedShuffle("fpnovel-exact")(probe(bPath))
+      timed("fpnovel-exact")(probe(bPath))
       gcWindow()
-      timedShuffle("fpnovel-bloom")(probe(bPath, bits = bBits))
+      timed("fpnovel-bloom")(probe(bPath, bits = bBits))
       gcWindow()
       // the same read-out pair on MOSTLY-NOVEL arrivals (a fourth
       // disjoint seed) — the realistic decontamination mix, and the
@@ -234,9 +203,9 @@ object Stress {
         graft.streaming.StreamEval.winnowNoveltyFromSet(
           spark, path, freshArrivals, "doc_id", "text", k = fpK,
           bloomBits = bits).queryExecution.toRdd.count()
-      timedShuffle("fpnovelN-exact")(probeN(bPath))
+      timed("fpnovelN-exact")(probeN(bPath))
       gcWindow()
-      timedShuffle("fpnovelN-bloom")(probeN(bPath, bits = bBits))
+      timed("fpnovelN-bloom")(probeN(bPath, bits = bBits))
       gcWindow()
       // the structural claim priced in BYTES: one more batch through
       // each append path — the bloom append's survivors probe the
@@ -248,12 +217,12 @@ object Stress {
         .option("seed", 1L << 41).load()
         .filter(pmod($"doc_id", lit(nb.toLong)) === 0L)
         .withColumn("doc_id", $"doc_id" + 2L * rows)
-      timedShuffle("fpapp-shuffle") {
+      timed("fpapp-shuffle") {
         graft.streaming.StreamEval.appendFingerprintBatch(
           spark, extraBatch, "doc_id", "text", aPath, nb + 1L, k = fpK)
       }
       gcWindow()
-      timedShuffle("fpbloomapp-shuffle") {
+      timed("fpbloomapp-shuffle") {
         graft.streaming.StreamEval.appendFingerprintBatch(
           spark, extraBatch, "doc_id", "text", bPath, nb.toLong, k = fpK,
           bloomBits = bBits)

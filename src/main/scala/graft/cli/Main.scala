@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 
 import graft.ingest.{RideCsv, StationCsv}
 import graft.metrics.{DailyMetrics, MetricsJson}
@@ -141,11 +141,14 @@ object Main {
       println(s"recorded $n events")
 
     case "backfill" :: store :: Nil =>
+      // the filled rows are counted on the rewrite's own write
+      import org.apache.spark.sql.functions.count_if
+      val obs = Observation()
       val rides = RidesTable.read(spark, store)
-      val n = Backfill.candidates(rides).count()
-      val rewritten = Backfill(rides)
+        .observe(obs, count_if(Backfill.fillable).as("n"))
       val tmp = store + "_backfill_tmp"
-      rewritten.write.mode("overwrite").partitionBy("ride_date").parquet(tmp)
+      Backfill(rides).write.mode("overwrite").partitionBy("ride_date").parquet(tmp)
+      val n = obs.get("n").asInstanceOf[Long]
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(conf)
       fs.delete(new org.apache.hadoop.fs.Path(store), true)

@@ -1006,11 +1006,14 @@ object Extended18 {
     // each level's CC is deterministic, so concurrency cannot change a
     // row. The futures only BUILD the per-level 1-row aggregates (the
     // CC loop's internal actions run inside); the final union stays
-    // lazy for the caller.
-    import scala.concurrent.{Await, Future}
+    // lazy for the caller. The pool's threads are started here, so they
+    // inherit the caller's local properties: the levels' jobs carry its
+    // job group and description like the rest of the query's.
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val levels = Seq(3000L, 2000L, 1000L).map { tau => Future {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val levels = try Seq(3000L, 2000L, 1000L).map { tau => Future {
       // banded graphs are denser than the old single-band cut — long
       // chains near tau are likelier, so give propagation headroom
       // (the loop exits on convergence; extra rounds cost nothing)
@@ -1023,9 +1026,8 @@ object Extended18 {
         count(lit(1)).as("n_clusters"),
         sum(when($"sz" === 1L, 1L).otherwise(0L)).as("n_singletons"),
         max($"sz").as("largest"))
-    }}
-    levels.map(Await.result(_, Duration.Inf))
-      .reduce(_ unionByName _).orderBy($"tau_bp".desc)
+    }}.map(Await.result(_, Duration.Inf)) finally pool.shutdown()
+    levels.reduce(_ unionByName _).orderBy($"tau_bp".desc)
   }
 
   val q196Sql: String = {

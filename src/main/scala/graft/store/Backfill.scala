@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Geo
@@ -14,12 +14,15 @@ import graft.functions.Geo
   */
 object Backfill {
 
+  /** True on the rows the rewrite fills: NULL distance, all four
+    * coordinates present. */
+  val fillable: Column =
+    col("distance").isNull &&
+      col("lat_start").isNotNull && col("lon_start").isNotNull &&
+      col("lat_end").isNotNull && col("lon_end").isNotNull
+
   /** Rows that WOULD be updated (dry-run counting, reference :45–58). */
-  def candidates(rides: DataFrame): DataFrame =
-    rides.filter(
-      col("distance").isNull &&
-        col("lat_start").isNotNull && col("lon_start").isNotNull &&
-        col("lat_end").isNotNull && col("lon_end").isNotNull)
+  def candidates(rides: DataFrame): DataFrame = rides.filter(fillable)
 
   /** The rewrite: fill NULL distances where coordinates allow.
     *

@@ -103,8 +103,11 @@ object StatusStream {
   def runOnce(spark: SparkSession, dir: String, eventsPath: String): Long = {
     val order = SnapshotJson.latestSnapshots(spark, dir, 2)
     if (order.size < 2) return 0L
-    val snaps = SnapshotJson.readFiles(spark, order.map(_._2))
-    appendDiffs(SnapshotJson.positions(snaps), order, None, eventsPath)
+    // Cached: both sides of the diff join read the positions.
+    val positions = SnapshotJson.positions(
+      SnapshotJson.readFiles(spark, order.map(_._2))).cache()
+    try appendDiffs(positions, order, None, eventsPath)
+    finally positions.unpersist()
   }
 
   /** Diffs snapshots 1..K pairwise in one join and appends all their

@@ -87,6 +87,50 @@ class CliSpec extends SparkSpec {
     assert(spark.read.parquet(events).count() > 0)
   }
 
+  test("backfill fills NULL distances in place and prints how many") {
+    import spark.implicits._
+    import Fixtures.ride
+    import graft.store.{Backfill, RidesTable}
+    val store = tmpDir("clibackfill") + "/bike_rides"
+    RidesTable.append(spark, Seq(
+      ride(1, "2024-06-08", None, Some((51.1, 17.0, 51.105, 17.01))),
+      ride(2, "2024-06-08", None),
+      ride(3, "2024-06-09", Some(9.999), Some((51.1, 17.0, 51.2, 17.1))),
+      ride(4, "2024-06-09", None, Some((51.11, 17.03, 51.08, 16.98))),
+      ride(5, "2024-06-10", None, Some((51.1, 17.0, 51.1, 17.0))),
+      ride(6, "2024-06-10", None, Some((51.1, 17.0, 51.2, 17.1))).copy(lon_end = None)
+    ).toDF(), store)
+    def rows() = RidesTable.read(spark, store).orderBy("uid").collect().toSeq
+    val before = rows()
+    val candidates = Backfill.candidates(RidesTable.read(spark, store)).count()
+    assert(candidates === 3L)
+    // the haversine fill, to check the geodesic one against
+    val sphere = Backfill(RidesTable.read(spark, store), useGeodesic = false)
+      .select("uid", "distance").as[(Long, Option[Double])].collect().toMap
+
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) {
+      Main.run(spark, List("backfill", store))
+    }
+    assert(out.toString.contains(s"backfilled $candidates distances in $store"))
+
+    val after = rows()
+    val d = after.head.fieldIndex("distance")
+    val filled = Set(1L, 4L, 5L)
+    def isFilled(r: org.apache.spark.sql.Row) = filled(r.getAs[Long]("uid"))
+    after.filter(isFilled).foreach { r =>
+      val want = sphere(r.getAs[Long]("uid")).get
+      assert(math.abs(r.getDouble(d) - want) <= 0.005 * want, r)
+    }
+    // every other row, and every other column, is unchanged
+    assert(after.map(_.toSeq.patch(d, Nil, 1)) === before.map(_.toSeq.patch(d, Nil, 1)))
+    assert(after.filterNot(isFilled) === before.filterNot(isFilled))
+    // still partitioned by ride_date, and the scratch copy is gone
+    assert(new java.io.File(store).list().filter(_.startsWith("ride_date=")).sorted.toSeq ===
+      Seq("ride_date=2024-06-08", "ride_date=2024-06-09", "ride_date=2024-06-10"))
+    assert(!new java.io.File(store + "_backfill_tmp").exists())
+  }
+
   test("unknown command fails loudly") {
     intercept[RuntimeException] {
       Main.run(spark, List("bogus"))

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Paths
 
-/** Test inputs checked in under `src/test/resources`, as file paths. */
+/** Test inputs: fixtures checked in under `src/test/resources`, as file
+  * paths, and generated ones. */
 object Fixtures {
 
   /** File-system path of the fixture at `name` (relative to resources). */
@@ -27,4 +28,12 @@ object Fixtures {
   }
   lazy val ridesDir: String = rides.resolve("sample").toString
   lazy val stationsCsv: String = rides.resolve("bike_stations_coords.csv").toString
+
+  /** A 30-minute ride from A to B starting at 10:00 on `day`. */
+  def ride(uid: Long, day: String, dist: Option[Double],
+      coords: Option[(Double, Double, Double, Double)] = None): graft.model.Ride =
+    graft.model.Ride(Some(uid), Some("b"),
+      Some(java.sql.Timestamp.valueOf(s"$day 10:00:00")),
+      Some(java.sql.Timestamp.valueOf(s"$day 10:30:00")), Some("A"), Some("B"), Some(30),
+      coords.map(_._1), coords.map(_._2), coords.map(_._3), coords.map(_._4), dist)
 }

@@ -122,23 +122,8 @@ class Round17Spec extends SparkSpec {
   // ------------------------------------------------------------------
   test("sequential detectors: guard runs as ONE agg job (count + " +
       "countDistinct fused), errors stay loud") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val series = (1 to 40).map(i =>
       (i.toLong, if (i <= 20) 10L else 30L)).toDF("t", "x")
-
-    def countJobs(f: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      // onJobStart fires synchronously enough for a counting pin once
-      // the actions have returned; give the async bus a beat to drain.
-      try { f; Thread.sleep(500) }
-      finally spark.sparkContext.removeSparkListener(l)
-      jobs.get()
-    }
 
     // The guard is ONE action (count + countDistinct in one agg); the
     // old shape was two (count, then distinct().count). Under AQE one
@@ -146,12 +131,12 @@ class Round17Spec extends SparkSpec {
     // RELATIVE: the fused guard must cost strictly fewer jobs than
     // the two-action shape it replaced, on the same checkpointed base.
     val base = series.select($"t", $"x").localCheckpoint()
-    val oldShapeJobs = countJobs {
+    val oldShapeJobs = jobStats {
       base.count(); base.select($"t").distinct().count()
-    }
-    val guardJobs = countJobs {
+    }._1
+    val guardJobs = jobStats {
       assert(Stats.guardedPeriods(base, "spec", 1000000L) == 40L)
-    }
+    }._1
     assert(guardJobs < oldShapeJobs,
       s"guardedPeriods ran $guardJobs jobs vs $oldShapeJobs for the " +
         "separate count + distinct().count shape — the fused guard " +

@@ -187,25 +187,6 @@ class Round3Spec extends SparkSpec {
     assert(key(idm) === key(IncrementalAgg.rollup(a, Seq("day"), "v")))
   }
 
-  test("Observed: audit metrics ride the write action, no second scan") {
-    import graft.ext.Observed
-    val df = Seq((1L, Some("a")), (2L, None), (3L, Some("c")), (3L, Some("d")))
-      .toDF("id", "v")
-    val out = tmpDir("observed") + "/t"
-    val (_, metrics) = Observed.runAudited(df, "load_audit", Seq(
-      count(lit(1)).as("rows"),
-      sum(when($"v".isNull, 1L).otherwise(0L)).as("null_v"),
-      // DISTINCT aggregates are rejected inside CollectMetrics — the
-      // sketch is the audit-grade dup signal (exact at tiny cardinality)
-      (count(lit(1)) - approx_count_distinct($"id")).as("dup_ids")
-    ))(_.write.mode("overwrite").parquet(out))
-    assert(metrics("rows") === 4L)
-    assert(metrics("null_v") === 1L)
-    assert(metrics("dup_ids") === 1L)
-    // the write really happened alongside the audit
-    assert(spark.read.parquet(out).count() === 4L)
-  }
-
   test("AQE re-plans at runtime: shuffle partitions coalesce to data size") {
     // 32 configured shuffle partitions over a tiny agg => AQE coalesces
     // the exchange read; the executed plan carries AQEShuffleRead

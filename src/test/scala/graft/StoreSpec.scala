@@ -6,20 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.model.Ride
 import graft.store.{Backfill, IdempotentAppend, RidesTable}
 
 /** K2 idempotent append + K5 backfill semantics (reference:
   * src/data_load_sqlite.py:218–235, src/backfill_distance.py;
   * tests/test_backfill_distance.py). */
 class StoreSpec extends SparkSpec {
-
-  private def ride(uid: Long, day: String, dist: Option[Double],
-      coords: Option[(Double, Double, Double, Double)] = None): Ride =
-    Ride(Some(uid), Some("b"), Some(Timestamp.valueOf(s"$day 10:00:00")),
-      Some(Timestamp.valueOf(s"$day 10:30:00")), Some("A"), Some("B"), Some(30),
-      coords.map(_._1), coords.map(_._2), coords.map(_._3), coords.map(_._4),
-      dist)
+  import Fixtures.ride
 
   test("append is idempotent on uid across loads (INSERT OR IGNORE semantics)") {
     import spark.implicits._

@@ -13,15 +13,13 @@ class TablesSpec extends SparkSpec {
     * so the test runs from a checkout alone. */
   private val sf = new java.io.File("perfbench/data/sf0.01").getAbsolutePath
 
-  private def jobsOf(f: => Unit): Int = jobStats(f)._1
-
   test("Tables.load starts no Spark job and its schema equals " +
     "spark.read.parquet's for every checked-in table") {
     val loaded = scala.collection.mutable.Map.empty[String, String]
-    val jobs = jobsOf {
+    val jobs = jobStats {
       Tables.All.foreach(n => loaded(n) = Tables.load(spark, sf, n).schema.json)
       Tables.registerAll(spark, sf)
-    }
+    }._1
     assert(jobs === 0, s"opening the tables ran $jobs Spark jobs")
     Tables.All.foreach { n =>
       val inferred = spark.read.parquet(s"$sf/$n.parquet").schema
@@ -53,7 +51,7 @@ class TablesSpec extends SparkSpec {
     assert(kv.containsKey("org.apache.spark.sql.parquet.row.metadata"))
 
     var loaded: org.apache.spark.sql.DataFrame = null
-    assert(jobsOf { loaded = Tables.load(spark, dir, "t") } === 0)
+    assert(jobStats { loaded = Tables.load(spark, dir, "t") }._1 === 0)
     val inferred = spark.read.parquet(s"$dir/t.parquet")
     assert(loaded.schema === inferred.schema)
     assert(loaded.schema("score").metadata.getString("comment") === "kept")
@@ -87,7 +85,7 @@ class TablesSpec extends SparkSpec {
     } finally writer.close()
 
     var ev: org.apache.spark.sql.DataFrame = null
-    assert(jobsOf { ev = Tables.load(spark, dir, "ev") } === 0)
+    assert(jobStats { ev = Tables.load(spark, dir, "ev") }._1 === 0)
     assert(ev.schema("ts").dataType === TimestampType)
     val got = ev.orderBy("event_id")
       .select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq

@@ -3,7 +3,8 @@ package graft
 import graft.cli.HttpIO
 import graft.metrics.RangeMetrics
 
-/** Driver-side utilities: filename datetime (C7/T4), date snapping (T7). */
+/** Driver-side utilities: filename datetime (C7/T4), date snapping (T7),
+  * the job recorder. */
 class UtilSpec extends SparkSpec {
 
   // reference tests/test_data_load_sqlite.py:19–28
@@ -104,5 +105,23 @@ class UtilSpec extends SparkSpec {
       assert(hits.get() === 3, s"expected 2 retries + success, got ${hits.get()} hits")
       assert(java.nio.file.Files.readString(got.toPath) === "a,b\n1,2\n")
     } finally server.stop(0)
+  }
+
+  test("JobStats.measure records its body's jobs, child threads included, " +
+    "and restores the caller's job group") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("outer", "outer desc")
+    try {
+      val outsider = new Thread(() => { sc.parallelize(1 to 4, 4).count(); () })
+      val (n, run) = JobStats.measure(spark) {
+        val child = new Thread(() => { sc.parallelize(1 to 4, 4).count(); () })
+        child.start(); outsider.start(); child.join()
+        sc.parallelize(1 to 4, 2).count()
+      }
+      outsider.join()
+      assert(n === 4 && run.jobs.size === 2 && run.stages.size === 2, run)
+      assert(sc.getLocalProperty("spark.jobGroup.id") === "outer")
+      assert(sc.getLocalProperty("spark.job.description") === "outer desc")
+    } finally sc.clearJobGroup()
   }
 }

@@ -125,7 +125,7 @@ class CliSpec extends SparkSpec {
     // every other row, and every other column, is unchanged
     assert(after.map(_.toSeq.patch(d, Nil, 1)) === before.map(_.toSeq.patch(d, Nil, 1)))
     assert(after.filterNot(isFilled) === before.filterNot(isFilled))
-    // still partitioned by ride_date, and the scratch copy is gone
+    // still partitioned by ride_date, and the temporary copy is gone
     assert(new java.io.File(store).list().filter(_.startsWith("ride_date=")).sorted.toSeq ===
       Seq("ride_date=2024-06-08", "ride_date=2024-06-09", "ride_date=2024-06-10"))
     assert(!new java.io.File(store + "_backfill_tmp").exists())

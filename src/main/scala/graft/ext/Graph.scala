@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -82,10 +82,10 @@ object Graph {
     * LPA, convergent PageRank / PPR, min-label CC) run as a DRIVER LOOP
     * over a pinned adjacency frame, decided by one
     * [[ScaleGate.collectUnder]] of the node-sized frame that seeds the
-    * loop: the node→value map is collected once, re-broadcast per
-    * round, and each round is ONE job (adjacency scan + per-row
-    * argmax/h-index — no join, no shuffle, no per-round materialization
-    * or probe jobs).
+    * loop: the node→value map is collected once and the rounds run in
+    * [[ScaleGate.driverRounds]], ONE job each (adjacency scan + per-row
+    * kernel — no join, no shuffle, no per-round materialization or
+    * probe jobs).
     * The value frame is node-sized by definition, so collecting it is
     * the same data volume the per-round broadcast join ships anyway
     * (guide §8 — broadcast the plan); beyond the bound the distributed
@@ -244,6 +244,10 @@ object Graph {
     * once fixed it stays fixed; integer rank cycles (the analogue of
     * float oscillation) simply run to `maxIterations`.
     *
+    * It is [[personalizedPageRank]] with every src node a seed: each
+    * of the N src nodes restarts with 0.15·10¹²/N and starts at
+    * 10¹²/N, and both run the same superstep loop.
+    *
     * Scale: edges are repartitioned by src BEFORE pinning, so every
     * superstep's edge-side join exchange is pre-satisfied — only the
     * (node-sized) rank frame and the dst aggregation shuffle per step;
@@ -257,107 +261,12 @@ object Graph {
       maxIterations: Int = 20, checkConvergence: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    val e = TextDedup.materialize(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .repartition(col("src")),
-      checkpointDir)
+    val e = edgesBySrc(edges, srcCol, dstCol, checkpointDir)
     val deg = TextDedup.materialize(
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")),
       checkpointDir)
-    val n = deg.agg(count(lit(1)).as("cnt"))
-    // driver loop ONLY in convergence mode: it replaces the per-round
-    // materialize + probe chain. The fixed-round mode plans ONE lazy
-    // unrolled superstep chain with no per-round jobs at all — measured
-    // FASTER than the driver loop's per-round collect round-trips
-    // (q134: 2.4 s lazy vs 2.9 s driver-looped), so it stays lazy and
-    // pays no gate job. In convergence mode ONE bounded collect of the
-    // node-sized degree frame answers the gate and seeds the loop
-    // ([[ScaleGate.collectUnder]]).
-    val driverDeg =
-      if (checkConvergence && isLongType(deg, "node"))
-        ScaleGate.collectUnder(deg, driverLoopMaxNodes(deg)).filter(_.nonEmpty)
-      else None
-    driverDeg.foreach { degCollected =>
-      // Driver-loop fixpoint (r18, the [[coreness]] pattern): the rank
-      // vector is node-sized, so each superstep is ONE job — scan the
-      // pinned REVERSE adjacency, per-row damped sum of the mapped
-      // in-neighbor contributions (`r div d`, the exact integer
-      // arithmetic of the join step), collect the node-sized result.
-      // Replaces the per-step join + dst agg + materialize + probe
-      // chain; convergence = map equality.
-      val radj = TextDedup.materialize(
-        e.join(deg.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .groupBy(col("dst")).agg(collect_list(col("src")).as("ins")),
-        checkpointDir)
-      val sess = edges.sparkSession
-      val degRows = degCollected.map(r => (r.getLong(0), r.getLong(1)))
-      val nNodes = degRows.length.toLong
-      val dMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      degRows.foreach { case (node, d) => dMap.put(node, d) }
-      val bcD = sess.sparkContext.broadcast(dMap)
-      val r0 = 1000000000000L / nNodes
-      val restart = 150000000000L / nNodes
-      var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      degRows.foreach { case (node, _) => cur.put(node, r0) }
-      var iter = 0
-      var converged = false
-      while (iter < maxIterations && !converged) {
-        val bcR = sess.sparkContext.broadcast(cur)
-        val step = udf((ins: Seq[Long]) => {
-          val rm = bcR.value
-          val dm = bcD.value
-          var acc = 0L
-          var i = 0
-          while (i < ins.length) {
-            val u = ins(i)
-            acc += rm.get(u).longValue / dm.get(u).longValue
-            i += 1
-          }
-          restart + (85L * acc) / 100L
-        })
-        val rows = radj.select(col("dst"), step(col("ins"))).collect()
-        bcR.unpersist(false)
-        val next = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        degRows.foreach { case (node, _) => next.put(node, restart) }
-        rows.foreach(r => next.put(r.getLong(0), r.getLong(1)))
-        converged = next == cur
-        cur = next
-        iter += 1
-      }
-      bcD.unpersist(false)
-      import sess.implicits._
-      return degRows.toSeq
-        .map { case (node, d) => (node, d, cur.get(node).longValue) }
-        .toDF("node", "d", "r")
-    }
-    // ranks carries the node's degree so each superstep is exactly one
-    // join (edges ⋈ ranks) + one aggregation
-    var ranks = deg.crossJoin(broadcast(n))
-      .select(col("node"), col("d"), expr("1000000000000 div cnt").as("r"))
-    var iter = 0
-    var converged = false
-    while (iter < maxIterations && !converged) {
-      val acc = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("r div d").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("acc"))
-      val step = deg.crossJoin(broadcast(n))
-        .join(acc, col("node") === col("dst"), "left")
-        .select(col("node"), col("d"),
-          expr("150000000000 div cnt + (85 * coalesce(acc, 0L)) div 100")
-            .as("r"))
-      if (checkConvergence) {
-        // the convergence probe executes the step anyway — pin it so
-        // the probe and the next superstep share one materialization
-        val next = TextDedup.materialize(step, checkpointDir)
-        converged = next.alias("a")
-          .join(ranks.alias("b"), expr("a.node = b.node AND a.r <> b.r"))
-          .isEmpty
-        ranks = next
-      } else ranks = step // bounded fixed-round unroll: lazy like q134's
-      iter += 1
-    }
-    ranks
+    supersteps(e, deg.withColumn("seed", lit(true)), maxIterations,
+      checkConvergence, checkpointDir)
   }
 
   /** Personalized PageRank — [[pageRank]] with the restart mass
@@ -378,7 +287,7 @@ object Graph {
     *
     * Scale: identical shape to [[pageRank]] — edges repartitioned on
     * src once, per step one join + one dst agg; the seed frame touches
-    * the loop only through the pinned base/restart frame.
+    * the loop only through the pinned base frame.
     *
     * @param seeds one column (`seedCol`) of seed node ids
     * @return (node, d, r): out-degree and proximity rank (ppt)
@@ -389,105 +298,93 @@ object Graph {
       maxIterations: Int = 20, checkConvergence: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    val e = TextDedup.materialize(
+    val e = edgesBySrc(edges, srcCol, dstCol, checkpointDir)
+    val seedSet = seeds.select(col(seedCol).as("node")).distinct()
+      .withColumn("seed", lit(true))
+    val base = TextDedup.materialize(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
+        .join(seedSet, Seq("node"), "full_outer")
+        .select(col("node"), coalesce(col("d"), lit(0L)).as("d"),
+          col("seed").isNotNull.as("seed")),
+      checkpointDir)
+    supersteps(e, base, maxIterations, checkConvergence, checkpointDir)
+  }
+
+  /** The (src, dst) edge list repartitioned on src and pinned. */
+  private def edgesBySrc(edges: DataFrame, srcCol: String, dstCol: String,
+      checkpointDir: Option[String]): DataFrame =
+    TextDedup.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .repartition(col("src")),
       checkpointDir)
-    val seedSet = seeds.select(col(seedCol).as("node")).distinct()
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-    val nS = seedSet.agg(count(lit(1)).as("ns"))
-    // base carries degree AND per-node restart mass so each superstep
-    // is exactly one join (edges ⋈ ranks) + one aggregation
-    val base = TextDedup.materialize(
-      deg.join(seedSet.withColumn("__seed", lit(1)), Seq("node"), "full_outer")
-        .crossJoin(broadcast(nS))
-        .select(col("node"), coalesce(col("d"), lit(0L)).as("d"),
-          when(col("__seed").isNotNull, expr("150000000000 div ns"))
-            .otherwise(lit(0L)).as("rst"),
-          when(col("__seed").isNotNull, expr("1000000000000 div ns"))
-            .otherwise(lit(0L)).as("r0")),
-      checkpointDir)
-    // convergence mode only — see [[pageRank]]'s r18 note: the lazy
-    // fixed-round unroll has no per-round jobs to replace and pays no
-    // gate job; ONE bounded collect of the node universe answers the
-    // gate and seeds the loop ([[ScaleGate.collectUnder]])
+
+  /** The PageRank superstep loop over the pinned edges `e` and the node
+    * universe `base (node, d, seed)`, built over pinned frames. Each of
+    * the |S| seeds restarts with rst = 0.15·10¹² div |S| and starts at
+    * r0 = 10¹² div |S|; every other node has rst = r0 = 0. Each
+    * superstep is `r' = rst + (85 · Σ_{in-edges} r div d) div 100`; one
+    * join (edges ⋈ ranks) + one dst aggregation when distributed. */
+  private def supersteps(e: DataFrame, base: DataFrame, maxIterations: Int,
+      checkConvergence: Boolean, checkpointDir: Option[String]): DataFrame = {
+    // driver loop ONLY in convergence mode. The fixed-round mode plans
+    // ONE lazy unrolled superstep chain with no per-round jobs at all —
+    // measured FASTER than the driver loop's per-round collect
+    // round-trips (q134: 2.4 s lazy vs 2.9 s driver-looped), so it
+    // stays lazy and pays no gate job. In convergence mode ONE bounded
+    // collect of the node universe answers the gate and seeds the loop.
     val driverBase =
       if (checkConvergence && isLongType(base, "node"))
         ScaleGate.collectUnder(base, driverLoopMaxNodes(base)).filter(_.nonEmpty)
       else None
-    driverBase.foreach { baseCollected =>
-      // Driver-loop fixpoint — identical shape to [[pageRank]]'s r18
-      // branch, with the restart mass per node read from the pinned
-      // base frame instead of the uniform constant. Every src in `e`
-      // has d >= 1 by construction, so the distributed step's
-      // `filter(d > 0)` on the forwarding side is implicit here.
+    driverBase.foreach { rows =>
+      val nSeeds = rows.count(_.getBoolean(2))
+      def mass(total: Long)(b: Row): Long = if (b.getBoolean(2)) total / nSeeds else 0L
+      // reverse adjacency over the whole universe: a node without
+      // in-edges gets empty `nbs` and so its restart mass
       val radj = TextDedup.materialize(
-        e.join(base.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .groupBy(col("dst")).agg(collect_list(col("src")).as("ins")),
+        base.select(col("node").as("dst")).join(e, Seq("dst"), "left")
+          .groupBy(col("dst").as("node")).agg(collect_list(col("src")).as("nbs")),
         checkpointDir)
-      val sess = edges.sparkSession
-      val baseRows = baseCollected
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val dMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      val rstMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      baseRows.foreach { case (node, d, rst, _) =>
-        dMap.put(node, d); rstMap.put(node, rst)
-      }
-      val bcD = sess.sparkContext.broadcast(dMap)
-      var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      baseRows.foreach { case (node, _, _, r0) => cur.put(node, r0) }
-      var iter = 0
-      var converged = false
-      while (iter < maxIterations && !converged) {
-        val bcR = sess.sparkContext.broadcast(cur)
-        val step = udf((ins: Seq[Long]) => {
-          val rm = bcR.value
-          val dm = bcD.value
-          var acc = 0L
-          var i = 0
-          while (i < ins.length) {
-            val u = ins(i)
-            acc += rm.get(u).longValue / dm.get(u).longValue
-            i += 1
-          }
-          (85L * acc) / 100L
-        })
-        val rows = radj.select(col("dst"), step(col("ins"))).collect()
-        bcR.unpersist(false)
-        val next = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        baseRows.foreach { case (node, _, rst, _) => next.put(node, rst) }
-        rows.foreach { r =>
-          next.put(r.getLong(0), rstMap.get(r.getLong(0)) + r.getLong(1))
-        }
-        converged = next == cur
-        cur = next
-        iter += 1
-      }
-      bcD.unpersist(false)
-      import sess.implicits._
-      return baseRows.toSeq
-        .map { case (node, d, _, _) => (node, d, cur.get(node).longValue) }
+      val dRst = e.sparkSession.sparkContext.broadcast(
+        (ScaleGate.nodeMap(rows)(_.getLong(1)), ScaleGate.nodeMap(rows)(mass(150000000000L))))
+      val (r, _) = try ScaleGate.driverRounds(radj,
+          ScaleGate.nodeMap(rows)(mass(1000000000000L)), maxIterations) { (m, node, ins) =>
+        val (dm, rm) = dRst.value
+        rm.get(node) + 85L * ins.map(u => m.get(u) / dm.get(u)).sum / 100L
+      } finally dRst.unpersist(false)
+      import e.sparkSession.implicits._
+      return rows.toSeq.map(b => (b.getLong(0), b.getLong(1), r.get(b.getLong(0)).longValue))
         .toDF("node", "d", "r")
     }
-    var ranks = base.select(col("node"), col("d"), col("r0").as("r"))
+    // restart masses stay lazy over the pinned base: pinning them in
+    // place of the degrees measured one job more for q134 (17 → 18)
+    val masses = base
+      .crossJoin(broadcast(base.filter(col("seed")).agg(count(lit(1)).as("ns"))))
+      .select(col("node"), col("d"),
+        when(col("seed"), expr("150000000000 div ns")).otherwise(lit(0L)).as("rst"),
+        when(col("seed"), expr("1000000000000 div ns")).otherwise(lit(0L)).as("r0"))
+    var ranks = masses.select(col("node"), col("d"), col("r0").as("r"))
     var iter = 0
     var converged = false
     while (iter < maxIterations && !converged) {
+      // a node with d = 0 is no src of `e`: the join never divides by it
       val acc = e
-        .join(ranks.filter(col("d") > 0).withColumnRenamed("node", "src"), "src")
+        .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst"), expr("r div d").as("contrib"))
         .groupBy(col("dst")).agg(sum(col("contrib")).as("acc"))
-      val step = base
+      val step = masses
         .join(acc, col("node") === col("dst"), "left")
         .select(col("node"), col("d"),
           (col("rst") + expr("(85 * coalesce(acc, 0L)) div 100")).as("r"))
       if (checkConvergence) {
+        // the convergence probe executes the step anyway — pin it so
+        // the probe and the next superstep share one materialization
         val next = TextDedup.materialize(step, checkpointDir)
         converged = next.alias("a")
           .join(ranks.alias("b"), expr("a.node = b.node AND a.r <> b.r"))
           .isEmpty
         ranks = next
-      } else ranks = step
+      } else ranks = step // bounded fixed-round unroll: lazy like q134's
       iter += 1
     }
     ranks
@@ -530,58 +427,31 @@ object Graph {
       if (isLongType(nodes0, "node"))
         ScaleGate.collectUnder(nodes0, driverLoopMaxNodes(nodes0))
       else None
+    // A half-peeled subgraph would silently overstate the core — refuse.
+    val refusal = s"kCore did not reach fixpoint in $maxRounds rounds " +
+      "(peel depth exceeds maxRounds); raise maxRounds"
     driverNodes.foreach { nodeRows =>
-      // Driver-loop peel (r18, the [[labelPropagation]] pattern): the
-      // loop state that matters is the NODE keep-set, which is
-      // node-sized — so instead of materializing the shrinking edge
-      // set + its degree frame every round, pin the FULL adjacency
-      // once and run each round as ONE job: per-row count of the
-      // node's neighbors still in the broadcast keep-set (== its
-      // degree in the keep-induced subgraph), collect node-sized
-      // degrees, shrink the set driver-side. Fixpoint and the
-      // maxRounds refusal are per-round exactly the distributed
-      // loop's; the returned frame is the same (node, degree-within-
-      // fixpoint-subgraph) rows.
+      // Driver-loop peel over the FULL adjacency, pinned once: a node's
+      // value is its degree within the keep set (the nodes whose value
+      // is >= k; every node starts at k), or -1 once dropped. A round
+      // is one distributed peel round: the fixpoint is a round where no
+      // kept node fell to 1..k-1, and a kept node left with no kept
+      // neighbor (0) leaves silently, as it leaves the distributed
+      // loop's edge set — so both regimes return or refuse at the
+      // same maxRounds.
       val adj = TextDedup.materialize(
         e.select(col("u").as("node"), col("v").as("nb"))
           .union(e.select(col("v").as("node"), col("u").as("nb")))
           .groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")),
         checkpointDir)
-      val sess = edges.sparkSession
-      var keep = new java.util.HashSet[java.lang.Long]()
-      nodeRows.foreach(r => keep.add(r.getLong(0)))
-      var round = 0
-      while (round < maxRounds) {
-        val bc = sess.sparkContext.broadcast(keep)
-        val degIn = udf((node: Long, nbs: Seq[Long]) => {
-          val ks = bc.value
-          if (!ks.contains(node)) -1L
-          else {
-            var c = 0L
-            var i = 0
-            while (i < nbs.length) {
-              if (ks.contains(nbs(i))) c += 1
-              i += 1
-            }
-            c
-          }
-        })
-        val rows = adj.select(col("node"), degIn(col("node"), col("nbs")))
-          .collect().filter(_.getLong(1) >= 0)
-        bc.unpersist(false)
-        round += 1
-        if (rows.forall(_.getLong(1) >= k)) {
-          import sess.implicits._
-          return rows.toSeq.map(r => (r.getLong(0), r.getLong(1)))
-            .toDF("node", "degree")
-        }
-        val next = new java.util.HashSet[java.lang.Long]()
-        rows.foreach(r => if (r.getLong(1) >= k) next.add(r.getLong(0)))
-        keep = next
+      val (m, held) = ScaleGate.driverRounds(adj, ScaleGate.nodeMap(nodeRows)(_ => k),
+          maxRounds, (_, next) => !next.values.asScala.exists(v => v > 0 && v < k)) {
+        (m, node, nbs) =>
+          if (m.get(node) < k) -1L else nbs.count(nb => m.get(nb) >= k).toLong
       }
-      throw new IllegalStateException(
-        s"kCore did not reach fixpoint in $maxRounds rounds " +
-          "(peel depth exceeds maxRounds); raise maxRounds")
+      if (!held) throw new IllegalStateException(refusal)
+      m.values.removeIf(_ < k)
+      return ScaleGate.nodeFrame(edges.sparkSession, m, "degree")
     }
     var round = 0
     while (round < maxRounds) {
@@ -609,10 +479,7 @@ object Graph {
         checkpointDir)
       round += 1
     }
-    // A half-peeled subgraph would silently overstate the core — refuse.
-    throw new IllegalStateException(
-      s"kCore did not reach fixpoint in $maxRounds rounds " +
-        "(peel depth exceeds maxRounds); raise maxRounds")
+    throw new IllegalStateException(refusal)
   }
 
   /** Full core decomposition: label EVERY node with its core number
@@ -652,9 +519,8 @@ object Graph {
       assumeCanonical: Boolean = false, maxRounds: Int = 200,
       checkpointDir: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // r19: the nb-repartitioned neighbor pin moves INTO the distributed
-    // branch — the driver-loop regime never joins on nb, so the
-    // repartition exchange + pin were pure waste there. canon is pinned
+    // the nb-repartitioned neighbor pin is built only on the distributed
+    // path: the driver loop never joins on nb. canon is pinned
     // when this operator built it (assumeCanonical callers pass a
     // materialized set — the [[triangleCount]] reuse contract), so each
     // nbrRaw execution is two cheap block reads.
@@ -672,60 +538,30 @@ object Graph {
       if (isLongType(h0, "node"))
         ScaleGate.collectUnder(h0, driverLoopMaxNodes(h0))
       else None
+    val refusal = s"coreness did not reach fixpoint in $maxRounds rounds " +
+      "(propagation depth exceeds maxRounds); raise maxRounds"
     driverH.foreach { hRows =>
-      // Driver-loop fixpoint (r18): the h-vector is node-sized, so the
-      // whole iteration state fits a broadcast map. Each H-application
-      // becomes ONE job — scan the pinned adjacency, compute each
-      // node's h-index from its neighbors' mapped values in a per-row
-      // pass, collect the node-sized result — replacing the per-round
-      // join + window-rank + agg + materialize + sum-probe job chain
-      // (profiled at sf0.1/q179: 87 jobs, wall dominated by scheduling,
-      // task time a fraction). Arithmetic is EXACTLY hStep's: h = max
-      // rank r (neighbors sorted desc) with value_r >= r; convergence
-      // = map equality (≡ the monotone sum compare); maxRounds refusal
-      // contract preserved per-application.
+      // Driver-loop fixpoint: the h-vector is node-sized, so each
+      // H-application is ONE job over the pinned adjacency — profiled at
+      // sf0.1/q179, the distributed chain's 87 jobs were wall dominated
+      // by scheduling, task time a fraction. Arithmetic is EXACTLY
+      // hStep's: h = max rank r (neighbor values sorted desc) with
+      // value_r >= r; map equality ≡ the monotone sum compare.
       val adj = TextDedup.materialize(
         nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")),
         checkpointDir)
-      val sess = edges.sparkSession
-      var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      hRows.foreach(r => cur.put(r.getLong(0), r.getLong(1)))
-      var round = 0
-      while (round < maxRounds) {
-        val bc = sess.sparkContext.broadcast(cur)
-        val step = udf((nbs: Seq[Long]) => {
-          val m = bc.value
-          val arr = new Array[Long](nbs.length)
-          var i = 0
-          while (i < arr.length) { arr(i) = m.get(nbs(i)).longValue; i += 1 }
-          java.util.Arrays.sort(arr)
-          val n = arr.length
-          var hv = 0L
-          var r = 1
-          while (r <= n && arr(n - r) >= r) { hv = r; r += 1 }
-          hv
-        })
-        val rows = adj.select(col("node"), step(col("nbs"))).collect()
-        bc.unpersist(false)
-        val next = new java.util.HashMap[java.lang.Long, java.lang.Long](
-          math.max(16, rows.length * 2))
-        rows.foreach(r => next.put(r.getLong(0), r.getLong(1)))
-        round += 1
-        val converged = next == cur
-        cur = next
-        if (converged) {
-          import sess.implicits._
-          return cur.entrySet().iterator().asScala
-            .map(e => (e.getKey.longValue, e.getValue.longValue)).toSeq
-            .toDF("node", "coreness")
-        }
+      val (m, held) = ScaleGate.driverRounds(adj,
+          ScaleGate.nodeMap(hRows)(_.getLong(1)), maxRounds) { (m, _, nbs) =>
+        val vs = nbs.map(nb => m.get(nb).longValue).toArray
+        java.util.Arrays.sort(vs)
+        var h = 0
+        while (h < vs.length && vs(vs.length - 1 - h) > h) h += 1
+        h.toLong
       }
-      throw new IllegalStateException(
-        s"coreness did not reach fixpoint in $maxRounds rounds " +
-          "(propagation depth exceeds maxRounds); raise maxRounds")
+      // values are only an UPPER bound until the fixpoint — refuse.
+      if (!held) throw new IllegalStateException(refusal)
+      return ScaleGate.nodeFrame(edges.sparkSession, m, "coreness")
     }
-    // distributed regime.
-    var h = TextDedup.materialize(h0, checkpointDir)
     // Static across rounds — pinned with persist(), NOT a checkpoint:
     // an InMemoryRelation REPORTS its hashpartitioning(nb) to the
     // planner, so every round's value join genuinely reuses this one
@@ -755,38 +591,13 @@ object Graph {
         // the round-0 degree is long — the schema must not flip)
         .agg(max(when(col("val") >= col("r"), col("r"))).cast("long").as("h"))
     }
-    // Convergence is a SUM compare, not a join: the h-index sequence is
-    // monotone NON-INCREASING per node (Lü et al. 2016, Thm 1 — h⁰ =
-    // degree, each application can only lower a value), so Σh unchanged
-    // ⟺ no node changed. DECIMAL(38,0) keeps the sum exact at any node
-    // count. TWO H-applications per materialization: the profiled cost
-    // of this loop at bench scale is per-round fixed overhead (planning
-    // + job scheduling — 219 jobs, ~8.3 s build, task time a fraction
-    // of that), so halving the materialization/probe count halves the
-    // loop's latency while every H past the fixpoint is the identity —
-    // same fixpoint, same returned frame (monotonicity also gives
-    // fix(H∘H) = fix(H): no cycles exist on a monotone sequence).
-    def sumH(df: DataFrame): java.math.BigDecimal =
-      df.agg(graft.ext.Exact.decSum(col("h"))).head().getDecimal(0)
-    try {
-      var prevSum = sumH(h)
-      var round = 0
-      while (round < maxRounds) {
-        val next = TextDedup.materialize(hStep(hStep(h)), checkpointDir)
-        h = next
-        round += 2
-        val s = sumH(h)
-        val converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        if (converged)
-          // h is checkpoint-materialized — independent of the pin
-          return h.select(col("node"), col("h").as("coreness"))
-      }
-      // values are only an UPPER bound until the fixpoint — refuse.
-      throw new IllegalStateException(
-        s"coreness did not reach fixpoint in $maxRounds rounds " +
-          "(propagation depth exceeds maxRounds); raise maxRounds")
-    } finally nbr.unpersist(false)
+    // the h-index sequence is monotone NON-INCREASING per node (Lü et
+    // al. 2016, Thm 1 — h⁰ = degree, each application can only lower a
+    // value); the result is checkpoint-materialized, independent of the pin
+    try ScaleGate.monotoneRounds(TextDedup.materialize(h0, checkpointDir), "h",
+        maxRounds, checkpointDir, refusal)(hStep)
+      .select(col("node"), col("h").as("coreness"))
+    finally nbr.unpersist(false)
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.
@@ -827,10 +638,9 @@ object Graph {
       assumeCanonical: Boolean = false, earlyStop: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // r19: the nb-repartitioned neighbor pin moves INTO the distributed
-    // branch, exactly as in [[coreness]] — the driver-loop regime never
-    // joins on nb (profiled at sf0.1/q165: the repartition + pin were
-    // ~0.35 s of pure waste per run).
+    // the nb-repartitioned neighbor pin is built only on the distributed
+    // path, as in [[coreness]]: the driver loop never joins on nb
+    // (profiled at sf0.1/q165, the repartition + pin cost ~0.35 s a run)
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       else TextDedup.materialize(canonicalEdges(edges, srcCol, dstCol),
@@ -847,58 +657,31 @@ object Graph {
         ScaleGate.collectUnder(nodes0, driverLoopMaxNodes(nodes0))
       else None
     driverNodes.foreach { nodeRows =>
-      // Driver-loop fixpoint (r18, the [[coreness]] pattern): the
-      // labeling is node-sized, so each synchronous round is ONE job —
-      // scan the pinned adjacency, per-row argmax of the neighbors'
-      // mapped labels ((count DESC, label ASC), exactly lpaStep's
-      // two-level agg), collect the node-sized result. Replaces the
-      // per-round broadcast join + two aggs + materialize (+ earlyStop
-      // probe join) job chain; round accounting is the EXACT
-      // single-step semantics the oracle unrolls, and earlyStop's
-      // round-changes-nothing test is a free map equality.
+      // Driver-loop rounds: per-row argmax of the neighbors' mapped
+      // labels, (count DESC, label ASC) exactly as lpaStep's two-level
+      // agg; round accounting is the EXACT single-step semantics the
+      // oracle unrolls, and earlyStop's test is map equality.
       val adj = TextDedup.materialize(
         nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")),
         checkpointDir)
-      val sess = edges.sparkSession
-      var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      nodeRows.foreach(r => cur.put(r.getLong(0), r.getLong(0)))
-      var round = 0
-      var converged = false
-      while (round < maxRounds && !converged) {
-        val bc = sess.sparkContext.broadcast(cur)
-        val step = udf((nbs: Seq[Long]) => {
-          val m = bc.value
-          val arr = new Array[Long](nbs.length)
-          var i = 0
-          while (i < arr.length) { arr(i) = m.get(nbs(i)).longValue; i += 1 }
-          java.util.Arrays.sort(arr)
-          // longest run wins; ties keep the SMALLEST label — the
-          // ascending sort visits labels smallest-first and only a
-          // strictly greater count replaces the champion
-          var bestL = arr(0)
-          var bestC = 0
-          var i2 = 0
-          while (i2 < arr.length) {
-            var j = i2
-            while (j < arr.length && arr(j) == arr(i2)) j += 1
-            if (j - i2 > bestC) { bestC = j - i2; bestL = arr(i2) }
-            i2 = j
-          }
-          bestL
-        })
-        val rows = adj.select(col("node"), step(col("nbs"))).collect()
-        bc.unpersist(false)
-        val next = new java.util.HashMap[java.lang.Long, java.lang.Long](
-          math.max(16, rows.length * 2))
-        rows.foreach(r => next.put(r.getLong(0), r.getLong(1)))
-        if (earlyStop) converged = next == cur
-        cur = next
-        round += 1
+      val (m, _) = ScaleGate.driverRounds(adj,
+          ScaleGate.nodeMap(nodeRows)(_.getLong(0)), maxRounds,
+          (cur, next) => earlyStop && next == cur) { (m, _, nbs) =>
+        val ls = nbs.map(nb => m.get(nb).longValue).toArray
+        java.util.Arrays.sort(ls)
+        // longest run wins; ties keep the SMALLEST label — the ascending
+        // sort visits labels smallest-first and only a strictly greater
+        // count replaces the champion
+        var (best, bestC, i) = (ls(0), 0, 0)
+        while (i < ls.length) {
+          var j = i
+          while (j < ls.length && ls(j) == ls(i)) j += 1
+          if (j - i > bestC) { bestC = j - i; best = ls(i) }
+          i = j
+        }
+        best
       }
-      import sess.implicits._
-      return cur.entrySet().iterator().asScala
-        .map(e => (e.getKey.longValue, e.getValue.longValue)).toSeq
-        .toDF("node", "label")
+      return ScaleGate.nodeFrame(edges.sparkSession, m, "label")
     }
     var labels = TextDedup.materialize(
       nodes0.withColumn("label", col("node")), checkpointDir)

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 import graft.functions.TextFns
 
@@ -202,6 +201,11 @@ object TextDedup {
     * reliable `checkpoint()` to that directory instead — the right
     * trade for multi-hour 100 TB runs.
     *
+    * Node universe: `nodes`. A pair that names an id outside it is
+    * ignored, so the components are those of the subgraph `nodes`
+    * induces — the same rows in the driver loop and the distributed
+    * loop.
+    *
     * @param pairs edges (id_a, id_b) — e.g. [[lshCandidates]] /
     *              [[simhashCandidates]] output
     * @param nodes one row per node id (docs without any pair become
@@ -231,55 +235,33 @@ object TextDedup {
       if (Graph.isLongType(nodeIds, "node"))
         ScaleGate.collectUnder(nodeIds, Graph.driverLoopMaxNodes(nodeIds))
       else None
+    // Partially-propagated labels would silently keep extra "unique" docs
+    // downstream — refuse to return them. Diameter > maxRounds means the
+    // pair graph is a long chain, not the near-clique dup clusters this
+    // propagation is sized for; raise maxRounds or use
+    // [[connectedComponentsStar]] (O(log n) rounds on any topology).
+    val refusal = s"connectedComponents did not converge in $maxRounds rounds " +
+      "(graph diameter exceeds maxRounds); raise maxRounds or use " +
+      "connectedComponentsStar"
     driverNodes.foreach { nodeRows =>
-      // Driver-loop fixpoint (r18, the [[Graph.coreness]] pattern):
-      // the component labeling is node-sized, so each min-propagation
-      // round is ONE job — scan the pinned adjacency, per-row
-      // min(own, min(neighbors)) over the broadcast label map, collect
-      // the node-sized result, merge over the full map (nodes without
-      // pairs keep their label, exactly propagate's left join).
-      // Convergence = map equality (≡ the monotone sum compare);
-      // the maxRounds diameter-refusal contract is per-round exact.
+      // Driver-loop rounds: per-row min(own, min(neighbors)) over the
+      // label map. Ids outside the map are skipped and their rows
+      // dropped, exactly propagate's inner join; nodes without pairs
+      // keep their label, exactly its left join.
       val adj = materialize(
-        sym.groupBy(col("a")).agg(collect_list(col("b")).as("nbs")),
+        sym.groupBy(col("a").as("node")).agg(collect_list(col("b")).as("nbs")),
         checkpointDir)
-      val sess = pairs.sparkSession
-      var cur = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      nodeRows.foreach(r => cur.put(r.getLong(0), r.getLong(0)))
-      var round = 0
-      var converged = false
-      while (!converged && round < maxRounds) {
-        val bc = sess.sparkContext.broadcast(cur)
-        val step = udf((node: Long, nbs: Seq[Long]) => {
-          val m = bc.value
-          var best = m.get(node).longValue
-          var i = 0
-          while (i < nbs.length) {
-            val v = m.get(nbs(i)).longValue
-            if (v < best) best = v
-            i += 1
-          }
-          best
-        })
-        val rows = adj
-          .select(col("a"), step(col("a"), col("nbs"))).collect()
-        bc.unpersist(false)
-        val next = new java.util.HashMap[java.lang.Long, java.lang.Long](cur)
-        rows.foreach(r => next.put(r.getLong(0), r.getLong(1)))
-        converged = next == cur
-        cur = next
-        round += 1
+      val (m, held) = ScaleGate.driverRounds(adj,
+          ScaleGate.nodeMap(nodeRows)(_.getLong(0)), maxRounds) { (m, node, nbs) =>
+        nbs.foldLeft(m.getOrDefault(node, node).longValue) { (best, nb) =>
+          val v = m.get(nb)
+          if (v != null && v < best) v.longValue else best
+        }
       }
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds " +
-          "(graph diameter exceeds maxRounds); raise maxRounds or use " +
-          "connectedComponentsStar")
-      import sess.implicits._
-      return cur.entrySet().iterator().asScala
-        .map(e => (e.getKey.longValue, e.getValue.longValue)).toSeq
-        .toDF("node", "component")
+      if (!held) throw new IllegalStateException(refusal)
+      return ScaleGate.nodeFrame(pairs.sparkSession, m, "component")
     }
-    var labels = materialize(
+    val labels = materialize(
       nodeIds.withColumn("component", col("node")), checkpointDir)
     // node-sized label frame vs edge-sized sym: broadcast-gate the
     // per-round joins (guide §3.1) — the localCheckpoint's unknown stats
@@ -299,37 +281,9 @@ object TextDedup {
           least(col("component"), coalesce(col("nb"), col("component")))
             .as("component"))
     }
-    // Convergence is a SUM compare: labels are min-ids, monotone
-    // NON-INCREASING per node, so Σcomponent unchanged ⟺ no label
-    // changed (DECIMAL(38,0) keeps the sum exact at any node count /
-    // id range). TWO propagation rounds per materialization: the
-    // loop's profiled cost at bench scale is per-round fixed overhead
-    // (planning + job scheduling), halved by the doubled step, while
-    // rounds past the fixpoint are identities (monotonicity ⇒ no
-    // cycles ⇒ fix(H∘H) = fix(H)) — same labels, and the diameter
-    // guard below still fires if maxRounds is exceeded.
-    def sumLabels(df: DataFrame): java.math.BigDecimal =
-      df.agg(Exact.decSum(col("component"))).head().getDecimal(0)
-    var prevSum = sumLabels(labels)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      labels = materialize(propagate(propagate(labels)), checkpointDir)
-      round += 2
-      val s = sumLabels(labels)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-    }
-    // Partially-propagated labels would silently keep extra "unique" docs
-    // downstream — refuse to return them. Diameter > maxRounds means the
-    // pair graph is a long chain, not the near-clique dup clusters this
-    // propagation is sized for; raise maxRounds or use
-    // [[connectedComponentsStar]] (O(log n) rounds on any topology).
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxRounds rounds " +
-        "(graph diameter exceeds maxRounds); raise maxRounds or use " +
-        "connectedComponentsStar")
-    labels
+    // labels are min-ids, monotone NON-INCREASING per node
+    ScaleGate.monotoneRounds(labels, "component", maxRounds, checkpointDir,
+      refusal)(propagate)
   }
 
   /** Connected components via alternating large-star / small-star

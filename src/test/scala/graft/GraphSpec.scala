@@ -111,6 +111,30 @@ class GraphSpec extends SparkSpec {
     assert(Graph.kCore(toDf(Seq.empty[(Long, Long)]), 2).isEmpty)
   }
 
+  test("kCore: maxRounds refusal round, driver loop and forced distributed") {
+    // K4 plus the 12-node path at k = 2: 12 peel rounds, then the round
+    // that finds nothing below k — 13 rounds return, 12 refuse. A star
+    // at k = 2 drops its leaves, then its center has no edge left: the
+    // distributed loop's edge set is empty on round 2, and so is the
+    // driver loop's keep set.
+    val k4 = for (a <- 0L to 3L; b <- (a + 1) to 3L) yield (a, b)
+    val path = (0 until 12).map(i => (if (i == 0) 3L else 100L + i - 1, 100L + i))
+    val star = Seq((0L, 1L), (0L, 2L), (0L, 3L))
+    def core(es: Seq[(Long, Long)], rounds: Int): Map[Long, Long] =
+      Graph.kCore(toDf(es), 2, maxRounds = rounds).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (bound <- Seq(None, Some(0L))) {
+      bound.foreach(b => spark.conf.set("graft.driverLoopMaxNodes", b.toString))
+      try {
+        assert(core(k4 ++ path, 13) === (0L to 3L).map(_ -> 3L).toMap,
+          s"bound $bound")
+        intercept[IllegalStateException](core(k4 ++ path, 12))
+        assert(core(star, 2) === Map.empty[Long, Long], s"bound $bound")
+        intercept[IllegalStateException](core(star, 1))
+      } finally spark.conf.unset("graft.driverLoopMaxNodes")
+    }
+  }
+
   /** Definitional coreness: max k such that the node survives the
     * brute-force k-peel. */
   private def bruteCoreness(es: Set[(Long, Long)]): Map[Long, Long] =

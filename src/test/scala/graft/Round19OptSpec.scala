@@ -193,6 +193,35 @@ class Round19OptSpec extends SparkSpec {
     val nSrc = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
     gateSweep("pageRank", nSrc, dist)(run())
     assert(run() === dist, "pageRank at the default bound")
+    // pageRank is personalizedPageRank with every src node seeded, with
+    // convergence on and off, in both regimes; on no edges it has no rows
+    val srcs = df.select(col("src").as("node")).distinct()
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for (conv <- Seq(true, false)) {
+      def pair(): (Set[(Long, Long, Long)], Set[(Long, Long, Long)], Int) = (
+        triples(graft.ext.Graph.pageRank(df, maxIterations = 8,
+          checkConvergence = conv).collect()),
+        triples(graft.ext.Graph.personalizedPageRank(df, srcs,
+          maxIterations = 8, checkConvergence = conv).collect()),
+        graft.ext.Graph.pageRank(none, checkConvergence = conv).collect().length)
+      val (pr, ppr, empty) = pair()
+      assert(pr.size === nSrc && pr === ppr && empty === 0, s"conv $conv")
+      assert(forced(pair()) === ((pr, pr, 0)), s"conv $conv forced")
+    }
+  }
+
+  test("connectedComponents: a pair naming an id outside nodes is " +
+    "ignored, at the default bound and forced distributed") {
+    import spark.implicits._
+    // 99 joins 2 to 3 and 97/98 pair only with each other; none is a node
+    val ccPairs = Seq((1L, 2L), (2L, 99L), (99L, 3L), (4L, 5L), (98L, 97L))
+      .toDF("id_a", "id_b")
+    val nodeIds = (1L to 5L).toDF("id")
+    def cc(): Set[(Long, Long)] = pairs(graft.ext.TextDedup
+      .connectedComponents(ccPairs, nodeIds).collect())
+    val expected = Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L), (5L, 4L))
+    assert(cc() === expected, "default bound")
+    assert(forced(cc()) === expected, "forced distributed")
   }
 
   test("StreamNovelty.bloomWords aggregate == packedGlobal(batchWords) " +

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.model.Schemas
 
@@ -33,6 +34,8 @@ import graft.model.Schemas
   * numbers from the in-memory string without any conf.
   */
 object SnapshotJson {
+
+  private val FetchedAtOnly = new StructType().add("_fetched_at", StringType)
 
   /** Read snapshot files (paths, directories or globs) into
     * (`_fetched_at`, `data`, `_file`), one row per non-empty file. */
@@ -107,13 +110,17 @@ object SnapshotJson {
 
   /** (`_fetched_at`, `_file`) of the latest `count` snapshot files in
     * `dir`, oldest first. Order is (`_fetched_at`, file name): files with
-    * equal `_fetched_at` keep file-name order. */
+    * equal `_fetched_at` keep file-name order. Each file is parsed
+    * against a schema of `_fetched_at` alone, so no place or bike is
+    * built; every file in `dir` is still read, as the reference's
+    * `get_latest_files` opens each one. */
   def latestSnapshots(spark: SparkSession, dir: String,
       count: Int): IndexedSeq[(String, String)] =
-    read(spark, s"$dir/bike_rides_*.json")
-      .select(col("_file"), col("_fetched_at"))
+    spark.read.option("wholetext", "true").text(s"$dir/bike_rides_*.json")
+      .select(from_json(col("value"), FetchedAtOnly).getField("_fetched_at"),
+        input_file_name())
       .collect()
-      .map(r => (Option(r.getString(1)).getOrElse(""), r.getString(0)))
+      .map(r => (Option(r.getString(0)).getOrElse(""), r.getString(1)))
       .sorted
       .takeRight(count)
       .toIndexedSeq

@@ -71,31 +71,42 @@ class DailyMetricsSpec extends SparkSpec {
       m.busiest_stations_top5.isEmpty && m.top_routes_top5.isEmpty)
   }
 
-  test("forDay on the store filters on the ride_date partition") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  /** Scans of the store at `store` in the plans of the queries `f` runs
+    * (`f` builds its own frames, so its plans come from a listener). */
+  private def storeScans(store: String)(f: => Unit) = {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val store = tmpDir("forday") + "/bike_rides"
-    graft.store.RidesTable.append(spark, fixture, store)
-    val table = graft.store.RidesTable.read(spark, store)
-
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val m = try DailyMetrics.forDay(table, "2025-04-07") finally {
-      // listener events arrive asynchronously: wait for forDay's query
+    try f finally {
+      // listener events arrive asynchronously: wait for f's query
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       spark.listenerManager.unregister(listener)
     }
-    object Plans extends AdaptiveSparkPlanHelper
-    val scans = seen.asScala.toSeq.flatMap(qe => Plans.collect(qe.executedPlan) {
+    seen.asScala.toSeq.flatMap(qe => scansIn(store, qe.executedPlan))
+  }
+
+  private def scansIn(store: String, plan: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Plans.collect(plan) {
       case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
-        _.toString.endsWith("bike_rides")) => s
-    })
+        _.toString.endsWith(store.split('/').last)) => s
+    }
+  }
+
+  test("forDay on the store filters on the ride_date partition") {
+    val store = tmpDir("forday") + "/bike_rides"
+    graft.store.RidesTable.append(spark, fixture, store)
+    val table = graft.store.RidesTable.read(spark, store)
+
+    var m: graft.model.DayMetrics = null
+    val scans = storeScans(store) { m = DailyMetrics.forDay(table, "2025-04-07") }
     assert(scans.nonEmpty, "forDay's query scans the store")
     scans.foreach { s =>
       assert(s.partitionFilters.exists(_.references.exists(_.name == "ride_date")),
@@ -105,11 +116,54 @@ class DailyMetricsSpec extends SparkSpec {
     assert(m === DailyMetrics.forDay(fixture, "2025-04-07"))
   }
 
+  test("forDay and every range request scan the store once; latestDate reads no data column") {
+    import graft.metrics.RangeMetrics
+    val store = tmpDir("onescan") + "/bike_rides"
+    graft.store.RidesTable.append(spark, fixture, store)
+    val table = graft.store.RidesTable.read(spark, store)
+
+    assert(storeScans(store) { DailyMetrics.forDay(table, "2025-04-07") }.size === 1)
+
+    var latest: Option[String] = None
+    val dateScans = storeScans(store) { latest = DailyMetrics.latestDate(table) }
+    assert(latest === Some("2025-04-07"))
+    assert(dateScans.size === 1)
+    assert(dateScans.head.requiredSchema.isEmpty, dateScans.head.toString)
+
+    val daily = DailyMetrics.allDays(graft.store.RidesTable.read(spark, store))
+    Seq(
+      "series" -> RangeMetrics.series(daily, "2025-04-01", "2025-04-30", "total_rides"),
+      "histogramAvg" -> RangeMetrics.histogramAvg(daily, "2025-04-01", "2025-04-30"),
+      "busiestStations" -> RangeMetrics.busiestStations(daily, "2025-04-01", "2025-04-30"),
+      "topRoutes" -> RangeMetrics.topRoutes(daily, "2025-04-01", "2025-04-30")
+    ).foreach { case (kind, df) =>
+      assert(df.collect().nonEmpty, kind)
+      val plan = df.queryExecution.executedPlan
+      assert(scansIn(store, plan).size === 1, s"$kind: $plan")
+    }
+  }
+
   test("allDays equals a plain-Scala tally on seeded random rides") {
     import java.time.{LocalDateTime, ZoneOffset}
     import spark.implicits._
     val stations = Seq("A", "B", "C", "D", "E", "F", "G")
     val days = (1 to 4).map(d => LocalDateTime.of(2025, 3, d, 0, 0))
+    // 2025-03-10: eight stations, six of them tied at rank 3–8, and seven
+    // routes tied at rank 2–8; 2025-03-11: no ride names a real station,
+    // so both lists are empty under a non-empty histogram
+    def edgeRide(uid: Long, at: String, from: Option[String], to: Option[String]) =
+      Ride(Some(uid), Some("b"), Some(Timestamp.valueOf(at)), None, from, to,
+        Some(10), None, None, None, None, None)
+    val ring = Seq("S1", "S2", "S3", "S4", "Ś5", "S6", "S7", "S8")
+    val edgeDays =
+      edgeRide(10000, "2025-03-10 08:00:00", Some("S1"), Some("S2")) +:
+        ring.indices.map(i => edgeRide(10001 + i, s"2025-03-10 0${i % 3 + 7}:30:00",
+          Some(ring(i)), Some(ring((i + 1) % ring.size)))) ++:
+        Seq(None -> Some(DailyMetrics.OutsideStation),
+          Some(DailyMetrics.OutsideStation) -> None, None -> None,
+          Some(DailyMetrics.OutsideStation) -> Some(DailyMetrics.OutsideStation))
+          .zipWithIndex.map { case ((from, to), i) =>
+            edgeRide(10100 + i, s"2025-03-11 1${i}:05:00", from, to) }
     (1 to 4).foreach { seed =>
       val r = new scala.util.Random(seed)
       // each day gets rides in only a few hours, so most hours are absent
@@ -128,7 +182,7 @@ class DailyMetricsSpec extends SparkSpec {
         Ride(Some(uid.toLong), Some("b"),
           if (r.nextInt(50) == 0) None else Some(Timestamp.from(start.toInstant(ZoneOffset.UTC))),
           None, from, to, Some(r.nextInt(30)), None, None, None, None, None)
-      }
+      } ++ edgeDays
 
       def utc(x: Ride) = x.start_time.get.toInstant.atOffset(ZoneOffset.UTC)
       val counted = rides.filter(x => x.duration.exists(_ > 2) && x.start_time.isDefined)
@@ -153,12 +207,23 @@ class DailyMetricsSpec extends SparkSpec {
           hist, busiest, routes)
       }
 
-      val got = DailyMetrics.allDaysTyped(rides.toDF()).collect().map(m =>
-        m.date -> (m.total_rides, m.total_duration_min, m.round_trips,
-          m.left_outside_station, m.bike_rentals_histogram,
-          m.busiest_stations_top5, m.top_routes_top5)).toMap
-      assert(got === want, s"seed $seed")
+      // the repartitioned copy splits every day over three tasks, so the
+      // day's partial aggregation buffers merge in the final aggregation
+      Seq("as built" -> rides.toDF(), "repartition(3)" -> rides.toDF().repartition(3))
+        .foreach { case (copy, df) =>
+          val got = DailyMetrics.allDaysTyped(df).collect().map(m =>
+            m.date -> (m.total_rides, m.total_duration_min, m.round_trips,
+              m.left_outside_station, m.bike_rentals_histogram,
+              m.busiest_stations_top5, m.top_routes_top5)).toMap
+          assert(got === want, s"seed $seed, $copy")
+        }
       assert(want.values.exists(_._5.size < 24), s"seed $seed covers missing hours")
+      val tied = want("2025-03-10")
+      assert(tied._6.map(_.station) === Seq("S1", "S2", "S3", "S4", "S6"))
+      assert(tied._7.map(r => r.start_station -> r.rides) ===
+        Seq("S1" -> 2L, "S2" -> 1L, "S3" -> 1L, "S4" -> 1L, "S6" -> 1L))
+      val stationless = want("2025-03-11")
+      assert(stationless._5.nonEmpty && stationless._6.isEmpty && stationless._7.isEmpty)
     }
   }
 

@@ -107,7 +107,7 @@ object Eval {
   private[graft] def withBestColumnForm(emb: DataFrame, vecCol: String,
       cents: Array[(Int, Array[Float])]): DataFrame = {
     val scores = cents.map { case (lab, c) =>
-      struct(VectorFns.cosine(col(vecCol), centroidLit(c)).as("score"),
+      struct(VectorFns.cosine(col(vecCol), VecOps.litF(c)).as("score"),
         lit(lab).as("pred"))
     }
     emb.withColumn("__best", greatest(scores.toSeq: _*))
@@ -150,10 +150,6 @@ object Eval {
     df.select((lit(r.toLong) + lit(2L) * agreePairs).as("s2i"))
       .agg(Exact.decSum(col("s2i")).as("s2"), count(lit(1)).as("n_items"))
   }
-
-  private def centroidLit(c: Array[Float]): Column = VecOps.litF(c)
-
-  private def selfDot(c: Array[Float]): Double = VecOps.seqDot(c, c)
 
   /** Exact confusion matrix: one row per (label, pred) pair that
     * occurs, with its count — the canonical classification read-out
@@ -307,8 +303,8 @@ object Eval {
       "silhouette needs at least two label groups")
     val vv = VectorFns.dot(col(vecCol), col(vecCol))
     def d2(c: Array[Float]): Column =
-      greatest(vv - lit(2.0) * VectorFns.dot(col(vecCol), centroidLit(c))
-        + lit(selfDot(c)), lit(0.0))
+      greatest(vv - lit(2.0) * VectorFns.dot(col(vecCol), VecOps.litF(c))
+        + lit(VecOps.seqDot(c, c)), lit(0.0))
     val lab = col(labelCol).cast("int")
     // own distance: exactly one branch matches
     val a2 = coalesce(cents.map { case (l, c) =>

@@ -9,8 +9,8 @@ import scala.jdk.CollectionConverters._
   * production graph job needs that a fixed-depth query cannot provide:
   *
   *  - **fixpoint iteration** ([[kCore]] peels until NOTHING changes,
-  *    with the same convergence guard + `checkpointDir` durability
-  *    pattern as [[TextDedup.connectedComponents]]);
+  *    with the same convergence guard and per-round pinning
+  *    ([[ScaleGate.materialize]]) as [[TextDedup.connectedComponents]]);
   *  - **injective orientation keys** ([[triangleCount]] orders nodes by
   *    `struct(degree, id)` — lexicographic struct comparison — never an
   *    arithmetic `d*C + id` encoding, which silently conflates distinct
@@ -121,19 +121,15 @@ object Graph {
     *   its own canonicalize+checkpoint pass (q152 passes its
     *   localCheckpointed edge set); with false, the pair list is
     *   normalized and pinned here
-    * @param checkpointDir reliable-checkpoint dir for the reused
-    *   intermediates; None = localCheckpoint
     * @return one row: (n_triangles)
     */
   def triangleCount(edges: DataFrame,
       srcCol: String = "u", dstCol: String = "v",
-      assumeCanonical: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame = {
     // reused 3×: degrees + both wedge-join sides feed off the same set
     val e =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      else TextDedup.materialize(canonicalEdges(edges, srcCol, dstCol),
-        checkpointDir)
+      else ScaleGate.materialize(canonicalEdges(edges, srcCol, dstCol))
     val deg = degrees(e)
     // ONE bounded scalar read over the pinned edge set picks the key
     // layout: the narrow key needs ids in [0, maxId] (injectivity +
@@ -168,13 +164,12 @@ object Graph {
         ordOf(col("degree"), col("node")).as("ou"))), "u")
       .join(maybeB(deg.select(col("node").as("v"),
         ordOf(col("degree"), col("node")).as("ov"))), "v")
-    val oriented = TextDedup.materialize(
+    val oriented = ScaleGate.materialize(
       withOrd.select(
           when(col("ou") < col("ov"),
             struct(col("ou").as("lo"), col("ov").as("hi")))
             .otherwise(struct(col("ov").as("lo"), col("ou").as("hi"))).as("e"))
-        .select(col("e.lo"), col("e.hi")),
-      checkpointDir)
+        .select(col("e.lo"), col("e.hi")))
     if (fitsLong) {
       // Adjacency-intersection close (r18, guide §1.2 step 2 — fix the
       // per-task work once the shape is right): the wedge formulation
@@ -252,21 +247,19 @@ object Graph {
     * superstep's edge-side join exchange is pre-satisfied — only the
     * (node-sized) rank frame and the dst aggregation shuffle per step;
     * degrees and N are computed once. State pinned per step
-    * (localCheckpoint or reliable `checkpointDir`).
+    * ([[ScaleGate.materialize]]).
     *
     * @return (node, d, r): out-degree and rank in parts-per-trillion
     */
   def pageRank(edges: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
-      maxIterations: Int = 20, checkConvergence: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIterations: Int = 20, checkConvergence: Boolean = true): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    val e = edgesBySrc(edges, srcCol, dstCol, checkpointDir)
-    val deg = TextDedup.materialize(
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")),
-      checkpointDir)
+    val e = edgesBySrc(edges, srcCol, dstCol)
+    val deg = ScaleGate.materialize(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")))
     supersteps(e, deg.withColumn("seed", lit(true)), maxIterations,
-      checkConvergence, checkpointDir)
+      checkConvergence)
   }
 
   /** Personalized PageRank — [[pageRank]] with the restart mass
@@ -295,28 +288,25 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node",
-      maxIterations: Int = 20, checkConvergence: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIterations: Int = 20, checkConvergence: Boolean = true): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    val e = edgesBySrc(edges, srcCol, dstCol, checkpointDir)
+    val e = edgesBySrc(edges, srcCol, dstCol)
     val seedSet = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("seed", lit(true))
-    val base = TextDedup.materialize(
+    val base = ScaleGate.materialize(
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
         .join(seedSet, Seq("node"), "full_outer")
         .select(col("node"), coalesce(col("d"), lit(0L)).as("d"),
-          col("seed").isNotNull.as("seed")),
-      checkpointDir)
-    supersteps(e, base, maxIterations, checkConvergence, checkpointDir)
+          col("seed").isNotNull.as("seed")))
+    supersteps(e, base, maxIterations, checkConvergence)
   }
 
   /** The (src, dst) edge list repartitioned on src and pinned. */
-  private def edgesBySrc(edges: DataFrame, srcCol: String, dstCol: String,
-      checkpointDir: Option[String]): DataFrame =
-    TextDedup.materialize(
+  private def edgesBySrc(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    ScaleGate.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .repartition(col("src")),
-      checkpointDir)
+        .repartition(col("src")))
 
   /** The PageRank superstep loop over the pinned edges `e` and the node
     * universe `base (node, d, seed)`, built over pinned frames. Each of
@@ -325,7 +315,7 @@ object Graph {
     * superstep is `r' = rst + (85 · Σ_{in-edges} r div d) div 100`; one
     * join (edges ⋈ ranks) + one dst aggregation when distributed. */
   private def supersteps(e: DataFrame, base: DataFrame, maxIterations: Int,
-      checkConvergence: Boolean, checkpointDir: Option[String]): DataFrame = {
+      checkConvergence: Boolean): DataFrame = {
     // driver loop ONLY in convergence mode. The fixed-round mode plans
     // ONE lazy unrolled superstep chain with no per-round jobs at all —
     // measured FASTER than the driver loop's per-round collect
@@ -341,10 +331,9 @@ object Graph {
       def mass(total: Long)(b: Row): Long = if (b.getBoolean(2)) total / nSeeds else 0L
       // reverse adjacency over the whole universe: a node without
       // in-edges gets empty `nbs` and so its restart mass
-      val radj = TextDedup.materialize(
+      val radj = ScaleGate.materialize(
         base.select(col("node").as("dst")).join(e, Seq("dst"), "left")
-          .groupBy(col("dst").as("node")).agg(collect_list(col("src")).as("nbs")),
-        checkpointDir)
+          .groupBy(col("dst").as("node")).agg(collect_list(col("src")).as("nbs")))
       val dRst = e.sparkSession.sparkContext.broadcast(
         (ScaleGate.nodeMap(rows)(_.getLong(1)), ScaleGate.nodeMap(rows)(mass(150000000000L))))
       val (r, _) = try ScaleGate.driverRounds(radj,
@@ -379,7 +368,7 @@ object Graph {
       if (checkConvergence) {
         // the convergence probe executes the step anyway — pin it so
         // the probe and the next superstep share one materialization
-        val next = TextDedup.materialize(step, checkpointDir)
+        val next = ScaleGate.materialize(step)
         converged = next.alias("a")
           .join(ranks.alias("b"), expr("a.node = b.node AND a.r <> b.r"))
           .isEmpty
@@ -399,10 +388,10 @@ object Graph {
     * actually gets.
     *
     * Scale shape: each round is one degree agg + two semi joins on a
-    * SHRINKING edge set; state is pinned per round (localCheckpoint, or
-    * reliable `checkpoint()` via `checkpointDir` for multi-hour runs) so
-    * plans don't grow with rounds. Convergence is a filter on the
-    * materialized degree frame — no extra join. Rounds needed equal the
+    * SHRINKING edge set; state is pinned per round
+    * ([[ScaleGate.materialize]]) so plans don't grow with rounds.
+    * Convergence is a filter on the materialized degree frame — no
+    * extra join. Rounds needed equal the
     * peel depth of the graph (typically small); a graph that somehow
     * exceeds `maxRounds` raises rather than returning a half-peeled
     * subgraph.
@@ -412,13 +401,12 @@ object Graph {
     */
   def kCore(edges: DataFrame, k: Int,
       srcCol: String = "u", dstCol: String = "v",
-      assumeCanonical: Boolean = false, maxRounds: Int = 100,
-      checkpointDir: Option[String] = None): DataFrame = {
+      assumeCanonical: Boolean = false, maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       else canonicalEdges(edges, srcCol, dstCol)
-    var e = TextDedup.materialize(canon, checkpointDir)
+    var e = ScaleGate.materialize(canon)
     // ONE bounded collect of the node ids answers the gate and seeds the
     // driver loop ([[ScaleGate.collectUnder]]); the degree frame is
     // materialized only on the distributed path
@@ -439,11 +427,10 @@ object Graph {
       // neighbor (0) leaves silently, as it leaves the distributed
       // loop's edge set — so both regimes return or refuse at the
       // same maxRounds.
-      val adj = TextDedup.materialize(
+      val adj = ScaleGate.materialize(
         e.select(col("u").as("node"), col("v").as("nb"))
           .union(e.select(col("v").as("node"), col("u").as("nb")))
-          .groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")),
-        checkpointDir)
+          .groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")))
       val (m, held) = ScaleGate.driverRounds(adj, ScaleGate.nodeMap(nodeRows)(_ => k),
           maxRounds, (_, next) => !next.values.asScala.exists(v => v > 0 && v < k)) {
         (m, node, nbs) =>
@@ -455,7 +442,7 @@ object Graph {
     }
     var round = 0
     while (round < maxRounds) {
-      val deg = TextDedup.materialize(degrees(e), checkpointDir)
+      val deg = ScaleGate.materialize(degrees(e))
       // ONE scalar read answers both loop questions — fixpoint ("any
       // node below k?", the old isEmpty probe) AND the node count that
       // gates the keep-list join strategy below (guide §3.1): a
@@ -472,11 +459,10 @@ object Graph {
       val keep = deg.filter(col("degree") >= k)
       def maybeB(df: DataFrame): DataFrame =
         if (nNodes <= broadcastMaxEdges(deg)) broadcast(df) else df
-      e = TextDedup.materialize(
+      e = ScaleGate.materialize(
         e.join(maybeB(keep.select(col("node").as("u"))), Seq("u"), "left_semi")
           .join(maybeB(keep.select(col("node").as("v"))), Seq("v"), "left_semi")
-          .select(col("u"), col("v")),
-        checkpointDir)
+          .select(col("u"), col("v")))
       round += 1
     }
     throw new IllegalStateException(refusal)
@@ -516,8 +502,7 @@ object Graph {
     */
   def coreness(edges: DataFrame,
       srcCol: String = "u", dstCol: String = "v",
-      assumeCanonical: Boolean = false, maxRounds: Int = 200,
-      checkpointDir: Option[String] = None): DataFrame = {
+      assumeCanonical: Boolean = false, maxRounds: Int = 200): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the nb-repartitioned neighbor pin is built only on the distributed
     // path: the driver loop never joins on nb. canon is pinned
@@ -526,8 +511,7 @@ object Graph {
     // nbrRaw execution is two cheap block reads.
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      else TextDedup.materialize(canonicalEdges(edges, srcCol, dstCol),
-        checkpointDir)
+      else ScaleGate.materialize(canonicalEdges(edges, srcCol, dstCol))
     val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
       .union(canon.select(col("v").as("node"), col("u").as("nb")))
     val h0 = nbrRaw.groupBy(col("node")).agg(count(lit(1)).as("h"))
@@ -547,9 +531,8 @@ object Graph {
       // by scheduling, task time a fraction. Arithmetic is EXACTLY
       // hStep's: h = max rank r (neighbor values sorted desc) with
       // value_r >= r; map equality ≡ the monotone sum compare.
-      val adj = TextDedup.materialize(
-        nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")),
-        checkpointDir)
+      val adj = ScaleGate.materialize(
+        nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")))
       val (m, held) = ScaleGate.driverRounds(adj,
           ScaleGate.nodeMap(hRows)(_.getLong(1)), maxRounds) { (m, _, nbs) =>
         val vs = nbs.map(nb => m.get(nb).longValue).toArray
@@ -570,7 +553,7 @@ object Graph {
     // H-application (visible in the r19 forced plan dumps). Lineage
     // truncation is not needed here: nbr is built once and never
     // rewritten (unlike the loop STATE frames, which stay on
-    // [[TextDedup.materialize]]).
+    // [[ScaleGate.materialize]]).
     val nbr = nbrRaw.repartition(col("nb")).persist()
     def hStep(cur: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("node")).orderBy(col("val").desc)
@@ -594,8 +577,8 @@ object Graph {
     // the h-index sequence is monotone NON-INCREASING per node (Lü et
     // al. 2016, Thm 1 — h⁰ = degree, each application can only lower a
     // value); the result is checkpoint-materialized, independent of the pin
-    try ScaleGate.monotoneRounds(TextDedup.materialize(h0, checkpointDir), "h",
-        maxRounds, checkpointDir, refusal)(hStep)
+    try ScaleGate.monotoneRounds(ScaleGate.materialize(h0), "h",
+        maxRounds, refusal)(hStep)
       .select(col("node"), col("h").as("coreness"))
     finally nbr.unpersist(false)
   }
@@ -626,8 +609,8 @@ object Graph {
     * Scale shape: one keyed join (neighbor list ⋈ labels) + one
     * (node, label) count agg + one node-KEYED window argmax per round —
     * no global window, no driver data. The neighbor list is built and
-    * pinned once; per-round state is pinned (localCheckpoint, or
-    * reliable `checkpoint()` via `checkpointDir`). The early-stop probe
+    * pinned once; per-round state is pinned
+    * ([[ScaleGate.materialize]]). The early-stop probe
     * pins the step it executes, so probe + next round share one
     * materialization (the [[pageRank]] pattern).
     *
@@ -635,16 +618,14 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, maxRounds: Int = 10,
       srcCol: String = "u", dstCol: String = "v",
-      assumeCanonical: Boolean = false, earlyStop: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      assumeCanonical: Boolean = false, earlyStop: Boolean = true): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     // the nb-repartitioned neighbor pin is built only on the distributed
     // path, as in [[coreness]]: the driver loop never joins on nb
     // (profiled at sf0.1/q165, the repartition + pin cost ~0.35 s a run)
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      else TextDedup.materialize(canonicalEdges(edges, srcCol, dstCol),
-        checkpointDir)
+      else ScaleGate.materialize(canonicalEdges(edges, srcCol, dstCol))
     val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
       .union(canon.select(col("v").as("node"), col("u").as("nb")))
     // ONE bounded collect of the node ids answers the gate and seeds the
@@ -661,9 +642,8 @@ object Graph {
       // labels, (count DESC, label ASC) exactly as lpaStep's two-level
       // agg; round accounting is the EXACT single-step semantics the
       // oracle unrolls, and earlyStop's test is map equality.
-      val adj = TextDedup.materialize(
-        nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")),
-        checkpointDir)
+      val adj = ScaleGate.materialize(
+        nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")))
       val (m, _) = ScaleGate.driverRounds(adj,
           ScaleGate.nodeMap(nodeRows)(_.getLong(0)), maxRounds,
           (cur, next) => earlyStop && next == cur) { (m, _, nbs) =>
@@ -683,8 +663,8 @@ object Graph {
       }
       return ScaleGate.nodeFrame(edges.sparkSession, m, "label")
     }
-    var labels = TextDedup.materialize(
-      nodes0.withColumn("label", col("node")), checkpointDir)
+    var labels = ScaleGate.materialize(
+      nodes0.withColumn("label", col("node")))
     // distributed regime: label-join exchange pre-satisfied by pinning
     // the neighbor list partitioned on the join key
     // static across rounds — persist() pin, NOT a checkpoint: keeps
@@ -720,12 +700,11 @@ object Graph {
       var round = 0
       var converged = false
       if (maxRounds % 2 == 1) {
-        labels = TextDedup.materialize(lpaStep(labels), checkpointDir)
+        labels = ScaleGate.materialize(lpaStep(labels))
         round = 1
       }
       while (round < maxRounds && !converged) {
-        val next = TextDedup.materialize(lpaStep(lpaStep(labels)),
-          checkpointDir)
+        val next = ScaleGate.materialize(lpaStep(lpaStep(labels)))
         if (earlyStop)
           converged = next.alias("a")
             .join(labels.alias("b").hint("shuffle_hash"),

@@ -244,8 +244,7 @@ object Retrieval {
   def mmrSelect(candidates: DataFrame, sims: DataFrame,
       idCol: String, relCol: String,
       aCol: String = "a", bCol: String = "b", simCol: String = "sim",
-      k: Int = 10, lamNum: Int = 7, lamDen: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame = {
+      k: Int = 10, lamNum: Int = 7, lamDen: Int = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lamNum >= 1 && lamNum <= lamDen, s"need 0 < lamNum/lamDen <= 1")
     val candSel = candidates.select(col(idCol).as("id"), col(relCol).as("rel"))
@@ -321,8 +320,8 @@ object Retrieval {
       import sess.implicits._
       return outRows.toDF("rank", "id", "rel", "maxsim", "mmr_scaled")
     }
-    val cand = TextDedup.materialize(candSel, checkpointDir)
-    val sym = TextDedup.materialize(symSel, checkpointDir)
+    val cand = ScaleGate.materialize(candSel)
+    val sym = ScaleGate.materialize(symSel)
     var out = Seq.empty[DataFrame]
     var chosen: Option[DataFrame] = None
     var nChosen = 0
@@ -354,11 +353,10 @@ object Retrieval {
                 lit((lamDen - lamNum).toLong) * coalesce(msAdj, lit(0L)))
                 .as("score"))
       }
-      val win = TextDedup.materialize(
+      val win = ScaleGate.materialize(
         scored.orderBy(col("score").desc, col("id").asc).limit(1)
           .select(lit(r.toLong).as("rank"), col("id"), col("rel"),
-            col("maxsim"), col("score").as("mmr_scaled")),
-        checkpointDir)
+            col("maxsim"), col("score").as("mmr_scaled")))
       if (win.isEmpty) exhausted = true
       else {
         out = out :+ win

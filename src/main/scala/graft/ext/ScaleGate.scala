@@ -32,8 +32,23 @@ import scala.jdk.CollectionConverters._
   *    integer sum, CC's min label).
   *  - [[monotoneRounds]], the distributed loop of a monotone fixpoint,
   *    two steps per materialization: distributed coreness and
-  *    [[TextDedup.connectedComponents]]. */
+  *    [[TextDedup.connectedComponents]].
+  *  - [[materialize]], how the loop operators in this package pin
+  *    their per-round state. */
 object ScaleGate {
+
+  /** Pin a loop-state frame and truncate its lineage, so plans do not
+    * grow with rounds. When the context has a checkpoint dir (set once
+    * per deployment: `spark.checkpoint.dir`, read at context start, or
+    * `SparkContext.setCheckpointDir`) this is a reliable `checkpoint()`,
+    * which survives executor loss — the durability a multi-hour 100 TB
+    * iterative job needs. Without one it is `localCheckpoint()`
+    * (executor block storage, faster; fine for short jobs and local
+    * mode). The operators never set the dir themselves: MLlib's
+    * `PeriodicCheckpointer` and ALS follow the same convention. */
+  private[ext] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
   /** The rows of `df` when there are at most `bound` of them, else
     * None; a bound ≤ 0 disables the driver path. `bound + 1` is
@@ -113,7 +128,7 @@ object ScaleGate {
     * IllegalStateException(`refusal`) once `maxRounds` steps have run
     * unconverged: the values are only a bound until the fixpoint. */
   def monotoneRounds(init: DataFrame, valueCol: String, maxRounds: Int,
-      checkpointDir: Option[String], refusal: String)(
+      refusal: String)(
       step: DataFrame => DataFrame): DataFrame = {
     def total(df: DataFrame): java.math.BigDecimal =
       df.agg(Exact.decSum(col(valueCol))).head().getDecimal(0)
@@ -121,7 +136,7 @@ object ScaleGate {
     var prev = total(cur)
     var round = 0
     while (round < maxRounds) {
-      cur = TextDedup.materialize(step(step(cur)), checkpointDir)
+      cur = materialize(step(step(cur)))
       round += 2
       val s = total(cur)
       if (s.compareTo(prev) == 0) return cur

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns
+import VecOps.{litF, seqDot}
 
 /** Spectral structure of an embedding corpus: the dominant principal
   * direction via DISTRIBUTED power iteration, and the "all-but-the-top"
@@ -466,7 +467,7 @@ object Spectral {
     val asum = new Array[Double](dim)
     var s = 0.0
     rows.foreach { x =>
-      val xv = VecOps.seqDot(x, v0)
+      val xv = seqDot(x, v0)
       var j = 0
       while (j < dim) {
         msum(j) += x(j).toDouble
@@ -488,7 +489,7 @@ object Spectral {
           val wk = new Array[Double](dim)
           var ysk = 0.0
           rows.foreach { x =>
-            val y = VecOps.seqDot(x, v) - c0
+            val y = seqDot(x, v) - c0
             var j = 0
             while (j < dim) { wk(j) += y * x(j).toDouble; j += 1 }
             ysk += y
@@ -523,9 +524,4 @@ object Spectral {
     }
     (mu, v, residuals.result())
   }
-
-  private def litF(a: Array[Float]): Column = VecOps.litF(a)
-
-  private def seqDot(a: Array[Float], b: Array[Float]): Double =
-    VecOps.seqDot(a, b)
 }

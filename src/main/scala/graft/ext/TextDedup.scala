@@ -24,20 +24,6 @@ import graft.functions.TextFns
   */
 object TextDedup {
 
-  /** Materialize a loop-state DataFrame, truncating lineage. With a
-    * `checkpointDir` this is reliable `checkpoint()` (survives executor
-    * loss — the durability story a multi-hour 100 TB iterative job
-    * needs); without, `localCheckpoint()` (executor block storage,
-    * faster, fine for short jobs / local mode). */
-  private[ext] def materialize(df: DataFrame,
-      checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        df.sparkSession.sparkContext.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-
   /** Exact duplicate groups: fingerprint → (keep_id, n_copies). */
   def exactGroups(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     docs.groupBy(TextFns.fingerprint(col(textCol)).as("fingerprint"))
@@ -190,16 +176,12 @@ object TextDedup {
     * graph diameter, and dup clusters are near-cliques, so 2-3 rounds
     * in practice — the standard large-scale CC layout (cf. the
     * large-star/small-star refinement for adversarial diameters).
-    * Checkpointing truncates lineage so plans don't grow per round; the
-    * symmetrized edge set is materialized ONCE before the loop, so an
-    * expensive upstream (e.g. the full MinHash pipeline behind
-    * [[lshCandidates]]) is never recomputed per round.
-    *
-    * Durability: by default rounds use `localCheckpoint` (executor
-    * block storage — fast, but lost on executor failure, so a long
-    * cluster job restarts from scratch). Pass `checkpointDir` to use
-    * reliable `checkpoint()` to that directory instead — the right
-    * trade for multi-hour 100 TB runs.
+    * Pinning per round ([[ScaleGate.materialize]]: reliable when the
+    * context has a checkpoint dir, local otherwise) truncates lineage
+    * so plans don't grow per round; the symmetrized edge set is
+    * materialized ONCE before the loop, so an expensive upstream (e.g.
+    * the full MinHash pipeline behind [[lshCandidates]]) is never
+    * recomputed per round.
     *
     * Node universe: `nodes`. A pair that names an id outside it is
     * ignored, so the components are those of the subgraph `nodes`
@@ -210,22 +192,18 @@ object TextDedup {
     *              [[simhashCandidates]] output
     * @param nodes one row per node id (docs without any pair become
     *              singleton components)
-    * @param checkpointDir reliable-checkpoint directory; None =
-    *              localCheckpoint
     * @return (node, component) with component = min id in the cluster
     */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
-      nodeCol: String = "id", maxRounds: Int = 15,
-      checkpointDir: Option[String] = None): DataFrame = {
+      nodeCol: String = "id", maxRounds: Int = 15): DataFrame = {
     // pinned REPARTITIONED on the per-round join key, so every round's
     // edge-side exchange is pre-satisfied (the [[Graph.pageRank]] edge
     // discipline) — only the node-sized label frame shuffles per round
-    val sym = materialize(
+    val sym = ScaleGate.materialize(
       pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
         .union(pairs.select(col(dstCol).as("a"), col(srcCol).as("b")))
-        .repartition(col("b")),
-      checkpointDir)
+        .repartition(col("b")))
     // ONE bounded collect of the node ids answers the gate and seeds the
     // driver loop (every node starts as its own component —
     // [[ScaleGate.collectUnder]]); the label frame is materialized and
@@ -248,9 +226,8 @@ object TextDedup {
       // label map. Ids outside the map are skipped and their rows
       // dropped, exactly propagate's inner join; nodes without pairs
       // keep their label, exactly its left join.
-      val adj = materialize(
-        sym.groupBy(col("a").as("node")).agg(collect_list(col("b")).as("nbs")),
-        checkpointDir)
+      val adj = ScaleGate.materialize(
+        sym.groupBy(col("a").as("node")).agg(collect_list(col("b")).as("nbs")))
       val (m, held) = ScaleGate.driverRounds(adj,
           ScaleGate.nodeMap(nodeRows)(_.getLong(0)), maxRounds) { (m, node, nbs) =>
         nbs.foldLeft(m.getOrDefault(node, node).longValue) { (best, nb) =>
@@ -261,8 +238,8 @@ object TextDedup {
       if (!held) throw new IllegalStateException(refusal)
       return ScaleGate.nodeFrame(pairs.sparkSession, m, "component")
     }
-    val labels = materialize(
-      nodeIds.withColumn("component", col("node")), checkpointDir)
+    val labels = ScaleGate.materialize(
+      nodeIds.withColumn("component", col("node")))
     // node-sized label frame vs edge-sized sym: broadcast-gate the
     // per-round joins (guide §3.1) — the localCheckpoint's unknown stats
     // otherwise force a sort-merge join that re-sorts the edge-sized
@@ -282,7 +259,7 @@ object TextDedup {
             .as("component"))
     }
     // labels are min-ids, monotone NON-INCREASING per node
-    ScaleGate.monotoneRounds(labels, "component", maxRounds, checkpointDir,
+    ScaleGate.monotoneRounds(labels, "component", maxRounds,
       refusal)(propagate)
   }
 
@@ -304,17 +281,15 @@ object TextDedup {
     */
   def connectedComponentsStar(pairs: DataFrame, nodes: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
-      nodeCol: String = "id", maxRounds: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      nodeCol: String = "id", maxRounds: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     // canonical edges u > v (parent pointers point downward)
-    var edges = materialize(
+    var edges = ScaleGate.materialize(
       pairs
         .select(greatest(col(srcCol), col(dstCol)).as("u"),
           least(col(srcCol), col(dstCol)).as("v"))
-        .filter(col("u") =!= col("v")).distinct(),
-      checkpointDir)
+        .filter(col("u") =!= col("v")).distinct())
     var round = 0
     var converged = edges.isEmpty
     while (!converged && round < maxRounds) {
@@ -339,7 +314,7 @@ object TextDedup {
             struct(col("w").as("u"), col("m").as("v")))).as("e"))
         .select(col("e.u"), col("e.v"))
         .filter(col("u") =!= col("v")).distinct()
-      val smallM = materialize(small, checkpointDir)
+      val smallM = ScaleGate.materialize(small)
       // star forest test: no parent is itself a child elsewhere, and
       // every child has exactly one parent (its component's min id)
       converged =
@@ -377,7 +352,7 @@ object TextDedup {
     * doc — so bucket sizes are df-bounded and frequent shingles never
     * become join keys (the inverse skew profile of a naive token
     * join). The three reused intermediates are materialized once
-    * (localCheckpoint, or reliable checkpoint via `checkpointDir`).
+    * ([[ScaleGate.materialize]]).
     *
     * `dfCap` guards the df-SATURATED corpus (shingle space not much
     * larger than the corpus, so even prefix shingles grow df ∝ rows —
@@ -400,30 +375,27 @@ object TextDedup {
     */
   def similarityJoin(docs: DataFrame, textCol: String, idCol: String,
       ngram: Int = 3, simNum: Int = 1, simDen: Int = 2,
-      dfCap: Long = Long.MaxValue,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dfCap: Long = Long.MaxValue): DataFrame = {
     require(simNum > 0 && simDen > 0 && simNum <= simDen,
       s"threshold must be a fraction in (0,1], got $simNum/$simDen")
     require(dfCap >= 1, s"dfCap must be >= 1, got $dfCap")
     import org.apache.spark.sql.expressions.Window
-    val ex = materialize(
+    val ex = ScaleGate.materialize(
       docs.select(col(idCol).as("doc_id"),
           graft.plans.NGramExplode.of(TextFns.tokens(col(textCol)), ngram))
         .select(col("doc_id"), col("ngram").as("tok"))
-        .distinct(),
-      checkpointDir)
+        .distinct())
     // hash-sorted token structs (r18): XXH64 + co-sort ONCE per doc so
     // the per-pair verify merges on longs instead of re-hashing every
     // token's bytes per candidate (see JaccardUtil.hashSortTokens)
-    val sets = materialize(
+    val sets = ScaleGate.materialize(
       ex.groupBy(col("doc_id"))
         .agg(collect_set(col("tok")).as("toks_raw"),
           count(lit(1)).as("n_set"))
         .select(col("doc_id"),
           graft.plans.TextExpressions.hashSortTokens(col("toks_raw"))
             .as("toks"),
-          col("n_set")),
-      checkpointDir)
+          col("n_set")))
     val dfreq = ex.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))
     // prefix length n − ceil(t·n) + 1, with ceil in integer arithmetic
@@ -439,11 +411,10 @@ object TextDedup {
       .filter(col("rk") <=
         col("n") - ((col("n") * simNum + simDen - 1).divide(simDen)
           .cast("long")) + 1)
-    val prefix = materialize(
+    val prefix = ScaleGate.materialize(
       (if (dfCap == Long.MaxValue) prefixAll
        else prefixAll.filter(col("df") <= dfCap))
-        .select(col("tok"), col("doc_id"), col("rk"), col("n")),
-      checkpointDir)
+        .select(col("tok"), col("doc_id"), col("rk"), col("n")))
     // jaccard ≥ num/den ⇔ inter·(num+den) ≥ num·(na+nb); apply it to
     // the positional upper bound first, then exactly after counting
     val cands = prefix.as("a")
@@ -500,29 +471,26 @@ object TextDedup {
     */
   def containmentJoin(docs: DataFrame, textCol: String, idCol: String,
       ngram: Int = 3, simNum: Int = 4, simDen: Int = 5,
-      dfCap: Long = Long.MaxValue,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dfCap: Long = Long.MaxValue): DataFrame = {
     require(simNum > 0 && simDen > 0 && simNum <= simDen,
       s"threshold must be a fraction in (0,1], got $simNum/$simDen")
     require(dfCap >= 1, s"dfCap must be >= 1, got $dfCap")
     import org.apache.spark.sql.expressions.Window
-    val ex = materialize(
+    val ex = ScaleGate.materialize(
       docs.select(col(idCol).as("doc_id"),
           graft.plans.NGramExplode.of(TextFns.tokens(col(textCol)), ngram))
         .select(col("doc_id"), col("ngram").as("tok"))
-        .distinct(),
-      checkpointDir)
+        .distinct())
     // hash-sorted token structs — same r18 verify rewrite as
     // similarityJoin's (hash once per doc, merge on longs per pair)
-    val sets = materialize(
+    val sets = ScaleGate.materialize(
       ex.groupBy(col("doc_id"))
         .agg(collect_set(col("tok")).as("toks_raw"),
           count(lit(1)).as("n_set"))
         .select(col("doc_id"),
           graft.plans.TextExpressions.hashSortTokens(col("toks_raw"))
             .as("toks"),
-          col("n_set")),
-      checkpointDir)
+          col("n_set")))
     val dfreq = ex.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // containment prefix length: n − ceil(t·n) + 1, integer ceil; the
     // cap filter is only planted when a cap is set

@@ -100,9 +100,8 @@ object TrainPrep {
     * Fully declarative — no driver collect: each round's winner is a
     * 1-row frame, exclusions are anti joins against the accumulated
     * winner set, the covered set a semi join + distinct. Round state
-    * is pinned per round (localCheckpoint, or reliable `checkpoint()`
-    * via `checkpointDir` for long selections) so plans don't grow with
-    * rounds — the [[TextDedup.connectedComponents]] pattern.
+    * is pinned per round ([[ScaleGate.materialize]]) so plans don't
+    * grow with rounds — the [[TextDedup.connectedComponents]] pattern.
     *
     * @param pairs (id, element) coverage relation; duplicates fine
     *              (distinct applied)
@@ -110,11 +109,10 @@ object TrainPrep {
     *         than `rounds` rows when the element space is exhausted
     */
   def greedyCover(pairs: DataFrame, idCol: String, elemCol: String,
-      rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val tk = TextDedup.materialize(
-      pairs.select(col(idCol).as("id"), col(elemCol).as("elem")).distinct(),
-      checkpointDir)
+    val tk = ScaleGate.materialize(
+      pairs.select(col(idCol).as("id"), col(elemCol).as("elem")).distinct())
     var out = Seq.empty[DataFrame]
     var chosenIds: Option[DataFrame] = None
     var covered: Option[DataFrame] = None
@@ -127,11 +125,10 @@ object TrainPrep {
             .join(cov, Seq("elem"), "left_anti")
         case _ => tk
       }
-      val win = TextDedup.materialize(
+      val win = ScaleGate.materialize(
         pool.groupBy(col("id")).agg(count(lit(1)).as("gain"))
           .orderBy(col("gain").desc, col("id")).limit(1)
-          .select(lit(r.toLong).as("round"), col("id"), col("gain")),
-        checkpointDir)
+          .select(lit(r.toLong).as("round"), col("id"), col("gain")))
       if (win.isEmpty) exhausted = true
       else {
         out = out :+ win
@@ -140,9 +137,8 @@ object TrainPrep {
         val ids = chosenIds.fold(win.select(col("id")))(
           _.unionByName(win.select(col("id"))))
         chosenIds = Some(ids)
-        covered = Some(TextDedup.materialize(
-          tk.join(ids, Seq("id"), "left_semi").select(col("elem")).distinct(),
-          checkpointDir))
+        covered = Some(ScaleGate.materialize(
+          tk.join(ids, Seq("id"), "left_semi").select(col("elem")).distinct()))
       }
       r += 1
     }
@@ -227,33 +223,31 @@ object TrainPrep {
     * @return cell frame: dims*, n (row count), w_ppm (fitted weight)
     */
   def rake(rows: DataFrame, dims: Seq[String], targets: Seq[DataFrame],
-      rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(dims.nonEmpty && dims.length == targets.length,
       s"need one target frame per dim, got ${dims.length} dims / " +
         s"${targets.length} targets")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val n = rows.groupBy(dims.map(col): _*).agg(count(lit(1)).as("n"))
     val total = n.agg(sum(col("n")).as("__N"))
-    var cells = TextDedup.materialize(
+    var cells = ScaleGate.materialize(
       n.crossJoin(broadcast(total))
         .withColumn("w_ppm", expr("n * 1000000 div __N"))
-        .drop("__N"),
-      checkpointDir)
+        .drop("__N"))
     val tgt = dims.zip(targets).map { case (d, t) =>
       d -> t.select(col(t.columns.head).as(d),
         col(t.columns(1)).cast("long").as("__tgt"))
     }.toMap
     for (_ <- 1 to rounds; d <- dims) {
       val marg = cells.groupBy(col(d)).agg(sum(col("w_ppm")).as("__marg"))
-      cells = TextDedup.materialize(
+      cells = ScaleGate.materialize(
         cells
           .join(marg, d)
           .join(tgt(d), Seq(d), "left")
           .withColumn("w_ppm",
             when(col("__marg") > 0 && col("__tgt").isNotNull,
               expr("w_ppm * __tgt div __marg")).otherwise(lit(0L)))
-          .drop("__marg", "__tgt"),
-        checkpointDir)
+          .drop("__marg", "__tgt"))
     }
     cells
   }
@@ -280,7 +274,7 @@ object TrainPrep {
     * deterministic and engine-portable). Symbols are space-joined, so
     * a merged symbol is the plain concatenation of its parts.
     *
-    * Round state is pinned per round ([[TextDedup.materialize]]) so
+    * Round state is pinned per round ([[ScaleGate.materialize]]) so
     * plans don't grow with rounds — the [[greedyCover]] pattern.
     *
     * @param words (wordCol, cntCol) distinct-word frequencies; words
@@ -293,17 +287,15 @@ object TrainPrep {
     *         (sym, cnt) the word frame after all merges
     */
   def bpeMerges(words: DataFrame, wordCol: String, cntCol: String,
-      rounds: Int, checkpointDir: Option[String] = None)
-      : (DataFrame, DataFrame) = {
+      rounds: Int): (DataFrame, DataFrame) = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var w = TextDedup.materialize(
+    var w = ScaleGate.materialize(
       words.select(
         concat_ws(" ", split(col(wordCol), "")).as("sym"),
-        col(cntCol).cast("long").as("cnt")),
-      checkpointDir)
+        col(cntCol).cast("long").as("cnt")))
     var out = Seq.empty[DataFrame]
     for (r <- 1 to rounds) {
-      val best = TextDedup.materialize(w
+      val best = ScaleGate.materialize(w
         .filter(instr(col("sym"), " ") > 0)
         .select(col("cnt"), split(col("sym"), " ").as("s"))
         .select(col("cnt"), explode(expr(
@@ -316,16 +308,14 @@ object TrainPrep {
         .select(
           col("m.pair").as("pair"),
           expr("replace(m.pair, ' ', '')").as("merged"),
-          (-col("m.neg")).as("pair_cnt")),
-        checkpointDir)
-      w = TextDedup.materialize(
+          (-col("m.neg")).as("pair_cnt")))
+      w = ScaleGate.materialize(
         w.crossJoin(broadcast(best))
           .withColumn("sym",
             when(col("pair").isNull, col("sym")).otherwise(trim(expr(
               "replace(concat(' ', sym, ' '), concat(' ', pair, ' '), " +
                 "concat(' ', merged, ' '))"))))
-          .drop("pair", "merged", "pair_cnt"),
-        checkpointDir)
+          .drop("pair", "merged", "pair_cnt"))
       val vocab = w
         .select(explode(split(col("sym"), " ")).as("symb"))
         .agg(countDistinct(col("symb")).as("vocab_after"))

@@ -221,9 +221,6 @@ object VectorIndex {
         .getField("pred"))
   }
 
-  private def centroidLit(c: Array[Float]) =
-    array(c.map(v => lit(v)): _*).cast("array<float>")
-
   /** Top-k cosine search probing only the nProbe closest cells. */
   def search(spark: SparkSession, indexed: DataFrame, vecCol: String,
       idCol: String, centroids: Array[Array[Float]],
@@ -234,7 +231,7 @@ object VectorIndex {
     indexed
       .filter(col("cell").isin(probed.toSeq: _*)) // partition-prunable at scale
       .select(col(idCol),
-        VectorFns.cosine(col(vecCol), centroidLit(query)).as("cos_sim"))
+        VectorFns.cosine(col(vecCol), VecOps.litF(query)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
       .limit(k)
   }
@@ -254,8 +251,8 @@ object VectorIndex {
     *  4. keep = the minimum-id member of each component.
     *
     * Scale: bucket sizes bound the pair expansion (add bits for bigger
-    * corpora); CC is the shared [[TextDedup.connectedComponents]] loop
-    * with `checkpointDir` for reliable multi-hour state.
+    * corpora); CC is the shared [[TextDedup.connectedComponents]] loop,
+    * its state pinned per round by [[ScaleGate.materialize]].
     *
     * @param tauBp cosine threshold in basis points (8500 = 0.85)
     * @param bands number of sign-LSH bands; band j buckets on vector
@@ -289,7 +286,6 @@ object VectorIndex {
   def semanticDedup(embeddings: DataFrame, vecCol: String, idCol: String,
       tauBp: Int, bits: Int = 4, bands: Int = 1,
       bucketCap: Option[Long] = None,
-      checkpointDir: Option[String] = None,
       ccMaxRounds: Int = 40): DataFrame = {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     // norms precomputed ONCE per vector (n rows), not per candidate
@@ -335,7 +331,7 @@ object VectorIndex {
     // loop exits on convergence; unused rounds cost nothing)
     TextDedup.connectedComponents(idPairs, embeddings.select(col(idCol)),
         srcCol = "ia", dstCol = "ib", nodeCol = idCol,
-        maxRounds = ccMaxRounds, checkpointDir = checkpointDir)
+        maxRounds = ccMaxRounds)
       .select(col("node").as(idCol), col("component"),
         (col("node") === col("component")).as("keep"))
   }
@@ -908,7 +904,7 @@ object VectorIndex {
     embeddings
       .join(broadcast(shortlist.select(col(idCol))), Seq(idCol), "left_semi")
       .select(col(idCol),
-        floor(VectorFns.cosine(col(vecCol), centroidLit(query)) * 10000.0
+        floor(VectorFns.cosine(col(vecCol), VecOps.litF(query)) * 10000.0
           + 0.5).cast("long").as("score_bp"))
       .orderBy(col("score_bp").desc, col(idCol).asc)
       .limit(k)

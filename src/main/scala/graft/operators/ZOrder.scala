@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) interleaving — the multi-dimensional CLUSTERING key
@@ -54,4 +54,15 @@ object ZOrder {
       (c, j) <- cols.zipWithIndex
     } yield s"((($c >> $i) & 1) << ${i * n + j})").mkString(" | ")
   }
+
+  /** Z-cluster a frame for writing: range-partition and sort by the
+    * [[zvalue]] of `cols`, so each written file covers a small box of
+    * the z-columns and min/max stats prune predicates on any of them
+    * (a lexicographic sort leaves later columns full-width per file). */
+  def cluster(df: DataFrame, cols: Seq[String], bits: Int,
+      numPartitions: Int): DataFrame =
+    df.withColumn("__z", zvalue(cols.map(col), bits))
+      .repartitionByRange(numPartitions, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
 }

@@ -89,7 +89,7 @@ object Extended11 {
   // semi join against the oriented edge set; orientation is the
   // entire trick — no node ever fans out more than √m wedges.
   // The counting core lives in ext/Graph.triangleCount (library
-  // operator with checkpointDir + injective struct(degree, id)
+  // operator with per-round pinning + injective struct(degree, id)
   // orientation keys); this query builds the co-order edge set and
   // composes the summary row.
   def q152(s: SparkSession, dir: String): DataFrame = {
@@ -143,7 +143,7 @@ object Extended11 {
     // but feed MULTIPLE later subtrees — the operator pins each round
     // once (4.4 → 3.7 s steady at sf0.1; the rest is the genuinely
     // iterative ~2 passes per round over the shingle table). The loop,
-    // early-stop, and checkpointDir live in TrainPrep.greedyCover;
+    // early-stop, and the pinning live in TrainPrep.greedyCover;
     // this query is its 3-round instance.
     val pairs = t(s, dir, "documents")
       .select($"doc_id", explode(graft.plans.TextExpressions.distinctNgrams(

@@ -131,8 +131,8 @@ object Extended14 {
   // on the same double.
   //
   // Scale: pair volume is bounded by bucket occupancy (bits is the
-  // dial); CC is the O(diameter) keyed-join loop with checkpointDir
-  // support; the final agg is one keyed rollup.
+  // dial); CC is the O(diameter) keyed-join loop, its state pinned per
+  // round (ScaleGate.materialize); the final agg is one keyed rollup.
   def q163(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = t(s, dir, "embeddings")

@@ -563,7 +563,7 @@ object Extended3 {
       |ORDER BY n DESC, event_type LIMIT 10""".stripMargin
 
   // --------------------------------------------------------------------
-  // q94 — z-order clustering stats (graft.functions.ZOrder): Morton
+  // q94 — z-order clustering stats (graft.operators.ZOrder): Morton
   // values over (user_id, event bucket), then per-z-range rectangles.
   // Each z-range covers a TIGHT (x, y) box — exactly why z-sorted files
   // prune on either dimension's min-max stats, where a lexicographic
@@ -576,7 +576,7 @@ object Extended3 {
       .select($"event_id",
         ($"user_id" % 256).as("x"),
         ($"event_id" % 256).as("y"))
-      .withColumn("z", graft.functions.ZOrder.zValue2($"x", $"y", bits))
+      .withColumn("z", graft.operators.ZOrder.zvalue(Seq($"x", $"y"), bits))
     ev.withColumn("z_range", expr("z div 4096"))
       .groupBy($"z_range")
       .agg(count(lit(1)).as("n"),

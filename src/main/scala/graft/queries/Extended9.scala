@@ -242,7 +242,7 @@ object Extended9 {
   // joined against are the short ones — df-bounded like q138, not
   // corpus-bounded.
   // (Implementation lives in TextDedup.containmentJoin — the reusable
-  // operator with the dfCap saturated-corpus guard and checkpointDir;
+  // operator with the dfCap saturated-corpus guard and pinned state;
   // the length-filter revert note moved there with it.)
   def q145(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

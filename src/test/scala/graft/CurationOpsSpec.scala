@@ -350,13 +350,10 @@ class CurationOpsSpec extends SparkSpec {
     val tgts = Seq(
       Seq(("en", 600000L), ("de", 400000L)).toDF("lang", "t"),
       Seq(("a", 500000L), ("b", 500000L)).toDF("source", "t"))
-    val local = graft.ext.TrainPrep.rake(df, Seq("lang", "source"), tgts, 3)
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getAs[Long]("w_ppm"))).sortBy(c => (c._1, c._2)).toSeq
-    val ckpt = graft.ext.TrainPrep.rake(df, Seq("lang", "source"), tgts, 3,
-        checkpointDir = Some(tmpDir("rake-ckpt")))
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getAs[Long]("w_ppm"))).sortBy(c => (c._1, c._2)).toSeq
+    val (local, ckpt, _) = localAndReliable(
+      graft.ext.TrainPrep.rake(df, Seq("lang", "source"), tgts, 3)
+        .collect().map(r => (r.getString(0), r.getString(1),
+          r.getAs[Long]("w_ppm"))).sortBy(c => (c._1, c._2)).toSeq)
     assert(local === ckpt)
   }
 
@@ -459,12 +456,12 @@ class CurationOpsSpec extends SparkSpec {
     import spark.implicits._
     val words = Seq(("banana", 4L), ("bandana", 2L), ("nab", 5L))
       .toDF("word", "cnt")
-    def run(ckpt: Option[String]) =
-      graft.ext.TrainPrep.bpeMerges(words, "word", "cnt", 3, ckpt)._1
+    val (local, reliable, _) = localAndReliable(
+      graft.ext.TrainPrep.bpeMerges(words, "word", "cnt", 3)._1
         .orderBy("round").collect().map(r =>
           (r.getAs[Long]("round"), r.getAs[String]("pair"),
-            r.getAs[Long]("pair_cnt"))).toSeq
-    assert(run(None) === run(Some(tmpDir("bpe-ckpt"))))
+            r.getAs[Long]("pair_cnt"))).toSeq)
+    assert(local === reliable)
   }
 
   // ------------------------------------------------------------------

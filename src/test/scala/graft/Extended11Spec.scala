@@ -43,14 +43,27 @@ class Extended11Spec extends SparkSpec {
       (1L, "a"), (1L, "b"), (1L, "c"),
       (2L, "d"), (2L, "e"),
       (3L, "a"), (3L, "d")).toDF("doc", "el")
-    val got = graft.ext.TrainPrep.greedyCover(pairs, "doc", "el", rounds = 5)
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    // mmrSelect is the same greedy shape; its distributed rounds (the
+    // driver-loop gate at 0) pin each winner frame
+    val cands = Seq((1L, 90L), (2L, 85L), (3L, 70L), (4L, 60L), (5L, 40L))
+      .toDF("id", "rel")
+    val sims = Seq((1L, 2L, 95L), (1L, 3L, 10L), (2L, 4L, 50L), (3L, 5L, 80L))
+      .toDF("a", "b", "sim")
+    def mmr() = {
+      spark.conf.set("graft.mmrDriverMaxCandidates", "0")
+      try graft.ext.Retrieval.mmrSelect(cands, sims, "id", "rel", k = 4)
+        .orderBy($"rank").as[(Long, Long, Long, Long, Long)].collect().toSeq
+      finally spark.conf.unset("graft.mmrDriverMaxCandidates")
+    }
+    val ((got, mmrLocal), (ck, mmrCk), _) = localAndReliable((
+      graft.ext.TrainPrep.greedyCover(pairs, "doc", "el", rounds = 5)
+        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq,
+      mmr()))
     assert(got === Seq((1L, 1L, 3L), (2L, 2L, 2L)),
       "doc 3 adds nothing once 1 and 2 are taken; rounds 3+ must not emit")
-    val ck = graft.ext.TrainPrep.greedyCover(pairs, "doc", "el", rounds = 5,
-        checkpointDir = Some(tmpDir("cover-ckpt")))
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(ck === got)
+    assert(mmrCk === mmrLocal)
+    assert(mmrLocal.map(_._2) === Seq(1L, 3L, 4L, 2L))
   }
 
   test("q153: greedy rounds replay brute-force; gains non-increasing") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.ZOrder
+import graft.operators.ZOrder
 import graft.store.Formats
 
 /** Round-trips for the non-parquet formats and the z-order clustering
@@ -36,19 +36,19 @@ class FormatsSpec extends SparkSpec {
       df.orderBy($"id").collect().toSeq)
   }
 
-  test("zValue2 interleaves bits exactly") {
+  test("zvalue over (x, y) interleaves bits exactly") {
     // x=0b101=5, y=0b011=3 → z = x bits at even, y at odd positions:
     // pos0=1(x0) pos1=1(y0) pos2=0(x1) pos3=1(y1) pos4=1(x2) pos5=0(y2)
     // = 0b011011 = 27
     val got = Seq((5, 3)).toDF("x", "y")
-      .select(ZOrder.zValue2($"x", $"y", 3).as("z"))
+      .select(ZOrder.zvalue(Seq($"x", $"y"), 3).as("z"))
       .collect().head.getLong(0)
     assert(got === 27L)
     // masking: values wider than `bits` truncate
     val masked = Seq((256 + 5, 3)).toDF("x", "y")
-      .select(ZOrder.zValue2($"x", $"y", 8).as("z")).collect().head.getLong(0)
+      .select(ZOrder.zvalue(Seq($"x", $"y"), 8).as("z")).collect().head.getLong(0)
     val plain = Seq((5, 3)).toDF("x", "y")
-      .select(ZOrder.zValue2($"x", $"y", 8).as("z")).collect().head.getLong(0)
+      .select(ZOrder.zvalue(Seq($"x", $"y"), 8).as("z")).collect().head.getLong(0)
     assert(masked === plain)
   }
 
@@ -65,7 +65,7 @@ class FormatsSpec extends SparkSpec {
         .groupBy($"p")
         .agg((max($"y") - min($"y") + 1).cast("long").as("yspan"))
         .collect().map(_.getLong(1)).toSeq
-    val zSpans = ySpans(ZOrder.cluster(grid, "x", "y", 6, 16))
+    val zSpans = ySpans(ZOrder.cluster(grid, Seq("x", "y"), 6, 16))
     val xySpans = ySpans(
       grid.repartitionByRange(16, $"x", $"y").sortWithinPartitions($"x", $"y"))
     assert(zSpans.max <= 32, s"z y-spans: $zSpans")   // ~16 + range-boundary slack

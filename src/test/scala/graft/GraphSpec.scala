@@ -13,8 +13,8 @@ import graft.ext.Graph
   *    key this operator replaced silently conflated such nodes);
   *  - kCore FIXPOINT == brute-force iterative peel (not a fixed-depth
   *    unroll — cascades must fully propagate);
-  *  - both operators produce identical results via localCheckpoint and
-  *    reliable checkpointDir paths.
+  *  - every loop operator produces identical results via local and
+  *    reliable checkpoints (the context's checkpoint dir set).
   */
 class GraphSpec extends SparkSpec {
 
@@ -208,34 +208,24 @@ class GraphSpec extends SparkSpec {
   }
 
   test("checkpointDir path produces identical results to localCheckpoint") {
-    val dir = tmpDir("graph-ckpt")
+    import spark.implicits._
     val g = samples(edgeGen(12, 0L), 1).head
-    val triLocal = Graph.triangleCount(toDf(g)).head().getLong(0)
-    val triCkpt = Graph.triangleCount(toDf(g), checkpointDir = Some(dir))
-      .head().getLong(0)
-    assert(triLocal === triCkpt)
-    val coreLocal = Graph.kCore(toDf(g), 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val coreCkpt = Graph.kCore(toDf(g), 2, checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(coreLocal === coreCkpt)
-    val cnLocal = Graph.coreness(toDf(g)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val cnCkpt = Graph.coreness(toDf(g), checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(cnLocal === cnCkpt)
-    val prLocal = Graph.pageRank(toDf(g), "u", "v", maxIterations = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1).toSeq
-    val prCkpt = Graph.pageRank(toDf(g), "u", "v", maxIterations = 4,
-        checkpointDir = Some(dir)).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1).toSeq
-    assert(prLocal === prCkpt)
-    val lpaLocal = Graph.labelPropagation(toDf(g), maxRounds = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val lpaCkpt = Graph.labelPropagation(toDf(g), maxRounds = 3,
-        checkpointDir = Some(dir)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(lpaLocal === lpaCkpt)
+    val seeds = Seq(g.head._1).toDF("node")
+    def byNode(df: org.apache.spark.sql.DataFrame, c: Int) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(c))).sortBy(_._1).toSeq
+    val (local, reliable, _) = localAndReliable(Seq(
+      "triangleCount" -> Graph.triangleCount(toDf(g)).head().getLong(0),
+      "kCore" -> byNode(Graph.kCore(toDf(g), 2), 1),
+      "coreness" -> byNode(Graph.coreness(toDf(g)), 1),
+      "pageRank" -> byNode(Graph.pageRank(toDf(g), "u", "v",
+        maxIterations = 4), 2),
+      "personalizedPageRank" -> byNode(Graph.personalizedPageRank(toDf(g),
+        seeds, "u", "v", maxIterations = 4), 2),
+      "labelPropagation" -> byNode(Graph.labelPropagation(toDf(g),
+        maxRounds = 3), 1)))
+    local.zip(reliable).foreach { case ((op, l), (_, r)) =>
+      assert(l === r, op)
+    }
   }
 
   /** Reference synchronous LPA: every node simultaneously takes the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,6 +28,20 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `f` at the defaults, where loop operators pin their state with
+    * local checkpoints, then again with the context's checkpoint dir
+    * set, where they pin it with reliable ones: both results, and the
+    * directory the second run checkpointed under. `f` must collect what
+    * it returns. Neither run may leave the checkpoint dir changed. */
+  def localAndReliable[A](f: => A): (A, A, String) = {
+    val sc = spark.sparkContext
+    val local = f
+    assert(sc.getCheckpointDir.isEmpty,
+      s"an operator set a checkpoint dir: ${sc.getCheckpointDir}")
+    val (reliable, dir) = CheckpointDirs.withCheckpointDir(sc)(d => (f, d))
+    (local, reliable, dir)
+  }
 
   /** Jobs `f` starts on this thread, and the input bytes their stages
     * read ([[JobStats.measure]]). */

@@ -3,7 +3,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.TextDedup
+import graft.ext.{TextDedup, VectorIndex}
 
 class TextDedupSpec extends SparkSpec {
 
@@ -77,24 +77,39 @@ class TextDedupSpec extends SparkSpec {
     import spark.implicits._
     // local[n] reaches the same blocks either way; the point of the
     // reliable path is surviving executor loss on a cluster — here we
-    // pin that the RESULTS are identical so the durability knob is free
-    // to flip per deployment.
+    // pin that the RESULTS are identical so a deployment's checkpoint
+    // dir is free to flip. The set-similarity joins and semanticDedup
+    // (CC over cosine pairs) pin their state the same way.
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id")
-    val ckpt = tmpDir("cc-ckpt")
+    val vecs = Seq(
+      (1L, Seq(0.5f, 0.5f, 0.5f, 0.5f)), (2L, Seq(0.5f, 0.5f, 0.5f, 0.4f)),
+      (3L, Seq(-0.5f, 0.5f, 0.5f, 0.5f)), (4L, Seq(-0.5f, 0.4f, 0.5f, 0.5f)),
+      (5L, Seq(0.5f, -0.5f, 0.5f, -0.5f)))
+      .toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = asMap(TextDedup.connectedComponents(pairs, nodes))
-    val reliable = asMap(TextDedup.connectedComponents(pairs, nodes,
-      checkpointDir = Some(ckpt)))
-    assert(local === reliable)
-    val localStar = asMap(TextDedup.connectedComponentsStar(pairs, nodes))
-    val reliableStar = asMap(TextDedup.connectedComponentsStar(pairs, nodes,
-      checkpointDir = Some(ckpt)))
-    assert(localStar === reliableStar)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    val (local, reliable, ckpt) = localAndReliable(Seq(
+      "connectedComponents" ->
+        asMap(TextDedup.connectedComponents(pairs, nodes)),
+      "connectedComponentsStar" ->
+        asMap(TextDedup.connectedComponentsStar(pairs, nodes)),
+      "similarityJoin" ->
+        rows(TextDedup.similarityJoin(docs, "text", "doc_id")),
+      "containmentJoin" ->
+        rows(TextDedup.containmentJoin(docs, "text", "doc_id")),
+      "semanticDedup" -> rows(VectorIndex.semanticDedup(vecs, "embedding",
+        "vec_id", tauBp = 9000, bits = 4))))
+    local.zip(reliable).foreach { case ((op, l), (_, r)) =>
+      assert(l === r, op)
+      assert(l != Seq.empty, s"$op returned no rows")
+    }
     // reliable mode actually wrote checkpoint data to the directory
-    val wrote = new java.io.File(ckpt).listFiles()
+    val wrote = new java.io.File(java.net.URI.create(ckpt)).listFiles()
     assert(wrote != null && wrote.nonEmpty, "no checkpoint files written")
   }
 

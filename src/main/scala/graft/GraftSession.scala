@@ -35,6 +35,11 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // reliable checkpoints (taken only when the context has a
+      // checkpoint dir, see graft.ext.ScaleGate.materialize) are deleted
+      // once their RDD is garbage-collected, as shuffle files are;
+      // without it every pinned loop round stays on disk for good
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // getOrCreate may have returned a pre-existing session whose builder

@@ -9,7 +9,7 @@ package graft
   * Usage: SPARK_GRAFT_SF_DIR=... GRAFT_ONLY=q152,q197 \
   *          sbt "runMain graft.Plans <outDir> [suffix]"
   * Files land as <outDir>/<shortName>_<suffix>.txt (suffix defaults
-  * to "plan"). NOTE: the monitor queries (q284–q293) execute their
+  * to "plan"). NOTE: the monitor queries (q284–q292) execute their
   * state merges eagerly while the DataFrame is being BUILT — dumping
   * their plan costs a few state folds; the dumped plan is the
   * read-out's.

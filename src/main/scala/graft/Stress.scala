@@ -92,29 +92,20 @@ object Stress {
     }
 
     if (picks("fpstate")) {
-      // r17: fingerprint-state growth — the semilattice (fingerprint,
-      // df) layout REWRITES the whole state per merge (O(state)),
-      // the append layout writes only newly-seen fingerprints
-      // (O(new)). Same batches through both; per-batch times should
-      // GROW for merge and stay FLAT for append as the state
-      // accumulates. (Winnowing the batch itself is a shared,
-      // constant cost in every bar.) k = 6: the generator's 30-word
-      // vocabulary saturates the 4-gram space at ~810k fingerprints,
-      // which would cap the state and hide the growth — 30⁶ does not.
+      // fingerprint-state growth: the append layout writes only
+      // newly-seen fingerprints (O(new)), so per-batch times should
+      // stay FLAT as the state accumulates. (Winnowing the batch
+      // itself is a shared, constant cost in every bar.) k = 6: the
+      // generator's 30-word vocabulary saturates the 4-gram space at
+      // ~810k fingerprints, which would cap the state and hide any
+      // growth — 30⁶ does not.
       val fpK = 6
       val nb = 8
-      val mPath = java.nio.file.Files
-        .createTempDirectory("fpmerge").toString + "/state"
       val aPath = java.nio.file.Files
         .createTempDirectory("fpappend").toString + "/state"
       for (b <- 0 until nb) {
         val batch = docs
           .filter(pmod($"doc_id", lit(nb.toLong)) === b.toLong)
-        timed(f"fpmerge-b$b") {
-          graft.streaming.StreamEval.mergeFingerprintBatch(
-            spark, batch, "doc_id", "text", mPath, b.toLong, k = fpK)
-        }
-        gcWindow()
         timed(f"fpappend-b$b") {
           graft.streaming.StreamEval.appendFingerprintBatch(
             spark, batch, "doc_id", "text", aPath, b.toLong, k = fpK)
@@ -126,9 +117,7 @@ object Stress {
       // (b) appends stay flat on the compacted state, (c) the state
       // directory count is bounded. The probe batch is half SEEN
       // (batch 0's text) and half NOVEL (a different generator seed,
-      // ids offset past the corpus) — the realistic arriving mix, and
-      // the shape where a Bloom prefilter earns its keep (the novel
-      // half drops out before the exact join).
+      // ids offset past the corpus) — the realistic arriving mix.
       //
       // The novel seed must sit FAR outside the id space: the
       // generator derives a doc's stream from mix(seed ^ id), so for a
@@ -145,87 +134,22 @@ object Stress {
       val probeBatch = docs
         .filter(pmod($"doc_id", lit(nb.toLong)) === 0L)
         .unionByName(novelDocs)
-      def probe(path: String, bits: Int = 0): Long =
+      def probe(): Long =
         graft.streaming.StreamEval.winnowNoveltyFromSet(
-          spark, path, probeBatch, "doc_id", "text", k = fpK,
-          bloomBits = bits).queryExecution.toRdd.count()
-      timed("fpprobe-pre")(probe(aPath))
+          spark, aPath, probeBatch, "doc_id", "text", k = fpK)
+          .queryExecution.toRdd.count()
+      timed("fpprobe-pre")(probe())
       gcWindow()
       timed("fpcompact") {
         graft.streaming.StreamEval.compactFingerprintGenerations(
           spark, aPath, upTo = nb - 1L)
       }
       gcWindow()
-      timed("fpprobe-post")(probe(aPath))
+      timed("fpprobe-post")(probe())
       gcWindow()
       timed(f"fpappend-b$nb-postcompact") {
         graft.streaming.StreamEval.appendFingerprintBatch(
           spark, novelDocs, "doc_id", "text", aPath, nb.toLong, k = fpK)
-      }
-      gcWindow()
-      // r18: Bloom-prefiltered probe pricing — the same batches into a
-      // sidecar-carrying state, then the SAME probe with and without
-      // the prefilter. Bits sized ~10/fingerprint at the probe corpus
-      // (state fingerprints ≈ 2·grams/(w+1); the generated corpus at
-      // 2M docs holds ~30M — 2^28 bits keeps the survivor rate low
-      // while the packed filter stays a 32 MB broadcast).
-      val bBits = sys.env.getOrElse("GRAFT_STRESS_BLOOM_BITS",
-        (1 << 28).toString).toInt
-      val bPath = java.nio.file.Files
-        .createTempDirectory("fpbloom").toString + "/state"
-      for (b <- 0 until nb) {
-        val batch = docs
-          .filter(pmod($"doc_id", lit(nb.toLong)) === b.toLong)
-        timed(f"fpbloomapp-b$b") {
-          graft.streaming.StreamEval.appendFingerprintBatch(
-            spark, batch, "doc_id", "text", bPath, b.toLong, k = fpK,
-            bloomBits = bBits)
-        }
-        gcWindow()
-      }
-      timed("fpnovel-exact")(probe(bPath))
-      gcWindow()
-      timed("fpnovel-bloom")(probe(bPath, bits = bBits))
-      gcWindow()
-      // the same read-out pair on MOSTLY-NOVEL arrivals (a fourth
-      // disjoint seed) — the realistic decontamination mix, and the
-      // regime where the survivor set is small enough to broadcast:
-      // the bloom read-out should show the state SCANNED (shuffleW ~
-      // batch partials only) where the exact probe shuffles it. The
-      // half-seen probe above deliberately saturates the survivor
-      // bound instead, demonstrating the fallback.
-      val freshArrivals = spark.read.format("graftdocs")
-        .option("rows", rows).option("partitions", cpus.toInt * 2)
-        .option("seed", 1L << 42).load()
-        .filter(pmod($"doc_id", lit(nb.toLong)) === 0L)
-        .withColumn("doc_id", $"doc_id" + 3L * rows)
-      def probeN(path: String, bits: Int = 0): Long =
-        graft.streaming.StreamEval.winnowNoveltyFromSet(
-          spark, path, freshArrivals, "doc_id", "text", k = fpK,
-          bloomBits = bits).queryExecution.toRdd.count()
-      timed("fpnovelN-exact")(probeN(bPath))
-      gcWindow()
-      timed("fpnovelN-bloom")(probeN(bPath, bits = bBits))
-      gcWindow()
-      // the structural claim priced in BYTES: one more batch through
-      // each append path — the bloom append's survivors probe the
-      // state as a broadcast-scan (shuffleW ~ batch), the plain
-      // append's anti-join shuffles batch AND state. A third disjoint
-      // seed so BOTH paths see the same genuinely-novel content.
-      val extraBatch = spark.read.format("graftdocs")
-        .option("rows", rows).option("partitions", cpus.toInt * 2)
-        .option("seed", 1L << 41).load()
-        .filter(pmod($"doc_id", lit(nb.toLong)) === 0L)
-        .withColumn("doc_id", $"doc_id" + 2L * rows)
-      timed("fpapp-shuffle") {
-        graft.streaming.StreamEval.appendFingerprintBatch(
-          spark, extraBatch, "doc_id", "text", aPath, nb + 1L, k = fpK)
-      }
-      gcWindow()
-      timed("fpbloomapp-shuffle") {
-        graft.streaming.StreamEval.appendFingerprintBatch(
-          spark, extraBatch, "doc_id", "text", bPath, nb.toLong, k = fpK,
-          bloomBits = bBits)
       }
       gcWindow()
     }

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamEval
 
-/** Round-17 batch (q284–q291): the streaming monitor family,
+/** Round-17 batch (q284–q292): the streaming monitor family,
   * oracle-gated — EVERY StreamEval state type (value, period, binned,
-  * fingerprint both layouts, scored, confusion) carries a CORRECTNESS
-  * row.
+  * fingerprint, scored, confusion) carries a CORRECTNESS row.
   *
   * The [[StreamEval]] monitors were spec-pinned (stream ≡ batch in
   * StreamEvalSpec with out-of-order + replay + crash-swap) but carried
@@ -33,11 +32,14 @@ import graft.streaming.StreamEval
   *  - q286 chi-square homogeneity from a BINNED state
   *    ([[StreamEval.mergeBinnedBatch]] → [[StreamEval.chiSquareFromState]]):
   *    hour-of-day distribution across event types;
-  *  - q287 incremental winnow novelty from a FINGERPRINT state
-  *    ([[StreamEval.mergeFingerprintBatch]] →
-  *    [[StreamEval.winnowNoveltyFromState]]): arriving documents
+  *  - q288–q290 calibration, Brier and kappa from SCORED and
+  *    CONFUSION states;
+  *  - q291 incremental winnow novelty from the FINGERPRINT state
+  *    ([[StreamEval.appendFingerprintBatch]] →
+  *    [[StreamEval.winnowNoveltyFromSet]]): arriving documents
   *    decontaminated against the accumulated corpus fingerprints with
-  *    one keyed join, never a history rescan.
+  *    one keyed join, never a history rescan; q292 the same read-out
+  *    across a compaction.
   *
   * Scale shape: each merge is one scan of its batch folded to a
   * bounded cell delta plus a state-sized regroup — the monitor cost IS
@@ -197,54 +199,6 @@ object Extended30 {
       |FROM e""".stripMargin
 
   // --------------------------------------------------------------------
-  // q287 — incremental winnow-novelty READ FROM FINGERPRINT-MONITOR
-  // STATE: the corpus (doc_id % 10 ≠ 0) is fingerprint-folded into
-  // state in 3 merges (+ the replay no-op), then the ARRIVING batch
-  // (doc_id % 10 = 0) is decontaminated against the state with ONE
-  // keyed join — history never rescanned. Same winnowing parameters as
-  // q282 (k=4, w=5); per batch doc: total fingerprints, fingerprints
-  // already known to the corpus, novelty flag.
-  private val WinK = 4
-  private val WinW = 5
-
-  def q287(s: SparkSession, dir: String): DataFrame = {
-    val statePath = freshState("q287")
-    val docs = t(s, dir, "documents")
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    mergeBuckets(corpus, pmod(col("doc_id"), lit(3)))(
-      (batch, bid) => StreamEval.mergeFingerprintBatch(
-        s, batch, "doc_id", "text", statePath, bid, WinK, WinW))
-    StreamEval.winnowNoveltyFromState(s, statePath,
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        WinK, WinW)
-      .orderBy(col("doc_id"))
-  }
-
-  val q287Sql: String =
-    s"""WITH tk AS (SELECT doc_id, ${DocOps.tokensSql} AS toks
-       |            FROM documents),
-       | hs AS (SELECT doc_id, list_transform(
-       |          generate_series(1, len(toks) - ${WinK - 1}),
-       |          i -> md5(array_to_string(
-       |            list_slice(toks, i, i + ${WinK - 1}), ' '))) AS h
-       |        FROM tk WHERE len(toks) >= ${WinK + WinW - 1}),
-       | fp AS (SELECT DISTINCT doc_id, unnest(list_transform(
-       |          generate_series(1, len(h) - ${WinW - 1}),
-       |          q -> list_min(list_slice(h, q, q + ${WinW - 1}))))
-       |            AS fingerprint
-       |        FROM hs),
-       | corp AS (SELECT DISTINCT fingerprint FROM fp
-       |          WHERE doc_id % 10 <> 0)
-       |SELECT f.doc_id, CAST(count(*) AS BIGINT) AS n_fp,
-       |  CAST(sum(CASE WHEN c.fingerprint IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS n_shared,
-       |  CAST(CASE WHEN sum(CASE WHEN c.fingerprint IS NOT NULL
-       |    THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END AS BIGINT) AS novel
-       |FROM fp f LEFT JOIN corp c USING (fingerprint)
-       |WHERE f.doc_id % 10 = 0
-       |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin
-
-  // --------------------------------------------------------------------
   // q288/q289/q290 — the remaining monitor states gated: SCORED
   // (calibration + Brier) and CONFUSION (kappa). With these, EVERY
   // StreamEval state type (value, period, binned, fingerprint, scored,
@@ -351,12 +305,17 @@ object Extended30 {
        |FROM tot CROSS JOIN marg""".stripMargin
 
   // --------------------------------------------------------------------
-  // q291 — the SAME winnow-novelty read-out as q287 through the
-  // APPEND-ONLY first-seen state layout ([[StreamEval
-  // .appendFingerprintBatch]]): O(new)-write generations instead of a
-  // full-state rewrite per merge — the 100 TB shape for the one
-  // monitor state that grows with the corpus. The oracle IS q287's:
-  // both layouts must land on the identical novelty rows.
+  // q291 — incremental winnow-novelty READ FROM FINGERPRINT-MONITOR
+  // STATE: the corpus (doc_id % 10 ≠ 0) is fingerprint-folded into the
+  // append-only generations ([[StreamEval.appendFingerprintBatch]]) in
+  // 3 merges (+ the replay no-op), then the ARRIVING batch
+  // (doc_id % 10 = 0) is decontaminated against the state with ONE
+  // keyed join — history never rescanned. Per batch doc: total
+  // fingerprints, fingerprints already known to the corpus, novelty
+  // flag. Same winnowing parameters as q282 (k=4, w=5).
+  private val WinK = 4
+  private val WinW = 5
+
   def q291(s: SparkSession, dir: String): DataFrame = {
     val statePath = freshState("q291")
     val docs = t(s, dir, "documents")
@@ -370,7 +329,29 @@ object Extended30 {
       .orderBy(col("doc_id"))
   }
 
-  val q291Sql: String = q287Sql
+  val q291Sql: String =
+    s"""WITH tk AS (SELECT doc_id, ${DocOps.tokensSql} AS toks
+       |            FROM documents),
+       | hs AS (SELECT doc_id, list_transform(
+       |          generate_series(1, len(toks) - ${WinK - 1}),
+       |          i -> md5(array_to_string(
+       |            list_slice(toks, i, i + ${WinK - 1}), ' '))) AS h
+       |        FROM tk WHERE len(toks) >= ${WinK + WinW - 1}),
+       | fp AS (SELECT DISTINCT doc_id, unnest(list_transform(
+       |          generate_series(1, len(h) - ${WinW - 1}),
+       |          q -> list_min(list_slice(h, q, q + ${WinW - 1}))))
+       |            AS fingerprint
+       |        FROM hs),
+       | corp AS (SELECT DISTINCT fingerprint FROM fp
+       |          WHERE doc_id % 10 <> 0)
+       |SELECT f.doc_id, CAST(count(*) AS BIGINT) AS n_fp,
+       |  CAST(sum(CASE WHEN c.fingerprint IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_shared,
+       |  CAST(CASE WHEN sum(CASE WHEN c.fingerprint IS NOT NULL
+       |    THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END AS BIGINT) AS novel
+       |FROM fp f LEFT JOIN corp c USING (fingerprint)
+       |WHERE f.doc_id % 10 = 0
+       |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin
 
   // --------------------------------------------------------------------
   // q292 — q291's read-out with a COMPACTION mid-stream
@@ -379,7 +360,7 @@ object Extended30 {
   // consolidated generation carrying the watermark marker), merge
   // generation 2, then REPLAY batches 0 and 1 — both must no-op, batch
   // 0 through the marker alone (its directory no longer exists). The
-  // oracle IS q287's: compaction must not move a single novelty row.
+  // oracle IS q291's: compaction must not move a single novelty row.
   def q292(s: SparkSession, dir: String): DataFrame = {
     val statePath = freshState("q292")
     val docs = t(s, dir, "documents")
@@ -400,45 +381,15 @@ object Extended30 {
       .orderBy(col("doc_id"))
   }
 
-  val q292Sql: String = q287Sql
-
-  // --------------------------------------------------------------------
-  // q293 — q291's read-out through the BLOOM-prefiltered probe: every
-  // generation is appended with a Bloom sidecar, and both the per-batch
-  // anti-join and the final novelty read-out drop the batch's
-  // fingerprints through the OR-merged Bloom first — only maybe-seen
-  // survivors pay the exact state join (bloom-negatives are novel by
-  // the no-false-negative guarantee). The oracle IS q287's: the
-  // prefilter changes the plan, never a row. Bits sized LOW on purpose
-  // (2¹⁸ ≈ 262k bits for ~10⁵ corpus fingerprints at sf0.01) so real
-  // false positives flow through the exact join in the gated run.
-  private val BloomBits = 1 << 18
-
-  def q293(s: SparkSession, dir: String): DataFrame = {
-    val statePath = freshState("q293")
-    val docs = t(s, dir, "documents")
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    mergeBuckets(corpus, pmod(col("doc_id"), lit(3)))(
-      (batch, bid) => StreamEval.appendFingerprintBatch(
-        s, batch, "doc_id", "text", statePath, bid, WinK, WinW,
-        bloomBits = BloomBits))
-    StreamEval.winnowNoveltyFromSet(s, statePath,
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        WinK, WinW, bloomBits = BloomBits)
-      .orderBy(col("doc_id"))
-  }
-
-  val q293Sql: String = q287Sql
+  val q292Sql: String = q291Sql
 
   /** Name → query, for SparkEntry. */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q292_monitor_winnow_compact" -> (q292 _),
-    "q293_monitor_winnow_bloom" -> (q293 _),
     "q291_monitor_winnow_append" -> (q291 _),
     "q288_monitor_calibration_state" -> (q288 _),
     "q289_monitor_brier_state" -> (q289 _),
     "q290_monitor_kappa_state" -> (q290 _),
-    "q287_monitor_winnow_novelty" -> (q287 _),
     "q284_monitor_ks_state" -> (q284 _),
     "q285_monitor_pettitt_state" -> (q285 _),
     "q286_monitor_chi2_state" -> (q286 _)
@@ -447,12 +398,10 @@ object Extended30 {
   /** Name → DuckDB oracle SQL, for SparkEntry. */
   val oracles: Map[String, String] = Map(
     "q292_monitor_winnow_compact" -> q292Sql,
-    "q293_monitor_winnow_bloom" -> q293Sql,
     "q291_monitor_winnow_append" -> q291Sql,
     "q288_monitor_calibration_state" -> q288Sql,
     "q289_monitor_brier_state" -> q289Sql,
     "q290_monitor_kappa_state" -> q290Sql,
-    "q287_monitor_winnow_novelty" -> q287Sql,
     "q284_monitor_ks_state" -> q284Sql,
     "q285_monitor_pettitt_state" -> q285Sql,
     "q286_monitor_chi2_state" -> q286Sql

@@ -517,100 +517,26 @@ object StreamEval {
       periodCounts(spark, statePath), "day", "n", factor)
 
   // ------------------------------------------------------------------
-  // Winnowing-fingerprint novelty monitoring: the corpus fingerprint
-  // frame (fingerprint, df) is the sufficient statistic for "has this
-  // content been seen" — the winnowing guarantee says any shared token
-  // run of ≥ k+w−1 tokens shares a selected fingerprint — it is bounded
-  // by the distinct-fingerprint count (~2·grams/(w+1) per doc, deduped
-  // across the corpus), and it merges by ADDITION of document
-  // frequencies: the same semilattice contract as every state in this
-  // file. Arriving batches are then decontaminated against the state
-  // with one keyed join — history is never rescanned (the
-  // [[graft.ext.TextDedup.novelAgainst]] precedent, persisted).
-
-  /** Start a fingerprint monitor over a streaming frame of
-    * (id, text) document rows. */
-  def startFingerprints(docs: DataFrame, idCol: String, textCol: String,
-      statePath: String, checkpointDir: String, k: Int = 4, w: Int = 5,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
-      : StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeFingerprintBatch(spark, batch, idCol, textCol, statePath,
-          id, k, w)
-        ()
-      }
-      .start()
-  }
-
-  /** One document micro-batch: winnow-fingerprint it
-    * ([[graft.ext.TextDedup.winnowFingerprints]] — the SAME per-row
-    * zero-shuffle selection the batch queries run, so stream ≡ batch
-    * starts at the fold), fold to (fingerprint, df) and add into the
-    * state. Same idempotent-replay and crash-safe-swap contract as
-    * [[mergeBatch]]. */
-  def mergeFingerprintBatch(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, statePath: String, batchId: Long,
-      k: Int = 4, w: Int = 5): Long =
-    mergeState(spark, batch, statePath, batchId,
-      keys = Seq("fingerprint"), sums = Seq("df" -> (sum(_)))) { b =>
-      graft.ext.TextDedup.winnowFingerprints(b, idCol, textCol, k, w)
-        .groupBy(col("fingerprint")).agg(count(lit(1)).as("df"))
-    }
-
-  /** Current corpus fingerprint frame (fingerprint, df). */
-  def fingerprintCounts(spark: SparkSession, statePath: String)
-      : DataFrame =
-    readState(spark, statePath)
-      .getOrElse(throw new IllegalStateException(
-        s"no monitor state at $statePath (and no backup generation)"))
-      .select(col("fingerprint"), col("df"))
-
-  /** Incremental decontamination read-out: fingerprint the ARRIVING
-    * batch and price each document's overlap with the accumulated
-    * corpus state — one keyed join against the bounded fingerprint
-    * frame, never a rescan of history. Output per batch document:
-    * (idCol, n_fp, n_shared, novel) where novel = 1 iff NO fingerprint
-    * is already known. Documents shorter than k+w−1 tokens select no
-    * fingerprints and are absent (the winnowing guarantee threshold —
-    * same drop rule as the batch operator). */
-  def winnowNoveltyFromState(spark: SparkSession, statePath: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      k: Int = 4, w: Int = 5): DataFrame = {
-    val fps = graft.ext.TextDedup.winnowFingerprints(
-      batch, idCol, textCol, k, w)
-    val st = fingerprintCounts(spark, statePath)
-      .select(col("fingerprint"), lit(1L).as("__hit"))
-    fps.join(st, Seq("fingerprint"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_fp"),
-        coalesce(sum(col("__hit")), lit(0L)).as("n_shared"))
-      .withColumn("novel",
-        when(col("n_shared") === 0L, 1L).otherwise(0L))
-  }
-
-  // ------------------------------------------------------------------
-  // Append-only first-seen fingerprint layout — the 100 TB shape for
-  // the ONE monitor state that grows with the corpus.
-  // [[mergeFingerprintBatch]]'s semilattice (fingerprint, df) state
-  // REWRITES the full state parquet on every merge: correct, and the
-  // right shape for the bounded states (confusion ≤ classes²,
-  // calibration ≤ bins, drift cells, day counts), but O(|state|) write
-  // per batch once the state is corpus-sized. Here each batch's
-  // NEWLY-SEEN fingerprints land under their own `batch_id=N`
-  // subdirectory instead:
+  // Winnowing-fingerprint novelty monitoring: the set of corpus
+  // fingerprints is the sufficient statistic for "has this content been
+  // seen" — the winnowing guarantee says any shared token run of
+  // ≥ k+w−1 tokens shares a selected fingerprint. Arriving batches are
+  // decontaminated against it with one keyed join; history is never
+  // rescanned (the [[graft.ext.TextDedup.novelAgainst]] precedent,
+  // persisted).
+  //
+  // Unlike the bounded states above (confusion ≤ classes², calibration
+  // ≤ bins, drift cells, day counts) this state grows with the corpus,
+  // so it is NOT a [[mergeState]] state: a full rewrite per merge costs
+  // O(|state|) per batch (measured with Stress `fpstate`, local[32],
+  // 2M generated docs in 8 batches, k = 6: a rewrite layout's time per
+  // batch grew 8.4 → 36.3 s with the state while this layout stayed
+  // flat at 6.7–10 s). Each batch's NEWLY-SEEN fingerprints land under
+  // their own `batch_id=N` subdirectory instead:
   //  - write cost is O(new fingerprints), never O(state);
-  //  - the probe (batch anti-join state) is the irreducible cost of
-  //    EXACT novelty — the optional per-generation Bloom SIDECAR
-  //    ([[StreamNovelty]]'s word frames, OR-merged across generations)
-  //    prefilters it: bloom-negative fingerprints are DEFINITELY novel
-  //    (no false negatives) and skip the join; only the maybe-seen
-  //    survivors pay the exact probe. Exactness is preserved — a false
-  //    positive just routes one more fingerprint through the exact
-  //    join;
+  //  - the probe is one exact anti-join of the batch against the live
+  //    generations; Catalyst picks broadcast or shuffle for it from the
+  //    size statistics;
   //  - replay idempotency comes from the LAYOUT: a batch directory
   //    only comes into existence by RENAME of a fully-written temp
   //    (no torn generation is ever visible), so re-delivery of batch N
@@ -621,8 +547,8 @@ object StreamEval {
   //    in-directory compaction marker, and the replay gate treats any
   //    batchId ≤ marker as already merged, so compaction never
   //    re-opens the no-op contract.
-  // The trade: presence only, no document frequency (novelty needs
-  // presence only; keep the mergeState form when df matters).
+  // The state holds presence only, no document frequency: novelty
+  // needs presence only.
   //
   // Single-writer contract (what foreachBatch guarantees): merges and
   // compactions are serialized with each other and with read-outs.
@@ -637,21 +563,6 @@ object StreamEval {
     * `_`-prefixed, so parquet readers never see it. */
   private val FpCompactMarker = "_compacted_through"
 
-  private def fpBloomName(bits: Int, hashes: Int) = s"_bloom_b${bits}_h$hashes"
-
-  /** Survivor-set bound for the broadcast-probe formulation of the
-    * exact join (≈20 MB of md5-hex strings): below it the state is
-    * scanned with a broadcast hash probe instead of shuffled. */
-  private val MaxBroadcastSurvivors = 500000L
-
-  /** A driver-held fingerprint list as a one-column local frame —
-    * broadcast/probe fodder for the bounded survivor sets (r19). */
-  private def localFingerprintDf(spark: SparkSession,
-      fps: Seq[String]): DataFrame = {
-    import spark.implicits._
-    fps.toDF("fingerprint")
-  }
-
   /** Label the jobs an eager block submits (guide §1.5) so profiler
     * output attributes each monitor job; description restored after. */
   private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
@@ -659,36 +570,6 @@ object StreamEval {
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(null)
   }
-
-  /** Process-lifetime cache of OR-merged packed Bloom words, keyed by
-    * the EXACT live sidecar-directory set (+ bits/hashes). Safe by the
-    * layout's immutability: a sidecar directory's content never
-    * changes after its publishing rename except when compaction
-    * replaces a generation — and compaction always SHRINKS the live
-    * set, so the key changes with the content. Without the cache,
-    * every probe re-reads O(state) sidecar words — the same
-    * O(state)-per-batch shape the append layout exists to avoid;
-    * with it, a steady merge loop pays one full load, then O(new)
-    * OR-ins ([[appendFingerprintBatch]] folds the new generation's
-    * packed words into the cached array after publishing). Bounded at
-    * [[BloomCacheMax]] entries (each bits/8 bytes). */
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Array[Long]]()
-  private val BloomCacheMax = 8
-
-  private def bloomKey(dirs: Seq[HPath], bits: Int, hashes: Int)
-      : (String, Int, Int) =
-    (dirs.map(_.toString).sorted.mkString("\n"), bits, hashes)
-
-  private def bloomCachePut(key: (String, Int, Int),
-      words: Array[Long]): Unit = {
-    if (bloomCache.size >= BloomCacheMax) bloomCache.clear()
-    bloomCache.put(key, words)
-    ()
-  }
-
-  /** Test hook: drop all cached Bloom words. */
-  private[graft] def clearBloomCache(): Unit = bloomCache.clear()
 
   private type HPath = org.apache.hadoop.fs.Path
 
@@ -717,10 +598,10 @@ object StreamEval {
   }
 
   /** Repair a [[compactFingerprintGenerations]] run that crashed in
-    * its two-rename swap window. The swap order is: write tmp (parquet
-    * + sidecars, marker LAST) → rename gen(upTo) aside → rename tmp
-    * into place → delete aside. So on entry exactly one of these
-    * holds, each with one safe move:
+    * its two-rename swap window. The swap order is: write tmp (parquet,
+    * marker LAST) → rename gen(upTo) aside → rename tmp into place →
+    * delete aside. So on entry exactly one of these holds, each with
+    * one safe move:
     *  - tmp + gen both present: crash before the first rename — the
     *    state is untouched; delete the tmp.
     *  - gen absent, tmp carries the marker: crash between the renames —
@@ -754,19 +635,17 @@ object StreamEval {
     }
   }
 
-  /** Start an append-layout fingerprint monitor — the production
-    * wiring of the whole layout: O(new)-write generations
-    * ([[appendFingerprintBatch]]), optional Bloom sidecars feeding the
-    * prefiltered probe, and PERIODIC COMPACTION so directory growth is
-    * bounded at the source — every `compactEvery`-th batch folds the
-    * accumulated generations into one behind the watermark marker
-    * (skipped on a replayed batch whose id the watermark already
-    * covers). Novelty read-outs go through [[winnowNoveltyFromSet]] at
-    * any moment, exactly as [[startFingerprints]] pairs with
-    * [[winnowNoveltyFromState]]. */
+  /** Start a fingerprint monitor over a streaming frame of (id, text)
+    * document rows — the production wiring of the whole layout:
+    * O(new)-write generations ([[appendFingerprintBatch]]) and PERIODIC
+    * COMPACTION so directory growth is bounded at the source — every
+    * `compactEvery`-th batch folds the accumulated generations into one
+    * behind the watermark marker (skipped on a replayed batch whose id
+    * the watermark already covers). Novelty read-outs go through
+    * [[winnowNoveltyFromSet]] at any moment. */
   def startFingerprintSet(docs: DataFrame, idCol: String,
       textCol: String, statePath: String, checkpointDir: String,
-      k: Int = 4, w: Int = 5, bloomBits: Int = 0, compactEvery: Long = 0L,
+      k: Int = 4, w: Int = 5, compactEvery: Long = 0L,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds"))
       : StreamingQuery = {
     val spark = docs.sparkSession
@@ -775,44 +654,28 @@ object StreamEval {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         appendFingerprintBatch(spark, batch, idCol, textCol, statePath,
-          id, k, w, bloomBits)
+          id, k, w)
         if (compactEvery > 0L && id > 0L && id % compactEvery == 0L &&
             id > fpGenerations(spark, statePath)._1)
-          compactFingerprintGenerations(spark, statePath, upTo = id,
-            backfillBloomBits = bloomBits)
+          compactFingerprintGenerations(spark, statePath, upTo = id)
         ()
       }
       .start()
   }
 
-  /** One document micro-batch into the append layout: fingerprint it,
-    * anti-join against the live generations, write only the novel
-    * fingerprints under `batch_id=N`. Returns the number of NEW
-    * fingerprints (0 on replay or when nothing is novel — an
+  /** One document micro-batch into the layout: winnow-fingerprint it
+    * ([[graft.ext.TextDedup.winnowFingerprints]] — the SAME per-row
+    * zero-shuffle selection the batch queries run, so stream ≡ batch
+    * starts at the fold), anti-join against the live generations, write
+    * only the novel fingerprints under `batch_id=N`. Returns the number
+    * of NEW fingerprints (0 on replay or when nothing is novel — an
     * all-duplicate batch still creates its (empty) generation so a
     * replay of it stays a no-op). The count comes from an
     * [[org.apache.spark.sql.Observation]] riding the write job itself
-    * — no second read of the generation just to size it.
-    *
-    * @param bloomBits when > 0, two things happen: (1) the new
-    *        generation gets a Bloom SIDECAR (a [[StreamNovelty]] word
-    *        frame of its fingerprints, `bloomBits` bits / 5 hashes,
-    *        `_`-prefixed so parquet readers skip it — it travels with
-    *        the generation through compaction renames); (2) if EVERY
-    *        live generation already carries a matching sidecar, the
-    *        anti-join is prefiltered: the batch's fingerprints drop
-    *        through the OR-merged Bloom first and only the maybe-seen
-    *        survivors pay the exact probe — bloom-negatives are novel
-    *        by the no-false-negative guarantee. Result rows are
-    *        IDENTICAL with or without the prefilter; only the plan
-    *        shape changes. Sizing: ~10–15 bits per expected corpus
-    *        fingerprint for a useful survivor rate; an undersized
-    *        Bloom degrades gracefully (more survivors, same answer).
-    */
+    * — no second read of the generation just to size it. */
   def appendFingerprintBatch(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, statePath: String, batchId: Long,
-      k: Int = 4, w: Int = 5, bloomBits: Int = 0,
-      bloomHashes: Int = 5): Long = {
+      k: Int = 4, w: Int = 5): Long = {
     recoverFingerprintState(spark, statePath)
     val root = new HPath(statePath)
     val fs = fsOf(spark, root)
@@ -823,219 +686,39 @@ object StreamEval {
     val fresh = graft.ext.TextDedup
       .winnowFingerprints(batch, idCol, textCol, k, w)
       .select(col("fingerprint")).distinct()
-    val bloom =
-      if (bloomBits > 0 && live.nonEmpty)
-        loadBloomIfUsable(spark, live, bloomBits, bloomHashes)
-      else None
-    val (novel, newWords) =
-      if (live.isEmpty)
-        writeGeneration(spark, fs, root, gen, batchId, fresh,
-          bloomBits, bloomHashes)
-      else bloom match {
-        case Some(packed) =>
-          // fresh feeds both branches of the split — persist it for the
-          // duration of this (eager) call so the winnow runs once
-          val freshP = fresh.persist()
-          try {
-            val probed = freshP.withColumn("__maybe",
-              StreamNovelty.mightContainWords(spark, packed,
-                col("fingerprint"), bloomBits, bloomHashes, buckets = 1))
-            val definitelyNovel =
-              probed.filter(!col("__maybe")).select(col("fingerprint"))
-            val survivors =
-              probed.filter(col("__maybe")).select(col("fingerprint"))
-            // the survivors' exact probe: with a well-sized Bloom the
-            // survivor set is tiny (true duplicates + the FP rate), so
-            // the corpus-sized state is SCANNED once with a
-            // broadcast semi-probe, never shuffled or sorted, where
-            // the plain anti-join shuffles all of it per batch.
-            // r19: the survivors are COLLECTED (the same
-            // ≤ MaxBroadcastSurvivors volume the broadcast ships
-            // anyway) and the probe's hits collected back (≤ survivors
-            // by the semi-join), so the novel survivors are a driver
-            // set difference and the generation WRITE below carries no
-            // nested broadcast subqueries — the r18 shape paid two
-            // broadcast-build jobs with the state scan nested inside
-            // the write. The count STAYS (it is what materializes the
-            // freshP cache COMPLETELY — a bounded limit-collect was
-            // measured re-winnowing the whole batch in the write job
-            // because take-style partial consumption never caches a
-            // partition); the collect then reads the warm cache.
-            // Identical rows: the set difference IS the anti-join over
-            // distinct non-null md5 strings. A saturated Bloom
-            // (survivor set over the bound) falls back to the shuffle
-            // anti-join — same rows either way.
-            val nSurv = labeled(spark, s"fp_append b=$batchId: winnow+" +
-              "survivor count")(survivors.count()) // materializes freshP
-            val survNovel =
-              if (nSurv <= MaxBroadcastSurvivors) {
-                val survRows = labeled(spark,
-                  s"fp_append b=$batchId: survivor collect (cached)")(
-                  survivors.collect()).map(_.getString(0))
-                val hitSet = labeled(spark,
-                  s"fp_append b=$batchId: state scan (exact hits)")(
-                  fingerprintSetOf(spark, live)
-                    .join(broadcast(localFingerprintDf(spark, survRows.toSeq)),
-                      Seq("fingerprint"), "left_semi")
-                    .collect()).map(_.getString(0)).toSet
-                localFingerprintDf(spark,
-                  survRows.toSeq.filterNot(hitSet))
-              } else survivors.join(fingerprintSetOf(spark, live),
-                Seq("fingerprint"), "left_anti")
-            writeGeneration(spark, fs, root, gen, batchId,
-              definitelyNovel.unionByName(survNovel),
-              bloomBits, bloomHashes)
-          } finally fresh.unpersist()
-        case None =>
-          writeGeneration(spark, fs, root, gen, batchId,
-            fresh.join(fingerprintSetOf(spark, live),
-              Seq("fingerprint"), "left_anti"),
-            bloomBits, bloomHashes)
-      }
-    // O(new) cache maintenance: fold the just-published generation's
-    // packed words (returned by the write — never re-read from the
-    // sidecar, r18) into the cached filter so the NEXT load is a cache
-    // hit instead of an O(state) sidecar re-merge — the same
-    // O(new)-not-O(state) discipline as the generation write itself.
-    // Skipped when the pre-append state had no usable filter (mixed
-    // sidecars) — the probe refuses/falls back there anyway.
-    if (bloomBits > 0 && (bloom.isDefined || live.isEmpty)) {
-      val genSidecar = new HPath(gen, fpBloomName(bloomBits, bloomHashes))
-      val merged = bloom match {
-        case Some(old) =>
-          val m = old.clone()
-          val nw = newWords.get
-          var i = 0
-          while (i < m.length) { m(i) |= nw(i); i += 1 }
-          m
-        case None => newWords.get
-      }
-      val allDirs = live.map { case (_, p) =>
-        new HPath(p, fpBloomName(bloomBits, bloomHashes))
-      } :+ genSidecar
-      bloomCachePut(bloomKey(allDirs, bloomBits, bloomHashes), merged)
-    }
-    novel
+    val novel =
+      if (live.isEmpty) fresh
+      else fresh.join(fingerprintSetOf(spark, live), Seq("fingerprint"),
+        "left_anti")
+    writeGeneration(spark, fs, root, gen, batchId, novel)
   }
-
-  /** The sidecar word frame's schema — what [[StreamNovelty
-    * .batchWords]] produces: (bucket INT, word_idx INT, word BIGINT). */
-  private val SidecarSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("word_idx",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("word",
-      org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** Write-tmp-then-rename publish of one generation (`_`-prefixed
     * tmp is invisible to parquet readers, so a crash mid-write never
     * leaves a torn generation and the rename publishes atomically).
-    * Returns the generation's row count, observed ON the write job,
-    * plus — when a Bloom sidecar was built — the sidecar's packed
-    * words, so the caller's O(new) cache OR-in never re-reads the
-    * sidecar it just wrote (r18: that re-read was one extra job + two
-    * extra reads of every generation per append).
-    *
-    * r19: the packed words themselves now ride the SAME write job as a
-    * second observed aggregate ([[StreamNovelty.bloomWords]], pinned
-    * bit-identical to batchWords∘packedGlobal) — the r18 shape still
-    * re-READ the generation it had just written to build the sidecar,
-    * one extra job + a (tiny) shuffle per merge at any scale. The
-    * sparse sidecar frame is derived from the observed words on the
-    * driver (≤ bloomBits/64 rows) and written as before; the
-    * generation parquet is now read ZERO times by its own append. */
+    * Returns the generation's row count, observed ON the write job. */
   private def writeGeneration(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: HPath, gen: HPath,
-      batchId: Long, novel: DataFrame, bloomBits: Int,
-      bloomHashes: Int): (Long, Option[Array[Long]]) = {
+      batchId: Long, novel: DataFrame): Long = {
     val tmp = new HPath(root, s"_tmp_b$batchId")
     if (fs.exists(tmp)) fs.delete(tmp, true) // leftover from a crash
     val obs = org.apache.spark.sql.Observation(s"fp_append_b$batchId")
-    val observed =
-      if (bloomBits <= 0) novel.observe(obs, count(lit(1)).as("n"))
-      else novel.observe(obs, count(lit(1)).as("n"),
-        StreamNovelty.bloomWords(col("fingerprint"), bloomBits,
-          bloomHashes).as("words"))
     labeled(spark, s"fp_append b=$batchId: generation write (+obs)")(
-      observed.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+      novel.observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString))
     val n = obs.get("n").asInstanceOf[Long]
-    val packed =
-      if (bloomBits <= 0) None
-      else {
-        val arr = obs.get("words")
-          .asInstanceOf[scala.collection.Seq[Long]].toArray
-        // sidecar INSIDE the tmp so the rename below publishes content
-        // and Bloom together; sparse rows (zero words dropped, exactly
-        // batchWords' shape), buckets = 1
-        val rows: Seq[org.apache.spark.sql.Row] =
-          arr.toSeq.zipWithIndex.collect { case (w, i) if w != 0L =>
-            org.apache.spark.sql.Row(0, i, w)
-          }
-        labeled(spark, s"fp_append b=$batchId: sidecar write (local)")(
-          spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-              SidecarSchema)
-            .coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(new HPath(tmp,
-              fpBloomName(bloomBits, bloomHashes)).toString))
-        Some(arr)
-      }
     require(fs.rename(tmp, gen),
       s"appendFingerprintBatch: publishing $tmp -> $gen failed; " +
         "no generation was installed (state unchanged)")
-    (n, packed)
-  }
-
-  /** The OR-merged packed Bloom WORDS over the live generations'
-    * sidecars, or None unless EVERY live generation carries a sidecar
-    * with the SAME (bits, hashes) — a generation missing from the
-    * Bloom would turn its fingerprints into false negatives and
-    * silently break exactness, so the prefilter is all-or-nothing.
-    * The parameters are encoded in the sidecar directory NAME, so the
-    * check is a driver listing, no reads.
-    *
-    * Collected to the DRIVER (bits/8 bytes — the filter is sized by
-    * the caller precisely so it fits one machine) and shipped to
-    * executors as a broadcast VARIABLE by the probe: a first cut
-    * carried the packed array as a crossJoin column and every
-    * UnsafeProjection after it copied the whole filter per row — 32 MB
-    * × a 4M-fingerprint batch is ~125 TB of memcpy, a measured
-    * multi-minute stall ([[StreamNovelty.mightContainWords]]'s
-    * caveat). */
-  private def loadBloomIfUsable(spark: SparkSession,
-      live: Seq[(Long, HPath)], bits: Int, hashes: Int)
-      : Option[Array[Long]] = {
-    require(bits % 64 == 0 && bits > 0,
-      s"bloomBits must be a positive multiple of 64, got $bits")
-    val name = fpBloomName(bits, hashes)
-    val dirs = live.map { case (_, p) => new HPath(p, name) }
-    val fs = fsOf(spark, dirs.head)
-    // `_`-prefixed paths are hidden only during RECURSIVE listing
-    // (which is what keeps the sidecars invisible to generation
-    // reads); an EXPLICITLY passed root is read normally — Spark logs
-    // a misleading "All paths were ignored" WARN and then reads the
-    // data (verified empirically; the oracle rows gate it every run)
-    if (!dirs.forall(fs.exists)) None
-    else {
-      val key = bloomKey(dirs, bits, hashes)
-      Option(bloomCache.get(key)).orElse {
-        val words = StreamNovelty.packedGlobal(
-          StreamNovelty.mergeWords(
-            dirs.map(d => spark.read.parquet(d.toString))),
-          bits, buckets = 1)
-          .head().getSeq[Long](0).toArray
-        bloomCachePut(key, words)
-        Some(words)
-      }
-    }
+    n
   }
 
   /** Merge every live generation with id ≤ `upTo` into ONE
     * consolidated generation published at `batch_id=upTo`, carrying
-    * the [[FpCompactMarker]] — the bound on the append layout's
-    * directory count (one micro-batch a minute is ~526k generations a
-    * year unbounded; compacted, the live set is one consolidated
-    * generation plus the tail since the last compaction).
+    * the [[FpCompactMarker]] — the bound on the layout's directory
+    * count (one micro-batch a minute is ~526k generations a year
+    * unbounded; compacted, the live set is one consolidated generation
+    * plus the tail since the last compaction).
     *
     * Contracts preserved, by construction:
     *  - EXACTNESS: generations are disjoint (a fingerprint is stored
@@ -1046,24 +729,15 @@ object StreamEval {
     *    batchId ≤ upTo as merged, so re-delivery of a compacted-away
     *    batch still no-ops (spec-pinned);
     *  - CRASH SAFETY: the consolidated tmp is fully written (parquet,
-    *    sidecars, marker LAST) before the two-rename swap, and every
-    *    entry point repairs the swap window via
-    *    [[recoverFingerprintState]]; stale sub-watermark generations
-    *    are pruned by the READ RULE, so the final sweep's deletes are
-    *    pure hygiene — a failure there changes no answer.
-    *
-    * Bloom sidecars consolidate too: each (bits, hashes) family
-    * present in EVERY input generation is OR-merged into the
-    * consolidated generation (word frames merge by bit-OR —
-    * [[StreamNovelty.mergeWords]]); `backfillBloomBits` > 0 builds
-    * that family fresh from the consolidated fingerprints even where
-    * inputs lack it, the upgrade path for a state that started
-    * without sidecars.
+    *    marker LAST) before the two-rename swap, and every entry point
+    *    repairs the swap window via [[recoverFingerprintState]]; stale
+    *    sub-watermark generations are pruned by the READ RULE, so the
+    *    final sweep's deletes are pure hygiene — a failure there
+    *    changes no answer.
     *
     * @return the consolidated generation's fingerprint count */
   def compactFingerprintGenerations(spark: SparkSession,
-      statePath: String, upTo: Long,
-      backfillBloomBits: Int = 0, bloomHashes: Int = 5): Long = {
+      statePath: String, upTo: Long): Long = {
     recoverFingerprintState(spark, statePath)
     val root = new HPath(statePath)
     val fs = fsOf(spark, root)
@@ -1084,31 +758,11 @@ object StreamEval {
         " below upTo would be marked as merged")
     val tmp = new HPath(root, s"_tmp_compact_$upTo")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    val consolidated = toCompact.map { case (_, p) =>
-      spark.read.parquet(p.toString).select(col("fingerprint"))
-    }.reduce(_ unionByName _)
     val obs = org.apache.spark.sql.Observation(s"fp_compact_$upTo")
-    consolidated.observe(obs, count(lit(1)).as("n"))
+    fingerprintSetOf(spark, toCompact)
+      .observe(obs, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val n = obs.get("n").asInstanceOf[Long]
-    // sidecar families carried by EVERY input generation OR-merge over
-    val families = toCompact.map { case (_, p) =>
-      fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith("_bloom_")).toSet
-    }.reduce(_ intersect _)
-    families.foreach { fam =>
-      StreamNovelty.mergeWords(toCompact.map { case (_, p) =>
-        spark.read.parquet(new HPath(p, fam).toString)
-      }).write.mode(SaveMode.Overwrite)
-        .parquet(new HPath(tmp, fam).toString)
-    }
-    if (backfillBloomBits > 0 &&
-        !families.contains(fpBloomName(backfillBloomBits, bloomHashes)))
-      StreamNovelty.batchWords(spark.read.parquet(tmp.toString),
-          "fingerprint", backfillBloomBits, bloomHashes, buckets = 1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new HPath(tmp,
-          fpBloomName(backfillBloomBits, bloomHashes)).toString)
     // marker LAST: its presence certifies the tmp is complete (the
     // roll-forward in recoverFingerprintState keys on it)
     fs.create(new HPath(tmp, FpCompactMarker)).close()
@@ -1134,96 +788,35 @@ object StreamEval {
   /** All fingerprints seen so far (distinct by construction — each is
     * stored exactly once, in the generation that first saw it;
     * compaction unions disjoint generations, preserving that). */
-  def fingerprintSet(spark: SparkSession, statePath: String): DataFrame =
-    fingerprintSetIfAny(spark, statePath)
-      .getOrElse(throw new IllegalStateException(
-        s"no fingerprint generations at $statePath"))
+  def fingerprintSet(spark: SparkSession, statePath: String): DataFrame = {
+    recoverFingerprintState(spark, statePath)
+    val (_, live) = fpGenerations(spark, statePath)
+    if (live.isEmpty) throw new IllegalStateException(
+      s"no fingerprint generations at $statePath")
+    fingerprintSetOf(spark, live)
+  }
 
   private def fingerprintSetOf(spark: SparkSession,
       live: Seq[(Long, HPath)]): DataFrame =
     spark.read.parquet(live.map(_._2.toString): _*)
       .select(col("fingerprint"))
 
-  private def fingerprintSetIfAny(spark: SparkSession,
-      statePath: String): Option[DataFrame] = {
-    recoverFingerprintState(spark, statePath)
-    val (_, live) = fpGenerations(spark, statePath)
-    if (live.isEmpty) None else Some(fingerprintSetOf(spark, live))
-  }
-
-  /** [[winnowNoveltyFromState]] over the append layout — identical
-    * read-out (presence is all novelty needs), O(new)-write state.
-    *
-    * @param bloomBits when > 0, the probe is prefiltered through the
-    *        generations' Bloom sidecars exactly as in
-    *        [[appendFingerprintBatch]], including the broadcast-probe
-    *        formulation: the distinct maybe-seen survivors are COUNTED
-    *        (one eager scan-bound job — the winnow never shuffles) and,
-    *        when broadcastable, the state is SCANNED with a broadcast
-    *        semi-probe and the hits broadcast back onto the batch —
-    *        the corpus-sized state is never shuffled or sorted
-    *        (measured: the prior survivors-shuffle formulation moved
-    *        MORE bytes than the exact join, 1.9 GB vs 1.4 GB at a
-    *        30M-fingerprint state). A saturated filter (survivor set
-    *        too big to broadcast) falls back to the exact shuffle
-    *        join. Identical rows on every path. Requires every live
-    *        generation to carry a matching sidecar (loud otherwise: a
-    *        silent fallback would hide a mis-sized probe). */
+  /** Incremental decontamination read-out: fingerprint the ARRIVING
+    * batch and price each document's overlap with the accumulated
+    * corpus fingerprints — one keyed join against the live
+    * generations, never a rescan of history. Output per batch
+    * document: (idCol, n_fp, n_shared, novel) where novel = 1 iff NO
+    * fingerprint is already known. Documents shorter than k+w−1 tokens
+    * select no fingerprints and are absent (the winnowing guarantee
+    * threshold — same drop rule as the batch operator). */
   def winnowNoveltyFromSet(spark: SparkSession, statePath: String,
       batch: DataFrame, idCol: String, textCol: String,
-      k: Int = 4, w: Int = 5, bloomBits: Int = 0,
-      bloomHashes: Int = 5): DataFrame = {
-    val fps0 = graft.ext.TextDedup.winnowFingerprints(
+      k: Int = 4, w: Int = 5): DataFrame = {
+    val fps = graft.ext.TextDedup.winnowFingerprints(
       batch, idCol, textCol, k, w)
-    // Bloom path only: the probe batch is winnowed by the eager
-    // survivor-count job AND by the returned read-out plan (where the
-    // broadcast subtree references it a second time) — a LAZY local
-    // checkpoint pins the winnow on its first materialization so the
-    // tokenize+hash pass over the batch runs once, not three times
-    // (r18; blocks are dropped by the caller's unpersist sweep, as
-    // with every loop-state pin in this library).
-    val fps = if (bloomBits > 0) fps0.localCheckpoint(false) else fps0
     val st = fingerprintSet(spark, statePath)
       .select(col("fingerprint"), lit(1L).as("__hit"))
-    val joined =
-      if (bloomBits <= 0) fps.join(st, Seq("fingerprint"), "left")
-      else {
-        val (_, live) = fpGenerations(spark, statePath)
-        val packed = loadBloomIfUsable(spark, live, bloomBits, bloomHashes)
-          .getOrElse(throw new IllegalStateException(
-            s"winnowNoveltyFromSet: bloom probe requested but not every" +
-              s" live generation at $statePath carries a " +
-              fpBloomName(bloomBits, bloomHashes) + " sidecar"))
-        def maybeCol = StreamNovelty.mightContainWords(spark, packed,
-          col("fingerprint"), bloomBits, bloomHashes, buckets = 1)
-        // r19 (the appendFingerprintBatch discipline): the bounded
-        // survivor set is COLLECTED (the same volume the broadcast
-        // ships) and the state's hits collected back (≤ survivors), so
-        // the returned read-out plan joins against a LOCAL hits frame
-        // with no nested state-scan subquery — the r18 shape paid a
-        // survivor-count job plus two broadcast builds at materialize
-        // time. hits ⊆ survivors ⊆ maybe-seen, so joining ALL batch
-        // fingerprints against broadcast(hits) stays exact: a
-        // bloom-negative fingerprint cannot be in hits and lands on
-        // __hit NULL — no union split, ONE winnow in the plan.
-        val survRows = labeled(spark,
-          "fp_readout: winnow+survivor collect")(
-          fps.filter(maybeCol).select(col("fingerprint"))
-            .distinct().limit((MaxBroadcastSurvivors + 1).toInt)
-            .collect()).map(_.getString(0))
-        if (survRows.length <= MaxBroadcastSurvivors) {
-          val hitRows = labeled(spark,
-            "fp_readout: state scan (exact hits)")(st
-            .join(broadcast(localFingerprintDf(spark, survRows.toSeq)),
-              Seq("fingerprint"), "left_semi")
-            .select(col("fingerprint"))
-            .collect()).map(_.getString(0))
-          val hitsDf = localFingerprintDf(spark, hitRows.toSeq)
-            .withColumn("__hit", lit(1L))
-          fps.join(broadcast(hitsDf), Seq("fingerprint"), "left")
-        } else fps.join(st, Seq("fingerprint"), "left")
-      }
-    joined
+    fps.join(st, Seq("fingerprint"), "left")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_fp"),
         coalesce(sum(col("__hit")), lit(0L)).as("n_shared"))

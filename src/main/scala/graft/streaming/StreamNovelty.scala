@@ -229,9 +229,7 @@ object StreamNovelty {
     * few-KB filters this expression path was built for, quadratic
     * disaster for corpus-scale ones (a 2²⁸-bit filter is 32 MB; carried
     * through a 4M-row batch that is ~125 TB of memcpy, measured as a
-    * multi-minute stall). For large filters use
-    * [[mightContainWords]], which ships the words ONCE per executor as
-    * a broadcast variable and leaves the row untouched. */
+    * multi-minute stall). */
   def mightContainPositions(posArr: org.apache.spark.sql.Column,
       bloomArr: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
@@ -239,113 +237,5 @@ object StreamNovelty {
       call_function("bit_get",
         element_at(bloomArr, floor(p / lit(64L)).cast("int") + 1),
         (p % 64).cast("int")) === 1)
-  }
-
-  /** Packed Bloom words as ONE global AGGREGATE (buckets = 1 — the
-    * generation-sidecar layout): per input key the same murmur
-    * double-hash positions as [[batchWords]], OR-folded into a dense
-    * `numBits/64`-long buffer, merged across partitions by bit-OR.
-    * Bit-for-bit the array [[packedGlobal]] produces from
-    * [[batchWords]] over the same keys (spec-pinned) — order-free,
-    * idempotent, null keys skipped (batchWords' isNotNull filter).
-    *
-    * Exists so a generation write can compute its sidecar words ON the
-    * write job via an [[org.apache.spark.sql.Observation]] instead of
-    * re-reading the generation it just wrote (r19 — that re-read was a
-    * whole extra job + shuffle per merge at any scale). The buffer is
-    * numBits/8 bytes, sized by the caller to be broadcastable, so an
-    * observed metric of this size is driver-cheap by the same
-    * argument. */
-  def bloomWords(keyCol: org.apache.spark.sql.Column, numBits: Int,
-      numHashes: Int): org.apache.spark.sql.Column = {
-    require(numBits % 64 == 0 && numBits > 0,
-      s"numBits must be a positive multiple of 64, got $numBits")
-    org.apache.spark.sql.graft.Bridge.column(
-      BloomWordsAgg(org.apache.spark.sql.graft.Bridge.expression(keyCol),
-        numBits, numHashes).toAggregateExpression())
-  }
-
-  case class BloomWordsAgg(child: org.apache.spark.sql.catalyst.expressions.Expression,
-      numBits: Int, numHashes: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends org.apache.spark.sql.catalyst.expressions.aggregate
-      .TypedImperativeAggregate[Array[Long]] {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.types._
-
-    override def children: Seq[Expression] = Seq(child)
-    override def nullable: Boolean = false
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def createAggregationBuffer(): Array[Long] =
-      new Array[Long](numBits / 64)
-    override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-      val v = child.eval(input)
-      if (v != null) {
-        val key = v.toString
-        // buckets = 1: bucketOf(key, 1) == 0, no bucket offset
-        val pos = hashes(key, numHashes, numBits)
-        var i = 0
-        while (i < pos.length) {
-          buf(pos(i) / 64) |= 1L << (pos(i) % 64)
-          i += 1
-        }
-      }
-      buf
-    }
-    override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < b1.length) { b1(i) |= b2(i); i += 1 }
-      b1
-    }
-    override def eval(buf: Array[Long]): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(buf)
-    override def serialize(buf: Array[Long]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-      bb.asLongBuffer().put(buf)
-      bb.array()
-    }
-    override def deserialize(bytes: Array[Byte]): Array[Long] = {
-      val out = new Array[Long](bytes.length / 8)
-      java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-      out
-    }
-    override def withNewMutableAggBufferOffset(o: Int): BloomWordsAgg =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): BloomWordsAgg =
-      copy(inputAggBufferOffset = o)
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): BloomWordsAgg =
-      copy(child = newChildren.head)
-    override def prettyName: String = "bloom_words_agg"
-  }
-
-  /** Membership test against a DRIVER-HELD packed global bloom (the
-    * single row of [[packedGlobal]], collected): the words ship to
-    * executors ONCE as a broadcast variable and the probe is an O(1)
-    * per-row UDF over the same murmur double-hash family — no bloom
-    * bytes ever enter the row, so filter size never multiplies row
-    * width (the [[mightContainPositions]] caveat). A UDF by the same
-    * necessity as [[batchWords]]: the hash family is JVM code; the
-    * work is a few array reads per row. NULL keys probe to NULL (no
-    * membership claim), matching [[keyPositions]]. */
-  def mightContainWords(spark: org.apache.spark.sql.SparkSession,
-      words: Array[Long], keyCol: org.apache.spark.sql.Column,
-      numBits: Int, numHashes: Int, buckets: Int)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    require(words.length.toLong * 64 >= numBits.toLong * buckets,
-      s"packed words (${words.length}) shorter than " +
-        s"$numBits bits x $buckets buckets")
-    val bc = spark.sparkContext.broadcast(words)
-    udf { key: String =>
-      Option(key).map { k =>
-        val base = bucketOf(k, buckets).toLong * numBits
-        hashes(k, numHashes, numBits).forall { p =>
-          val g = base + p
-          ((bc.value((g / 64).toInt) >>> (g % 64).toInt) & 1L) == 1L
-        }
-      }
-    }.apply(keyCol)
   }
 }

@@ -224,25 +224,6 @@ class Round19OptSpec extends SparkSpec {
     assert(forced(cc()) === expected, "forced distributed")
   }
 
-  test("StreamNovelty.bloomWords aggregate == packedGlobal(batchWords) " +
-    "over the same keys (nulls skipped)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val keys = (1 to 500).map(i =>
-      if (i % 97 == 0) null else s"fp_${rnd.nextInt(100000)}_$i")
-    val df = keys.toDF("fingerprint").repartition(7)
-    val bits = 1 << 12
-    val hashes = 5
-    val viaAgg = df.agg(graft.streaming.StreamNovelty
-        .bloomWords(col("fingerprint"), bits, hashes).as("w"))
-      .head().getSeq[Long](0)
-    val viaFrames = graft.streaming.StreamNovelty.packedGlobal(
-      graft.streaming.StreamNovelty.batchWords(df, "fingerprint",
-        bits, hashes, buckets = 1), bits, buckets = 1)
-      .head().getSeq[Long](0)
-    assert(viaAgg === viaFrames, "bloomWords aggregate diverged")
-  }
-
   test("mmrSelect: an over-bound sims frame falls back to the " +
     "distributed greedy with identical rows (graft.mmrDriverMaxSims)") {
     import spark.implicits._
@@ -284,32 +265,5 @@ class Round19OptSpec extends SparkSpec {
     // and a batch above the external watermark still merges
     assert(merge(6L) > 0L)
     graft.streaming.StreamEval.clearMaxSeenCache()
-  }
-
-  test("winnowNoveltyFromSet + appendFingerprintBatch: bloom probe with " +
-    "driver-held survivors == exact plain probe (rows identical)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(3)
-    val docs = (1L to 120L).map { id =>
-      val toks = Seq.fill(12 + rnd.nextInt(20))("w" + rnd.nextInt(40))
-      (id, toks.mkString(" "))
-    }.toDF("doc_id", "text")
-    def run(bloomBits: Int): Seq[Seq[Any]] = {
-      val statePath = java.nio.file.Files
-        .createTempDirectory("r19_fp_").toString + "/state"
-      val corpus = docs.filter($"doc_id" % 10 =!= 0)
-      (0L to 2L).foreach { b =>
-        graft.streaming.StreamEval.appendFingerprintBatch(spark,
-          corpus.filter($"doc_id" % 3 === b), "doc_id", "text",
-          statePath, b, 3, 4, bloomBits = bloomBits)
-      }
-      graft.streaming.StreamEval.winnowNoveltyFromSet(spark, statePath,
-          docs.filter($"doc_id" % 10 === 0), "doc_id", "text", 3, 4,
-          bloomBits = bloomBits)
-        .orderBy($"doc_id").collect().map(_.toSeq).toSeq
-    }
-    val plain = run(0)
-    val bloomed = run(1 << 10) // deliberately small: real FPs flow
-    assert(plain === bloomed, "bloom-prefiltered novelty rows diverged")
   }
 }

@@ -366,42 +366,40 @@ class StreamEvalSpec extends SparkSpec {
     "(out-of-order + replay); novelty read-out == direct comparison " +
     "against the full corpus, without rescanning history") {
     import spark.implicits._
-    val state = tmpDir("sevalfp") + "/state"
+    val state = tmpDir("sevalfpa") + "/state"
     // corpus docs: 3 families of repeated token runs + unique tails so
     // winnowing has real shared fingerprints; >= k+w-1 = 8 tokens each
-    def doc(id: Long, family: Int, tail: String) =
-      (id, s"alpha beta gamma delta f$family f$family epsilon zeta " +
-        s"eta theta $tail run$id end")
-    val corpus = ((0L until 12L).map(i => doc(i, (i % 3).toInt, s"c$i")))
+    val corpus = ((0L until 12L).map(i => fpDoc(i, (i % 3).toInt, s"c$i")))
       .toDF("doc_id", "text")
     val Seq(b1, b2, b3) = Seq(0, 1, 2).map(k =>
       corpus.filter($"doc_id" % 3 === k))
-    // out-of-order batch content, one replay — state must equal the
-    // one-shot batch fold regardless
-    assert(StreamEval.mergeFingerprintBatch(spark, b2, "doc_id", "text",
+    // out-of-order batch content, one replay — the set must equal the
+    // one-shot batch fold regardless; replay is detected from the
+    // published generation directory itself
+    assert(StreamEval.appendFingerprintBatch(spark, b2, "doc_id", "text",
       state, 0L) > 0L)
-    assert(StreamEval.mergeFingerprintBatch(spark, b1, "doc_id", "text",
-      state, 1L) > 0L)
-    assert(StreamEval.mergeFingerprintBatch(spark, b1, "doc_id", "text",
-      state, 1L) === 0L) // replay no-op
-    assert(StreamEval.mergeFingerprintBatch(spark, b3, "doc_id", "text",
+    val n1 = StreamEval.appendFingerprintBatch(spark, b1, "doc_id", "text",
+      state, 1L)
+    assert(n1 >= 0L)
+    assert(StreamEval.appendFingerprintBatch(spark, b1, "doc_id", "text",
+      state, 1L) === 0L, "replay must no-op off the published generation")
+    assert(StreamEval.appendFingerprintBatch(spark, b3, "doc_id", "text",
       state, 2L) > 0L)
-    val fromState = StreamEval.fingerprintCounts(spark, state)
-      .orderBy("fingerprint").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
     val fromBatch = graft.ext.TextDedup
       .winnowFingerprints(corpus, "doc_id", "text")
-      .groupBy($"fingerprint").agg(count(lit(1)).as("df"))
-      .orderBy("fingerprint").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(fromState === fromBatch, "stream state != batch fingerprint fold")
+      .select($"fingerprint").distinct()
+      .orderBy("fingerprint").collect().map(_.getString(0)).toSeq
+    val setFps = StreamEval.fingerprintSet(spark, state)
+      .orderBy("fingerprint").collect().map(_.getString(0)).toSeq
+    assert(setFps === fromBatch,
+      "fingerprint set != batch fold's distinct fingerprints")
 
     // novelty: one doc repeating corpus family 0 (must overlap), one
     // genuinely novel doc (all-new vocabulary)
     val arriving = Seq(
-      doc(100L, 0, "c0"), // same family-0 run as corpus doc 0
+      fpDoc(100L, 0, "c0"), // same family-0 run as corpus doc 0
       (101L, "zz yy xx ww vv uu tt ss rr qq pp oo nn")).toDF("doc_id", "text")
-    val nov = StreamEval.winnowNoveltyFromState(spark, state, arriving,
+    val nov = StreamEval.winnowNoveltyFromSet(spark, state, arriving,
       "doc_id", "text").orderBy("doc_id").collect()
     val byId = nov.map(r => r.getLong(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -410,52 +408,14 @@ class StreamEvalSpec extends SparkSpec {
     assert(byId(101L)._2 === 0L && byId(101L)._3 === 1L,
       s"novel doc must share none: ${byId(101L)}")
     // read-out == the direct join against the full corpus fingerprints
-    val directCorpusFps = graft.ext.TextDedup
-      .winnowFingerprints(corpus, "doc_id", "text")
-      .select($"fingerprint").distinct()
-    val direct = graft.ext.TextDedup
-      .winnowFingerprints(arriving, "doc_id", "text")
-      .join(directCorpusFps.withColumn("__hit", lit(1L)),
-        Seq("fingerprint"), "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_fp"),
-        coalesce(sum($"__hit"), lit(0L)).as("n_shared"))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(nov.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      === direct, "state-fed novelty != direct corpus comparison")
-
-    // ---- append-only first-seen layout: identical fingerprint SET and
-    // identical novelty read-out, O(new)-write generations, replay
-    // detected from the published directory itself
-    val aState = tmpDir("sevalfpa") + "/state"
-    assert(StreamEval.appendFingerprintBatch(spark, b2, "doc_id", "text",
-      aState, 0L) > 0L)
-    val n1 = StreamEval.appendFingerprintBatch(spark, b1, "doc_id", "text",
-      aState, 1L)
-    assert(n1 >= 0L)
-    assert(StreamEval.appendFingerprintBatch(spark, b1, "doc_id", "text",
-      aState, 1L) === 0L, "replay must no-op off the published generation")
-    assert(StreamEval.appendFingerprintBatch(spark, b3, "doc_id", "text",
-      aState, 2L) > 0L)
-    val setFps = StreamEval.fingerprintSet(spark, aState)
-      .orderBy("fingerprint").collect().map(_.getString(0)).toSeq
-    assert(setFps === fromBatch.map(_._1),
-      "append-layout fingerprint set != batch fold's distinct fingerprints")
-    val novA = StreamEval.winnowNoveltyFromSet(spark, aState, arriving,
-      "doc_id", "text").orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(novA === direct,
-      "append-layout novelty != direct corpus comparison")
+      === directNovelty(corpus, arriving),
+      "state-fed novelty != direct corpus comparison")
     // generations are per-batch directories; merging never rewrote them
-    val fs = new org.apache.hadoop.fs.Path(aState).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val gens = fs.listStatus(new org.apache.hadoop.fs.Path(aState))
-      .map(_.getPath.getName).filter(_.startsWith("batch_id=")).sorted
-    assert(gens.toSeq === Seq("batch_id=0", "batch_id=1", "batch_id=2"))
+    assert(listGens(state) === Seq("batch_id=0", "batch_id=1", "batch_id=2"))
   }
 
-  // ---- round 18: compaction, Bloom prefilter, remaining e2e wrappers --
+  // ---- compaction, crash recovery, end-to-end wrappers ---------------
 
   private def fpDoc(id: Long, family: Int, tail: String) =
     (id, s"alpha beta gamma delta f$family f$family epsilon zeta " +
@@ -467,6 +427,24 @@ class StreamEvalSpec extends SparkSpec {
     if (!fs.exists(p)) Seq.empty[String]
     else fs.listStatus(p).map(_.getPath.getName)
       .filter(!_.startsWith("_")).sorted.toSeq
+  }
+
+  /** (doc_id, n_fp, n_shared) of `arriving` by a direct join against
+    * every fingerprint of `corpus` — what a state read-out must equal. */
+  private def directNovelty(corpus: org.apache.spark.sql.DataFrame,
+      arriving: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] = {
+    val corpusFps = graft.ext.TextDedup
+      .winnowFingerprints(corpus, "doc_id", "text")
+      .select(col("fingerprint")).distinct()
+    graft.ext.TextDedup
+      .winnowFingerprints(arriving, "doc_id", "text")
+      .join(corpusFps.withColumn("__hit", lit(1L)), Seq("fingerprint"),
+        "left")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_fp"),
+        coalesce(sum(col("__hit")), lit(0L)).as("n_shared"))
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
   }
 
   test("compactFingerprintGenerations: read-outs byte-identical pre/" +
@@ -534,9 +512,9 @@ class StreamEvalSpec extends SparkSpec {
       .orderBy("fingerprint").collect().map(_.getString(0)).toSeq === want)
   }
 
-  test("bloom prefilter: novelty rows identical with/without (tiny " +
-    "bloom forces real false positives through the exact join); " +
-    "sidecars consolidate through compaction; missing sidecar is loud") {
+  test("fingerprint state crash postures: a compaction or generation " +
+    "write cut at any step reads as the no-crash state, replays no-op, " +
+    "and the next append leaves no _tmp_ or _aside_ entry") {
     import spark.implicits._
     val corpus = (0L until 12L).map(i => fpDoc(i, (i % 3).toInt, s"c$i"))
       .toDF("doc_id", "text")
@@ -544,79 +522,67 @@ class StreamEvalSpec extends SparkSpec {
       corpus.filter($"doc_id" % 3 === k))
     val arriving = Seq(fpDoc(100L, 0, "c0"),
       (101L, "zz yy xx ww vv uu tt ss rr qq pp oo nn")).toDF("doc_id", "text")
-
-    val plain = tmpDir("sevalnob") + "/state"
-    Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-      StreamEval.appendFingerprintBatch(spark, b, "doc_id", "text",
-        plain, i.toLong)
-    }
-    val want = StreamEval.winnowNoveltyFromSet(spark, plain, arriving,
-      "doc_id", "text").orderBy("doc_id").collect().map(_.toSeq).toSeq
-
-    // 64-bit bloom: ~60 corpus fingerprints over 64 bits saturates the
-    // filter, so the genuinely-novel doc's fingerprints FALSE-POSITIVE
-    // into the survivor set — the exact join must still clear them
-    for (bits <- Seq(64, 1 << 16)) {
-      val st = tmpDir(s"sevalb$bits") + "/state"
-      Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-        StreamEval.appendFingerprintBatch(spark, b, "doc_id", "text",
-          st, i.toLong, bloomBits = bits)
-      }
-      val got = StreamEval.winnowNoveltyFromSet(spark, st, arriving,
-          "doc_id", "text", bloomBits = bits)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(got === want, s"bloom($bits) probe changed novelty rows")
-      // the incrementally-OR'd cached filter (folded generation by
-      // generation during the appends) and a COLD full sidecar
-      // re-merge must drive the probe to identical rows
-      StreamEval.clearBloomCache()
-      val cold = StreamEval.winnowNoveltyFromSet(spark, st, arriving,
-          "doc_id", "text", bloomBits = bits)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(cold === got, s"bloom($bits) cached filter != cold re-merge")
-      // compaction OR-merges the sidecars: the probe stays usable and
-      // exact over the consolidated generation
-      StreamEval.compactFingerprintGenerations(spark, st, upTo = 2L)
-      val gotC = StreamEval.winnowNoveltyFromSet(spark, st, arriving,
-          "doc_id", "text", bloomBits = bits)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(gotC === want, s"bloom($bits) probe moved across compaction")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    def append(st: String, b: org.apache.spark.sql.DataFrame, id: Long) =
+      StreamEval.appendFingerprintBatch(spark, b, "doc_id", "text", st, id)
+    def readOut(st: String) = (
+      StreamEval.fingerprintSet(spark, st)
+        .orderBy("fingerprint").collect().map(_.getString(0)).toSeq,
+      StreamEval.winnowNoveltyFromSet(spark, st, arriving, "doc_id", "text")
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq)
+    def twoGens(tag: String): String = {
+      val st = tmpDir(tag) + "/state"
+      append(st, b0, 0L); append(st, b1, 1L)
+      st
     }
 
-    // an ALL-DUPLICATE batch through the bloom path: its generation
-    // and sidecar are EMPTY — the empty sidecar must OR-merge as zero
-    // bits (not break the packed load or the cache fold) and the
-    // replay/no-op contract must hold
-    val dupSt = tmpDir("sevaldupb") + "/state"
-    StreamEval.appendFingerprintBatch(spark, b0, "doc_id", "text",
-      dupSt, 0L, bloomBits = 1 << 16)
-    assert(StreamEval.appendFingerprintBatch(spark, b0, "doc_id", "text",
-      dupSt, 1L, bloomBits = 1 << 16) === 0L, "all-dup batch must add 0")
-    val gotDup = StreamEval.winnowNoveltyFromSet(spark, dupSt,
-        b0.unionByName(arriving), "doc_id", "text", bloomBits = 1 << 16)
-      .filter(col("doc_id") >= 100L)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val wantDup = StreamEval.winnowNoveltyFromSet(spark, dupSt,
-        b0.unionByName(arriving), "doc_id", "text")
-      .filter(col("doc_id") >= 100L)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(gotDup === wantDup,
-      "bloom probe over an empty generation's sidecar diverged")
+    // the no-crash run: batches 0 and 1, then batch 2
+    val ref = twoGens("sevalcrref")
+    val want01 = readOut(ref)
+    append(ref, b2, 2L)
+    val want012 = readOut(ref)
+    // a completed compaction through 1: the source of the consolidated
+    // generation (parquet + marker) the postures below are built from
+    val done = twoGens("sevalcrdone")
+    StreamEval.compactFingerprintGenerations(spark, done, upTo = 1L)
+    val fs = p(done).getFileSystem(conf)
+    def consolidatedTo(dst: String) =
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, p(s"$done/batch_id=1"),
+        fs, p(dst), false, conf))
 
-    // a state whose generations lack sidecars must refuse the bloom
-    // probe loudly — a silent fallback would hide a mis-sized probe
-    val e = intercept[IllegalStateException](
-      StreamEval.winnowNoveltyFromSet(spark, plain, arriving,
-        "doc_id", "text", bloomBits = 1 << 16).collect())
-    assert(e.getMessage.contains("sidecar"))
+    val postures: Seq[(String, String => Unit)] = Seq(
+      // crash before compaction's first rename
+      "(a) _tmp_compact_1 beside a live batch_id=1" -> { st =>
+        consolidatedTo(s"$st/_tmp_compact_1") },
+      // crash between the renames: generation 1 aside, tmp complete
+      "(b) batch_id=0, _aside_gen_1 and a marked _tmp_compact_1" -> { st =>
+        assert(fs.rename(p(s"$st/batch_id=1"), p(s"$st/_aside_gen_1")))
+        consolidatedTo(s"$st/_tmp_compact_1") },
+      // crash after publishing, before the aside is deleted
+      "(c) _aside_gen_1 beside the published batch_id=1" -> { st =>
+        assert(fs.rename(p(s"$st/batch_id=1"), p(s"$st/_aside_gen_1")))
+        consolidatedTo(s"$st/batch_id=1") },
+      // crash inside batch 2's generation write: a torn tmp whose rows
+      // would show up in every read-out if it were ever read
+      "(d) torn _tmp_b2 left by a generation write" -> { st =>
+        Seq("torn").toDF("fingerprint").write.parquet(s"$st/_tmp_b2")
+        fs.delete(p(s"$st/_tmp_b2/_SUCCESS"), false)
+        () })
 
-    // ... and compaction can BACKFILL the sidecar, upgrading the state
-    StreamEval.compactFingerprintGenerations(spark, plain, upTo = 2L,
-      backfillBloomBits = 1 << 16)
-    val upgraded = StreamEval.winnowNoveltyFromSet(spark, plain, arriving,
-        "doc_id", "text", bloomBits = 1 << 16)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(upgraded === want, "backfilled bloom probe changed novelty rows")
+    postures.zipWithIndex.foreach { case ((name, crash), i) =>
+      val st = twoGens(s"sevalcr$i")
+      crash(st)
+      assert(append(st, b0, 0L) === 0L && append(st, b1, 1L) === 0L,
+        s"$name: a replay merged rows")
+      assert(readOut(st) === want01, s"$name: read-out != no-crash run")
+      assert(append(st, b2, 2L) > 0L, s"$name: next append merged nothing")
+      val left = fs.listStatus(p(st)).map(_.getPath.getName)
+        .filter(n => n.startsWith("_tmp_") || n.startsWith("_aside_"))
+      assert(left.isEmpty, s"$name: left ${left.mkString(", ")}")
+      assert(readOut(st) === want012, s"$name: read-out after the next " +
+        "append != no-crash run")
+    }
   }
 
   test("appendFingerprintBatch returns counts without re-reading the " +
@@ -629,20 +595,41 @@ class StreamEvalSpec extends SparkSpec {
     val b0 = corpus.filter($"doc_id" % 3 === 0)
     val b1 = corpus.filter($"doc_id" % 3 === 1)
     val n0 = StreamEval.appendFingerprintBatch(spark, b0, "doc_id", "text",
-      state, 0L, bloomBits = 1 << 16)
+      state, 0L)
     assert(n0 === spark.read.parquet(s"$state/batch_id=0").count(),
       "observed count != generation row count")
-    // batch 1 WITHOUT a sidecar: append must fall back to the exact
-    // anti-join (bloom unusable — gen 1 would be a false-negative hole)
+    // generation 0 gets a Bloom sidecar as an earlier version of the
+    // layout wrote it (a `_`-prefixed (bucket, word_idx, word) frame
+    // inside the generation), generation 1 none: the sidecar is never
+    // read, so counts, the probe and compaction stay exact
+    Seq((0, 0, -1L)).toDF("bucket", "word_idx", "word")
+      .write.parquet(s"$state/batch_id=0/_bloom_b65536_h5")
     val n1 = StreamEval.appendFingerprintBatch(spark, b1, "doc_id", "text",
       state, 1L)
     assert(n1 === spark.read.parquet(s"$state/batch_id=1").count())
+    val b01 = b0.unionByName(b1)
+    val want = graft.ext.TextDedup.winnowFingerprints(b01, "doc_id", "text")
+      .select($"fingerprint").distinct()
+      .orderBy("fingerprint").collect().map(_.getString(0)).toSeq
+    def set() = StreamEval.fingerprintSet(spark, state)
+      .orderBy("fingerprint").collect().map(_.getString(0)).toSeq
+    assert(n0 + n1 === want.size.toLong && set() === want)
+    val arriving = Seq(fpDoc(100L, 0, "c0"),
+      (101L, "zz yy xx ww vv uu tt ss rr qq pp oo nn")).toDF("doc_id", "text")
+    def novelty() = StreamEval.winnowNoveltyFromSet(spark, state, arriving,
+      "doc_id", "text").orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(novelty() === directNovelty(b01, arriving))
     // an all-duplicate batch still creates its (empty) generation
     assert(StreamEval.appendFingerprintBatch(spark, b0, "doc_id", "text",
       state, 2L) === 0L)
     assert(listGens(state).contains("batch_id=2"))
     assert(StreamEval.appendFingerprintBatch(spark, b0, "doc_id", "text",
       state, 2L) === 0L) // and replays off it
+    assert(set() === want && novelty() === directNovelty(b01, arriving))
+    assert(StreamEval.compactFingerprintGenerations(spark, state, upTo = 2L)
+      === want.size.toLong)
+    assert(set() === want && novelty() === directNovelty(b01, arriving))
   }
 
   test("end-to-end stream: file source -> period state via AvailableNow;" +
@@ -671,8 +658,8 @@ class StreamEvalSpec extends SparkSpec {
   }
 
   test("end-to-end stream: append-layout fingerprint monitor via " +
-    "AvailableNow with bloom sidecars + periodic compaction; novelty " +
-    "read-out equals the plain-state comparison") {
+    "AvailableNow with periodic compaction; novelty read-out equals " +
+    "the plain-append comparison") {
     import spark.implicits._
     val landing = tmpDir("sevalaland")
     val state = tmpDir("sevalast") + "/state"
@@ -687,15 +674,14 @@ class StreamEvalSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1) // 3 files -> 3 real micro-batches
       .parquet(s"$landing/*")
     val q = StreamEval.startFingerprintSet(stream, "doc_id", "text",
-      state, ckpt, bloomBits = 1 << 16, compactEvery = 1L,
-      trigger = Trigger.AvailableNow())
+      state, ckpt, compactEvery = 1L, trigger = Trigger.AvailableNow())
     q.awaitTermination(60000L)
     val arriving = Seq(fpDoc(100L, 0, "c0"),
       (101L, "zz yy xx ww vv uu tt ss rr qq pp oo nn")).toDF("doc_id", "text")
     val got = StreamEval.winnowNoveltyFromSet(spark, state, arriving,
-        "doc_id", "text", bloomBits = 1 << 16)
+        "doc_id", "text")
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    // reference: the same corpus through plain appends, no bloom
+    // reference: the same corpus through one plain append
     val ref = tmpDir("sevalaref") + "/state"
     StreamEval.appendFingerprintBatch(spark,
       corpus.toDF("doc_id", "text"), "doc_id", "text", ref, 0L)
@@ -718,29 +704,19 @@ class StreamEvalSpec extends SparkSpec {
     val state = tmpDir("sevalfst") + "/state"
     val ckpt = tmpDir("sevalfckpt")
     val corpus = (0L until 12L).map(i => fpDoc(i, (i % 3).toInt, s"c$i"))
-    corpus.toDF("doc_id", "text").write.parquet(s"$landing/part1")
+      .toDF("doc_id", "text")
+    corpus.write.parquet(s"$landing/part1")
     val stream = spark.readStream.schema("doc_id BIGINT, text STRING")
       .parquet(s"$landing/*")
-    val q = StreamEval.startFingerprints(stream, "doc_id", "text",
+    val q = StreamEval.startFingerprintSet(stream, "doc_id", "text",
       state, ckpt, trigger = Trigger.AvailableNow())
     q.awaitTermination(60000L)
     val arriving = Seq(fpDoc(100L, 0, "c0"),
       (101L, "zz yy xx ww vv uu tt ss rr qq pp oo nn")).toDF("doc_id", "text")
-    val got = StreamEval.winnowNoveltyFromState(spark, state, arriving,
+    val got = StreamEval.winnowNoveltyFromSet(spark, state, arriving,
       "doc_id", "text").orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val directCorpusFps = graft.ext.TextDedup
-      .winnowFingerprints(corpus.toDF("doc_id", "text"), "doc_id", "text")
-      .select($"fingerprint").distinct()
-    val want = graft.ext.TextDedup
-      .winnowFingerprints(arriving, "doc_id", "text")
-      .join(directCorpusFps.withColumn("__hit", lit(1L)),
-        Seq("fingerprint"), "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_fp"),
-        coalesce(sum($"__hit"), lit(0L)).as("n_shared"))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got === want, "e2e fingerprint stream diverged from direct")
+    assert(got === directNovelty(corpus, arriving),
+      "e2e fingerprint stream diverged from direct")
   }
 }

@@ -10,14 +10,22 @@
 #              every catalog query when omitted
 #
 # Exits 1 when either regime has a failing query (a query that throws
-# leaves no output, which check_oracle.py counts as a failure). Both
-# runs' output is left in a new temporary directory, named at the end.
+# leaves no output, which check_oracle.py counts as a failure), and 2
+# before running anything when a key of the forced list is read nowhere
+# under src/main/scala: a deleted knob must not linger in the list,
+# forcing nothing. Both runs' output is left in a new temporary
+# directory, named at the end.
 set -u
 [ $# -ge 1 ] && [ -d "$1" ] || {
   echo "usage: $0 <tablesDir> [GRAFT_ONLY list]" >&2; exit 2; }
 tables=$(realpath "$1")
 cd "$(dirname "$0")/.."
-forced="graft.broadcastMaxEdges=0;graft.driverLoopMaxNodes=0;graft.kmeansDriverMaxRows=0;graft.spectralDriverMaxRows=0;graft.mmrDriverMaxCandidates=0"
+forced="graft.broadcastMaxEdges=0;graft.kmeansDriverMaxRows=0;graft.spectralDriverMaxRows=0;graft.mmrDriverMaxCandidates=0"
+for kv in ${forced//;/ }; do
+  key=${kv%%=*}
+  grep -rqF "\"$key\"" src/main/scala || {
+    echo "forced key $key is read nowhere under src/main/scala" >&2; exit 2; }
+done
 if [ $# -ge 2 ]; then export GRAFT_ONLY="$2"; else unset GRAFT_ONLY; fi
 out=$(mktemp -d "${TMPDIR:-/tmp}/verify_regimes.XXXXXX")
 

@@ -46,10 +46,11 @@ object GraftSession {
     // ran without our extensions — register the functions directly too.
     graft.plans.GraftExtensions.register(spark)
     // Measurement hook (r19): GRAFT_CONF="k=v;k=v" applies extra session
-    // confs — how the Plans/Stress harnesses force the scale-gated code
-    // paths (e.g. graft.broadcastMaxEdges=0, graft.driverLoopMaxNodes=0)
-    // so the beyond-bound plans stay dumpable and measurable. Unset in
-    // the driver's runs: defaults unchanged.
+    // confs — how the Plans/Stress harnesses and
+    // scripts/verify_regimes.sh force the scale-gated code paths (e.g.
+    // graft.broadcastMaxEdges=0 puts every graph fixpoint on its
+    // distributed loop) so the beyond-bound plans stay dumpable and
+    // measurable. Unset in the driver's runs: defaults unchanged.
     sys.env.get("GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

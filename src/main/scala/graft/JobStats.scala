@@ -42,6 +42,16 @@ object JobStats {
   private val Sentinel = "sentinel"
   private val DrainTimeoutS = 30L
 
+  /** `body` with every job it starts described `description` (the
+    * `description` of each [[Job]]); the caller's description is
+    * restored afterwards. */
+  def labeled[T](spark: SparkSession, description: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(DescriptionKey)
+    sc.setLocalProperty(DescriptionKey, description)
+    try body finally sc.setLocalProperty(DescriptionKey, prev)
+  }
+
   def measure[T](spark: SparkSession)(body: => T): (T, Run) = {
     val sc = spark.sparkContext
     val group = s"jobstats-${java.util.UUID.randomUUID}"

@@ -71,32 +71,27 @@ object Graph {
   /** Max edge count for which [[triangleCount]] broadcasts the edge /
     * degree frames instead of shuffling the (quadratic) wedge stream;
     * the distributed [[kCore]] and [[TextDedup.connectedComponents]]
-    * loops broadcast their node-sized frames under the same bound.
-    * ~4M edges ≈ 64 MB of raw keys — comfortably inside the broadcast
-    * cap on any executor sizing; override per session with
+    * loops broadcast their node-sized frames under the same bound, and
+    * every graph fixpoint holds its whole graph on the driver under it
+    * ([[driverRows]]). ~4M edges ≈ 64 MB of raw keys — comfortably
+    * inside the broadcast cap on any executor sizing. At the bound a
+    * driver-path coreness (4M edges, ~1M nodes, local[2]) measured
+    * 13–14 s and at most 0.56 GB of post-GC heap above its pinned input,
+    * executor side included. Override per session with
     * `spark.conf.set("graft.broadcastMaxEdges", n)`. */
   private[ext] def broadcastMaxEdges(df: DataFrame): Long =
     df.sparkSession.conf.get("graft.broadcastMaxEdges", "4000000").toLong
 
-  /** Max node count for which the iterative fixpoints (kCore, coreness,
-    * LPA, convergent PageRank / PPR, min-label CC) run as a DRIVER LOOP
-    * over a pinned adjacency frame, decided by one
-    * [[ScaleGate.collectUnder]] of the node-sized frame that seeds the
-    * loop: the node→value map is collected once and the rounds run in
-    * [[ScaleGate.driverRounds]], ONE job each (adjacency scan + per-row
-    * kernel — no join, no shuffle, no per-round materialization or
-    * probe jobs).
-    * The value frame is node-sized by definition, so collecting it is
-    * the same data volume the per-round broadcast join ships anyway
-    * (guide §8 — broadcast the plan); beyond the bound the distributed
-    * join loops below are unchanged. Override per session with
-    * `spark.conf.set("graft.driverLoopMaxNodes", n)`. */
-  private[ext] def driverLoopMaxNodes(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.driverLoopMaxNodes", "1000000").toLong
-
-  private[ext] def isLongType(df: DataFrame, colName: String): Boolean =
-    df.schema(colName).dataType ==
-      org.apache.spark.sql.types.LongType
+  /** The gate of every graph fixpoint: ONE bounded collect of `df` (an
+    * edge list, or a node frame the result must cover) under
+    * [[broadcastMaxEdges]], before any pin ([[ScaleGate.collectLongs]]).
+    * Some(rows) puts the whole fixpoint on the driver
+    * ([[ScaleGate.fixpoint]], no job per round); None (over the bound,
+    * non-LONG ids, or a null id) leaves it to the distributed loop. */
+  private[ext] def driverRows(df: DataFrame): Option[Array[Long]] =
+    if (df.schema.forall(_.dataType == org.apache.spark.sql.types.LongType))
+      ScaleGate.collectLongs(df, broadcastMaxEdges(df))
+    else None
 
   /** Exact triangle count via degree-ordered orientation
     * (Schank / Suri–Vassilvitskii): each edge points from its
@@ -243,11 +238,14 @@ object Graph {
     * of the N src nodes restarts with 0.15·10¹²/N and starts at
     * 10¹²/N, and both run the same superstep loop.
     *
-    * Scale: edges are repartitioned by src BEFORE pinning, so every
-    * superstep's edge-side join exchange is pre-satisfied — only the
-    * (node-sized) rank frame and the dst aggregation shuffle per step;
-    * degrees and N are computed once. State pinned per step
-    * ([[ScaleGate.materialize]]).
+    * Scale: when the edge list fits the graph bound ([[driverRows]]),
+    * its one collect is the only job and every superstep, fixed-round
+    * or convergent, is a driver loop. Past it, edges are repartitioned
+    * by src BEFORE pinning, so every superstep's edge-side join
+    * exchange is pre-satisfied — only the (node-sized) rank frame and
+    * the dst aggregation shuffle per step; degrees and N are computed
+    * once. State pinned per step ([[ScaleGate.materialize]]) with
+    * `checkConvergence`; the fixed rounds stay one lazy chain.
     *
     * @return (node, d, r): out-degree and rank in parts-per-trillion
     */
@@ -255,11 +253,9 @@ object Graph {
       srcCol: String = "src", dstCol: String = "dst",
       maxIterations: Int = 20, checkConvergence: Boolean = true): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    val e = edgesBySrc(edges, srcCol, dstCol)
-    val deg = ScaleGate.materialize(
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")))
-    supersteps(e, deg.withColumn("seed", lit(true)), maxIterations,
-      checkConvergence)
+    ranks(new ScaleGate.Labels(edges.sparkSession, "Graph.pageRank"),
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), None,
+      maxIterations, checkConvergence)
   }
 
   /** Personalized PageRank — [[pageRank]] with the restart mass
@@ -278,9 +274,9 @@ object Graph {
     * Seeds without out-edges still receive restart mass (they join the
     * node universe with d = 0 and simply forward nothing).
     *
-    * Scale: identical shape to [[pageRank]] — edges repartitioned on
-    * src once, per step one join + one dst agg; the seed frame touches
-    * the loop only through the pinned base frame.
+    * Scale: identical shape to [[pageRank]]; the seed frame is
+    * collected under the same bound as the edges (driver loop), or
+    * touches the distributed loop only through the pinned base frame.
     *
     * @param seeds one column (`seedCol`) of seed node ids
     * @return (node, d, r): out-degree and proximity rank (ppt)
@@ -290,61 +286,77 @@ object Graph {
       seedCol: String = "node",
       maxIterations: Int = 20, checkConvergence: Boolean = true): DataFrame = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    val e = edgesBySrc(edges, srcCol, dstCol)
-    val seedSet = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("seed", lit(true))
-    val base = ScaleGate.materialize(
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-        .join(seedSet, Seq("node"), "full_outer")
-        .select(col("node"), coalesce(col("d"), lit(0L)).as("d"),
-          col("seed").isNotNull.as("seed")))
-    supersteps(e, base, maxIterations, checkConvergence)
+    ranks(new ScaleGate.Labels(edges.sparkSession, "Graph.personalizedPageRank"),
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      Some(seeds.select(col(seedCol).as("node"))),
+      maxIterations, checkConvergence)
   }
 
-  /** The (src, dst) edge list repartitioned on src and pinned. */
-  private def edgesBySrc(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame =
-    ScaleGate.materialize(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .repartition(col("src")))
-
-  /** The PageRank superstep loop over the pinned edges `e` and the node
-    * universe `base (node, d, seed)`, built over pinned frames. Each of
+  /** [[pageRank]] (`seeds` None: every src node is a seed) and
+    * [[personalizedPageRank]] over the `(src, dst)` edge list. Each of
     * the |S| seeds restarts with rst = 0.15·10¹² div |S| and starts at
     * r0 = 10¹² div |S|; every other node has rst = r0 = 0. Each
-    * superstep is `r' = rst + (85 · Σ_{in-edges} r div d) div 100`; one
-    * join (edges ⋈ ranks) + one dst aggregation when distributed. */
+    * superstep is `r' = rst + (85 · Σ_{in-edges} r div d) div 100`. */
+  private def ranks(job: ScaleGate.Labels, edges: DataFrame,
+      seeds: Option[DataFrame], maxIterations: Int,
+      checkConvergence: Boolean): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // ONE bounded collect of the edge list (and of the seed frame) is
+    // the gate; a graph that fits runs every superstep, fixed-round or
+    // convergent, as a driver loop. q134's 3 fixed supersteps were a
+    // lazy unrolled join chain before: ProfileQuery (sf0.01, 4 cores)
+    // read 17 jobs / 2.25 s that way and 4 jobs / 0.57 s on the driver
+    val driver = job("collect edges")(driverRows(edges)).flatMap { pairs =>
+      val srcs = Array.tabulate(pairs.length / 2)(i => pairs(2 * i))
+      seeds.fold(Option(srcs))(sd => job("collect seeds")(driverRows(sd)))
+        .map(s => (pairs, srcs, ScaleGate.distinctSorted(s)))
+    }
+    driver.foreach { case (pairs, srcs, seedSet) =>
+      // the universe is every src node and every seed; a dst outside it
+      // takes the walk mass out of the tracked universe
+      val ids = ScaleGate.distinctSorted(srcs ++ seedSet)
+      val g = ScaleGate.DriverGraph.inEdges(ids, pairs)
+      val d = new Array[Long](ids.length)
+      var j = 0
+      while (j < pairs.length) { d(g.indexOf(pairs(j))) += 1; j += 2 }
+      val seed = ids.map(id => java.util.Arrays.binarySearch(seedSet, id) >= 0)
+      def mass(total: Long): Array[Long] =
+        seed.map(s => if (s) total / seedSet.length else 0L)
+      val rst = mass(150000000000L)
+      val (r, _) = ScaleGate.fixpoint(g, mass(1000000000000L), maxIterations,
+          if (checkConvergence) java.util.Arrays.equals(_: Array[Long], _: Array[Long])
+          else (_, _) => false) { (m, v) =>
+        var acc = 0L
+        var k = g.offsets(v)
+        while (k < g.offsets(v + 1)) {
+          val u = g.nbrs(k)
+          acc += m(u) / d(u)
+          k += 1
+        }
+        rst(v) + 85L * acc / 100L
+      }
+      return ids.indices.map(i => (ids(i), d(i), r(i))).toDF("node", "d", "r")
+    }
+    // distributed: edges repartitioned on src and pinned, degrees (and
+    // the seed universe) pinned once
+    val e = job("pin edges")(ScaleGate.materialize(edges.repartition(col("src"))))
+    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
+    val base = job("pin degrees")(ScaleGate.materialize(seeds match {
+      case None => deg.withColumn("seed", lit(true))
+      case Some(sd) => deg
+        .join(sd.distinct().withColumn("seed", lit(true)), Seq("node"), "full_outer")
+        .select(col("node"), coalesce(col("d"), lit(0L)).as("d"),
+          col("seed").isNotNull.as("seed"))
+    }))
+    job("supersteps")(supersteps(e, base, maxIterations, checkConvergence))
+  }
+
+  /** The distributed PageRank superstep loop over the pinned edges `e`
+    * and the node universe `base (node, d, seed)`: one join (edges ⋈
+    * ranks) + one dst aggregation per superstep. */
   private def supersteps(e: DataFrame, base: DataFrame, maxIterations: Int,
       checkConvergence: Boolean): DataFrame = {
-    // driver loop ONLY in convergence mode. The fixed-round mode plans
-    // ONE lazy unrolled superstep chain with no per-round jobs at all —
-    // measured FASTER than the driver loop's per-round collect
-    // round-trips (q134: 2.4 s lazy vs 2.9 s driver-looped), so it
-    // stays lazy and pays no gate job. In convergence mode ONE bounded
-    // collect of the node universe answers the gate and seeds the loop.
-    val driverBase =
-      if (checkConvergence && isLongType(base, "node"))
-        ScaleGate.collectUnder(base, driverLoopMaxNodes(base)).filter(_.nonEmpty)
-      else None
-    driverBase.foreach { rows =>
-      val nSeeds = rows.count(_.getBoolean(2))
-      def mass(total: Long)(b: Row): Long = if (b.getBoolean(2)) total / nSeeds else 0L
-      // reverse adjacency over the whole universe: a node without
-      // in-edges gets empty `nbs` and so its restart mass
-      val radj = ScaleGate.materialize(
-        base.select(col("node").as("dst")).join(e, Seq("dst"), "left")
-          .groupBy(col("dst").as("node")).agg(collect_list(col("src")).as("nbs")))
-      val dRst = e.sparkSession.sparkContext.broadcast(
-        (ScaleGate.nodeMap(rows)(_.getLong(1)), ScaleGate.nodeMap(rows)(mass(150000000000L))))
-      val (r, _) = try ScaleGate.driverRounds(radj,
-          ScaleGate.nodeMap(rows)(mass(1000000000000L)), maxIterations) { (m, node, ins) =>
-        val (dm, rm) = dRst.value
-        rm.get(node) + 85L * ins.map(u => m.get(u) / dm.get(u)).sum / 100L
-      } finally dRst.unpersist(false)
-      import e.sparkSession.implicits._
-      return rows.toSeq.map(b => (b.getLong(0), b.getLong(1), r.get(b.getLong(0)).longValue))
-        .toDF("node", "d", "r")
-    }
     // restart masses stay lazy over the pinned base: pinning them in
     // place of the degrees measured one job more for q134 (17 → 18)
     val masses = base
@@ -373,7 +385,7 @@ object Graph {
           .join(ranks.alias("b"), expr("a.node = b.node AND a.r <> b.r"))
           .isEmpty
         ranks = next
-      } else ranks = step // bounded fixed-round unroll: lazy like q134's
+      } else ranks = step // past the bound, the fixed rounds stay one lazy chain
       iter += 1
     }
     ranks
@@ -387,9 +399,11 @@ object Graph {
     * loop; this operator is what a user reaching for "the k-core"
     * actually gets.
     *
-    * Scale shape: each round is one degree agg + two semi joins on a
-    * SHRINKING edge set; state is pinned per round
-    * ([[ScaleGate.materialize]]) so plans don't grow with rounds.
+    * Scale shape: within the graph bound ([[driverRows]]) the peel is a
+    * driver loop after one edge collect. Past it each round is one
+    * degree agg + two semi joins on a SHRINKING edge set; state is
+    * pinned per round ([[ScaleGate.materialize]]) so plans don't grow
+    * with rounds.
     * Convergence is a filter on the materialized degree frame — no
     * extra join. Rounds needed equal the
     * peel depth of the graph (typically small); a graph that somehow
@@ -403,43 +417,43 @@ object Graph {
       srcCol: String = "u", dstCol: String = "v",
       assumeCanonical: Boolean = false, maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    val job = new ScaleGate.Labels(edges.sparkSession, "Graph.kCore")
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       else canonicalEdges(edges, srcCol, dstCol)
-    var e = ScaleGate.materialize(canon)
-    // ONE bounded collect of the node ids answers the gate and seeds the
-    // driver loop ([[ScaleGate.collectUnder]]); the degree frame is
-    // materialized only on the distributed path
-    val nodes0 = degrees(e).select(col("node"))
-    val driverNodes =
-      if (isLongType(nodes0, "node"))
-        ScaleGate.collectUnder(nodes0, driverLoopMaxNodes(nodes0))
-      else None
     // A half-peeled subgraph would silently overstate the core — refuse.
     val refusal = s"kCore did not reach fixpoint in $maxRounds rounds " +
       "(peel depth exceeds maxRounds); raise maxRounds"
-    driverNodes.foreach { nodeRows =>
-      // Driver-loop peel over the FULL adjacency, pinned once: a node's
-      // value is its degree within the keep set (the nodes whose value
-      // is >= k; every node starts at k), or -1 once dropped. A round
-      // is one distributed peel round: the fixpoint is a round where no
-      // kept node fell to 1..k-1, and a kept node left with no kept
-      // neighbor (0) leaves silently, as it leaves the distributed
-      // loop's edge set — so both regimes return or refuse at the
-      // same maxRounds.
-      val adj = ScaleGate.materialize(
-        e.select(col("u").as("node"), col("v").as("nb"))
-          .union(e.select(col("v").as("node"), col("u").as("nb")))
-          .groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")))
-      val (m, held) = ScaleGate.driverRounds(adj, ScaleGate.nodeMap(nodeRows)(_ => k),
-          maxRounds, (_, next) => !next.values.asScala.exists(v => v > 0 && v < k)) {
-        (m, node, nbs) =>
-          if (m.get(node) < k) -1L else nbs.count(nb => m.get(nb) >= k).toLong
+    job("collect edges")(driverRows(canon)).foreach { pairs =>
+      // Driver-loop peel: a node's value is its degree within the keep
+      // set (the nodes whose value is >= k; every node starts at k), or
+      // -1 once dropped. A round is one distributed peel round: the
+      // fixpoint is a round where no kept node fell to 1..k-1, and a
+      // kept node left with no kept neighbor (0) leaves silently, as it
+      // leaves the distributed loop's edge set — so both regimes return
+      // or refuse at the same maxRounds.
+      val g = ScaleGate.DriverGraph.undirected(pairs)
+      val (m, held) = ScaleGate.fixpoint(g, Array.fill(g.n)(k.toLong),
+          maxRounds, (_, next) => !next.exists(v => v > 0 && v < k)) { (m, v) =>
+        if (m(v) < k) -1L
+        else {
+          var c = 0L
+          var j = g.offsets(v)
+          while (j < g.offsets(v + 1)) { if (m(g.nbrs(j)) >= k) c += 1; j += 1 }
+          c
+        }
       }
       if (!held) throw new IllegalStateException(refusal)
-      m.values.removeIf(_ < k)
-      return ScaleGate.nodeFrame(edges.sparkSession, m, "degree")
+      return ScaleGate.nodeFrame(edges.sparkSession, g.ids, m, "degree", _ >= k)
     }
+    val e = job("pin edges")(ScaleGate.materialize(canon))
+    job("peel rounds")(peel(e, k, maxRounds, refusal))
+  }
+
+  /** The distributed [[kCore]] peel over the pinned canonical edges. */
+  private def peel(edges: DataFrame, k: Int, maxRounds: Int,
+      refusal: String): DataFrame = {
+    var e = edges
     var round = 0
     while (round < maxRounds) {
       val deg = ScaleGate.materialize(degrees(e))
@@ -483,10 +497,12 @@ object Graph {
     * full decomposition in one synchronous loop, instead of running
     * the [[kCore]] peel once per k (degeneracy × peel-depth rounds).
     *
-    * Scale shape: per round, one keyed join (neighbor list ⋈ values,
-    * exchange pre-satisfied by pinning the neighbor list partitioned on
-    * the join key) + one node-KEYED window rank + one keyed agg — no
-    * global window, no driver data. The H-index per node reads the
+    * Scale shape: within the graph bound ([[driverRows]]) the rounds
+    * are a driver loop after one edge collect. Past it, per round, one
+    * keyed join (neighbor list ⋈ values, exchange pre-satisfied by
+    * pinning the neighbor list partitioned on the join key) + one
+    * node-KEYED window rank + one keyed agg — no global window, no
+    * driver data. The H-index per node reads the
     * neighbor values sorted descending: h = max rank r with value_r ≥ r
     * (the prefix property — values are sorted, so the qualifying ranks
     * are a prefix). Rounds needed can reach the graph's propagation
@@ -504,47 +520,42 @@ object Graph {
       srcCol: String = "u", dstCol: String = "v",
       assumeCanonical: Boolean = false, maxRounds: Int = 200): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // the nb-repartitioned neighbor pin is built only on the distributed
-    // path: the driver loop never joins on nb. canon is pinned
-    // when this operator built it (assumeCanonical callers pass a
-    // materialized set — the [[triangleCount]] reuse contract), so each
-    // nbrRaw execution is two cheap block reads.
-    val canon =
+    val job = new ScaleGate.Labels(edges.sparkSession, "Graph.coreness")
+    val canonRaw =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      else ScaleGate.materialize(canonicalEdges(edges, srcCol, dstCol))
-    val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
-      .union(canon.select(col("v").as("node"), col("u").as("nb")))
-    val h0 = nbrRaw.groupBy(col("node")).agg(count(lit(1)).as("h"))
-    // ONE bounded collect of the node-sized degree frame answers the
-    // gate and seeds the driver loop ([[ScaleGate.collectUnder]]); the
-    // materialize + count below run only on the distributed path
-    val driverH =
-      if (isLongType(h0, "node"))
-        ScaleGate.collectUnder(h0, driverLoopMaxNodes(h0))
-      else None
+      else canonicalEdges(edges, srcCol, dstCol)
     val refusal = s"coreness did not reach fixpoint in $maxRounds rounds " +
       "(propagation depth exceeds maxRounds); raise maxRounds"
-    driverH.foreach { hRows =>
-      // Driver-loop fixpoint: the h-vector is node-sized, so each
-      // H-application is ONE job over the pinned adjacency — profiled at
-      // sf0.1/q179, the distributed chain's 87 jobs were wall dominated
-      // by scheduling, task time a fraction. Arithmetic is EXACTLY
-      // hStep's: h = max rank r (neighbor values sorted desc) with
-      // value_r >= r; map equality ≡ the monotone sum compare.
-      val adj = ScaleGate.materialize(
-        nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")))
-      val (m, held) = ScaleGate.driverRounds(adj,
-          ScaleGate.nodeMap(hRows)(_.getLong(1)), maxRounds) { (m, _, nbs) =>
-        val vs = nbs.map(nb => m.get(nb).longValue).toArray
-        java.util.Arrays.sort(vs)
+    job("collect edges")(driverRows(canonRaw)).foreach { pairs =>
+      // Driver-loop fixpoint from h⁰ = degree: profiled at sf0.1/q179,
+      // the distributed chain's 87 jobs were wall dominated by
+      // scheduling, task time a fraction. Arithmetic is EXACTLY hStep's:
+      // h = max rank r (neighbor values sorted desc) with value_r >= r;
+      // array equality ≡ the monotone sum compare.
+      val g = ScaleGate.DriverGraph.undirected(pairs)
+      val vs = new Array[Long](g.maxDegree)
+      val (m, held) = ScaleGate.fixpoint(g,
+          Array.tabulate(g.n)(v => g.degree(v).toLong), maxRounds) { (m, v) =>
+        val n = g.gather(v, m, vs)
+        java.util.Arrays.sort(vs, 0, n)
         var h = 0
-        while (h < vs.length && vs(vs.length - 1 - h) > h) h += 1
+        while (h < n && vs(n - 1 - h) > h) h += 1
         h.toLong
       }
       // values are only an UPPER bound until the fixpoint — refuse.
       if (!held) throw new IllegalStateException(refusal)
-      return ScaleGate.nodeFrame(edges.sparkSession, m, "coreness")
+      return ScaleGate.nodeFrame(edges.sparkSession, g.ids, m, "coreness")
     }
+    // distributed: canon is pinned when this operator built it
+    // (assumeCanonical callers pass a materialized set — the
+    // [[triangleCount]] reuse contract), so each nbrRaw execution is two
+    // cheap block reads
+    val canon =
+      if (assumeCanonical) canonRaw
+      else job("pin edges")(ScaleGate.materialize(canonRaw))
+    val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
+      .union(canon.select(col("v").as("node"), col("u").as("nb")))
+    val h0 = nbrRaw.groupBy(col("node")).agg(count(lit(1)).as("h"))
     // Static across rounds — pinned with persist(), NOT a checkpoint:
     // an InMemoryRelation REPORTS its hashpartitioning(nb) to the
     // planner, so every round's value join genuinely reuses this one
@@ -577,8 +588,8 @@ object Graph {
     // the h-index sequence is monotone NON-INCREASING per node (Lü et
     // al. 2016, Thm 1 — h⁰ = degree, each application can only lower a
     // value); the result is checkpoint-materialized, independent of the pin
-    try ScaleGate.monotoneRounds(ScaleGate.materialize(h0), "h",
-        maxRounds, refusal)(hStep)
+    try job("rounds")(ScaleGate.monotoneRounds(ScaleGate.materialize(h0), "h",
+        maxRounds, refusal)(hStep))
       .select(col("node"), col("h").as("coreness"))
     finally nbr.unpersist(false)
   }
@@ -606,9 +617,10 @@ object Graph {
     * deterministic function of the labeling). Fixed-round semantics are
     * what the q165 oracle unrolls.
     *
-    * Scale shape: one keyed join (neighbor list ⋈ labels) + one
-    * (node, label) count agg + one node-KEYED window argmax per round —
-    * no global window, no driver data. The neighbor list is built and
+    * Scale shape: within the graph bound ([[driverRows]]) the rounds
+    * are a driver loop after one edge collect. Past it, one keyed join
+    * (neighbor list ⋈ labels) + one (node, label) count agg + one
+    * node-KEYED argmax per round — no global window, no driver data. The neighbor list is built and
     * pinned once; per-round state is pinned
     * ([[ScaleGate.materialize]]). The early-stop probe
     * pins the step it executes, so probe + next round share one
@@ -620,51 +632,45 @@ object Graph {
       srcCol: String = "u", dstCol: String = "v",
       assumeCanonical: Boolean = false, earlyStop: Boolean = true): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // the nb-repartitioned neighbor pin is built only on the distributed
-    // path, as in [[coreness]]: the driver loop never joins on nb
-    // (profiled at sf0.1/q165, the repartition + pin cost ~0.35 s a run)
-    val canon =
+    val job = new ScaleGate.Labels(edges.sparkSession, "Graph.labelPropagation")
+    val canonRaw =
       if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      else ScaleGate.materialize(canonicalEdges(edges, srcCol, dstCol))
-    val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
-      .union(canon.select(col("v").as("node"), col("u").as("nb")))
-    // ONE bounded collect of the node ids answers the gate and seeds the
-    // driver loop (every node starts labeled with its own id —
-    // [[ScaleGate.collectUnder]]); the label frame is materialized only
-    // on the distributed path
-    val nodes0 = nbrRaw.select(col("node")).distinct()
-    val driverNodes =
-      if (isLongType(nodes0, "node"))
-        ScaleGate.collectUnder(nodes0, driverLoopMaxNodes(nodes0))
-      else None
-    driverNodes.foreach { nodeRows =>
-      // Driver-loop rounds: per-row argmax of the neighbors' mapped
-      // labels, (count DESC, label ASC) exactly as lpaStep's two-level
-      // agg; round accounting is the EXACT single-step semantics the
-      // oracle unrolls, and earlyStop's test is map equality.
-      val adj = ScaleGate.materialize(
-        nbrRaw.groupBy(col("node")).agg(collect_list(col("nb")).as("nbs")))
-      val (m, _) = ScaleGate.driverRounds(adj,
-          ScaleGate.nodeMap(nodeRows)(_.getLong(0)), maxRounds,
-          (cur, next) => earlyStop && next == cur) { (m, _, nbs) =>
-        val ls = nbs.map(nb => m.get(nb).longValue).toArray
-        java.util.Arrays.sort(ls)
+      else canonicalEdges(edges, srcCol, dstCol)
+    job("collect edges")(driverRows(canonRaw)).foreach { pairs =>
+      // Driver-loop rounds from every node labeled with its own id:
+      // per-node argmax of the neighbors' labels, (count DESC, label
+      // ASC) exactly as lpaStep's two-level agg; round accounting is the
+      // EXACT single-step semantics the oracle unrolls, and earlyStop's
+      // test is array equality.
+      val g = ScaleGate.DriverGraph.undirected(pairs)
+      val ls = new Array[Long](g.maxDegree)
+      val (m, _) = ScaleGate.fixpoint(g, g.ids.clone(), maxRounds,
+          (cur, next) => earlyStop && java.util.Arrays.equals(cur, next)) { (m, v) =>
+        val n = g.gather(v, m, ls)
+        java.util.Arrays.sort(ls, 0, n)
         // longest run wins; ties keep the SMALLEST label — the ascending
         // sort visits labels smallest-first and only a strictly greater
         // count replaces the champion
         var (best, bestC, i) = (ls(0), 0, 0)
-        while (i < ls.length) {
+        while (i < n) {
           var j = i
-          while (j < ls.length && ls(j) == ls(i)) j += 1
+          while (j < n && ls(j) == ls(i)) j += 1
           if (j - i > bestC) { bestC = j - i; best = ls(i) }
           i = j
         }
         best
       }
-      return ScaleGate.nodeFrame(edges.sparkSession, m, "label")
+      return ScaleGate.nodeFrame(edges.sparkSession, g.ids, m, "label")
     }
-    var labels = ScaleGate.materialize(
-      nodes0.withColumn("label", col("node")))
+    // distributed: canon pinned as in [[coreness]]
+    val canon =
+      if (assumeCanonical) canonRaw
+      else job("pin edges")(ScaleGate.materialize(canonRaw))
+    val nbrRaw = canon.select(col("u").as("node"), col("v").as("nb"))
+      .union(canon.select(col("v").as("node"), col("u").as("nb")))
+    val nodes0 = nbrRaw.select(col("node")).distinct()
+    var labels = job("pin labels")(ScaleGate.materialize(
+      nodes0.withColumn("label", col("node"))))
     // distributed regime: label-join exchange pre-satisfied by pinning
     // the neighbor list partitioned on the join key
     // static across rounds — persist() pin, NOT a checkpoint: keeps
@@ -696,7 +702,7 @@ object Graph {
     //    rounds before round maxRounds — the identical frame fixed
     //    rounds would return, since the remaining F-applications are
     //    identities. Either way the returned labeling is unchanged.
-    try {
+    try job("rounds") {
       var round = 0
       var converged = false
       if (maxRounds % 2 == 1) {

@@ -1,8 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.LongType
 
 /** The one driver-loop rule: ship a frame to the driver only when it
   * provably fits under a row bound, and learn that from the ship itself.
@@ -13,28 +14,35 @@ import scala.jdk.CollectionConverters._
   * `bound` rows means the frame is over the bound; the caller goes
   * distributed, having paid at most `bound + 1` rows shipped once
   * before a many-job distributed loop. Callers pass a column-pruned
-  * frame so the ship carries only what the driver loop reads.
+  * frame so the ship carries only what the driver loop reads. Users:
+  * [[VectorIndex]] (Lloyd training rows), [[Spectral]] (power
+  * iteration vectors) and [[Retrieval.mmrSelect]] (candidates and
+  * symmetrized sims).
   *
-  * Users: [[VectorIndex]] (Lloyd training rows), [[Spectral]] (power
-  * iteration vectors), [[Retrieval.mmrSelect]] (candidates and
-  * symmetrized sims), and every graph driver loop on node-sized
-  * frames: [[Graph]]'s kCore, coreness, labelPropagation and
-  * convergent pageRank / personalizedPageRank, and
-  * [[TextDedup.connectedComponents]]. It is the only driver-loop gate
-  * in those operators: none runs a `count()` before deciding.
-  *
-  * The rounds behind that gate are written here too, once each:
-  *  - [[driverRounds]], the driver-loop round: broadcast a node→value
-  *    map, one job over a pinned `(node, nbs)` adjacency, collect. Its
-  *    users are the six graph fixpoints above; each passes only its
-  *    per-node kernel (kCore's degree within the keep set, coreness's
-  *    h-index, LPA's (count desc, label asc) argmax, PageRank's damped
-  *    integer sum, CC's min label).
-  *  - [[monotoneRounds]], the distributed loop of a monotone fixpoint,
-  *    two steps per materialization: distributed coreness and
-  *    [[TextDedup.connectedComponents]].
-  *  - [[materialize]], how the loop operators in this package pin
-  *    their per-round state. */
+  * The graph fixpoints ([[Graph]]'s kCore, coreness, labelPropagation,
+  * pageRank and personalizedPageRank, and
+  * [[TextDedup.connectedComponents]]) gate on their EDGE list, under
+  * the one graph bound `graft.broadcastMaxEdges`
+  * ([[Graph.broadcastMaxEdges]], the bound triangleCount's broadcasts
+  * and the distributed loops' broadcasts already use):
+  *  - [[collectLongs]] is `collectUnder` for all-LONG frames: the same
+  *    incremental take, but each task packs its rows into one
+  *    `long[]`, so the driver holds 8 bytes a value, not a boxed `Row`.
+  *    It runs before any pin; a node frame the result must cover (CC's
+  *    nodes, PPR's seeds) is collected under the same bound.
+  *  - [[DriverGraph]] holds the collected graph as primitive CSR
+  *    arrays: sorted node ids, row offsets, neighbour indices.
+  *  - [[fixpoint]] runs the rounds as a plain loop over it, with the
+  *    operator's per-node kernel (kCore's degree within the keep set,
+  *    coreness's h-index, LPA's (count desc, label asc) argmax,
+  *    PageRank's damped integer sum, CC's min label). A round starts no
+  *    job, so a graph that fits costs its collect jobs and nothing per
+  *    round.
+  * Over the bound (or with non-LONG ids, or a null among them) the
+  * distributed loops run instead; [[monotoneRounds]] is the shared
+  * loop of the monotone ones (distributed coreness and CC), and
+  * [[materialize]] is how every loop operator in this package pins its
+  * per-round state. [[Labels]] names every job those operators start. */
 object ScaleGate {
 
   /** Pin a loop-state frame and truncate its lineage, so plans do not
@@ -62,56 +70,185 @@ object ScaleGate {
       if (got.length > bound) None else Some(got)
     }
 
-  /** A driver loop's state: node id → value. */
-  type NodeMap = java.util.HashMap[java.lang.Long, java.lang.Long]
-
-  /** The map `row(0) → value(row)` over collected gate rows. */
-  def nodeMap(rows: Array[Row])(value: Row => Long): NodeMap = {
-    val m = new NodeMap(math.max(16, rows.length * 2))
-    rows.foreach(r => m.put(r.getLong(0), value(r)))
-    m
+  /** The rows of `df`, every column LONG, row-major in one primitive
+    * array when there are at most `bound` of them and none holds a
+    * null; else None. The [[collectUnder]] contract and the same jobs
+    * (Spark's incremental take: `spark.sql.limit.initialNumPartitions`
+    * partitions first, then `spark.sql.limit.scaleUpFactor` times the
+    * partitions scanned so far, each task reading at most the rows
+    * still missing), but a task ships its rows as one `long[]`. A null
+    * answers None: the driver loops have no null id, and the
+    * distributed loops keep their join semantics for it. The bound is
+    * clamped to the largest array the driver can hold. */
+  def collectLongs(df: DataFrame, bound: Long): Option[Array[Long]] = {
+    val width = df.schema.length
+    require(df.schema.forall(_.dataType == LongType),
+      s"collectLongs needs LONG columns, got ${df.schema.simpleString}")
+    val limit = math.min(bound, (Int.MaxValue - 8L) / width - 1L)
+    if (limit <= 0) return None
+    val conf = df.sparkSession.conf
+    val first = conf.get("spark.sql.limit.initialNumPartitions", "1").toInt
+    val scaleUp = conf.get("spark.sql.limit.scaleUpFactor", "4").toInt
+    val rdd = df.queryExecution.toRdd
+    val nParts = rdd.getNumPartitions
+    val chunks = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+    var rows = 0L
+    var scanned = 0
+    while (rows <= limit && scanned < nParts) {
+      val n = if (scanned == 0) first else scanned * scaleUp
+      val left = limit + 1 - rows
+      val got = df.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[InternalRow]) => {
+          val out = new scala.collection.mutable.ArrayBuilder.ofLong
+          var taken = 0L
+          var clean = true
+          while (clean && taken < left && it.hasNext) {
+            val r = it.next()
+            var c = 0
+            while (c < width) {
+              if (r.isNullAt(c)) clean = false else out += r.getLong(c)
+              c += 1
+            }
+            taken += 1
+          }
+          if (clean) Some(out.result()) else None
+        }, scanned until math.min(scanned + n, nParts))
+      if (got.exists(_.isEmpty)) return None
+      got.foreach { a => chunks += a.get; rows += a.get.length / width }
+      scanned = math.min(scanned + n, nParts)
+    }
+    if (rows > limit) None
+    else if (chunks.length == 1) Some(chunks.head)
+    else Some(Array.concat(chunks.toSeq: _*))
   }
 
-  /** A node map as a `(node, valueCol)` frame. */
-  def nodeFrame(spark: SparkSession, m: NodeMap,
-      valueCol: String): DataFrame = {
-    import spark.implicits._
-    m.asScala.toSeq.map { case (k, v) => (k.longValue, v.longValue) }
-      .toDF("node", valueCol)
+  /** Sorted distinct copy of `xs`. */
+  def distinctSorted(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    java.util.Arrays.sort(s)
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      if (n == 0 || s(i) != s(n - 1)) { s(n) = s(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(s, n)
   }
 
-  /** Driver-loop fixpoint over a pinned `(node: long, nbs: array<long>)`
-    * adjacency. Each round broadcasts the current map, runs ONE job,
-    * `adj.select(node, kernel(map, node, nbs))`, collects the rows and
-    * unpersists the broadcast: no join, no shuffle, no per-round
-    * materialization or probe job. The next map is the current one
-    * with each collected row's value replacing its node's: a node
-    * without an adjacency row keeps its value, and a row whose node is
-    * not a key of `init` is dropped, so the key set stays `init`'s.
-    * Stops after the first round where `done(current, next)` holds, or
-    * after `maxRounds` rounds; returns the last map and whether `done`
-    * held. The kernel runs on the executors against the broadcast map;
-    * it must read only what it closes over and its arguments. */
-  def driverRounds(adj: DataFrame, init: NodeMap, maxRounds: Int,
-      done: (NodeMap, NodeMap) => Boolean = _ == _)(
-      kernel: (NodeMap, Long, Seq[Long]) => Long): (NodeMap, Boolean) = {
+  /** A graph on the driver in CSR form: node `i` has id `ids(i)` (sorted
+    * ascending, distinct) and neighbours `nbrs(offsets(i))` until
+    * `nbrs(offsets(i + 1))`, each an index into `ids`. Neighbour lists
+    * keep duplicate edges, as the distributed loops' joins do. */
+  final class DriverGraph(val ids: Array[Long], val offsets: Array[Int],
+      val nbrs: Array[Int]) {
+    def n: Int = ids.length
+    def degree(v: Int): Int = offsets(v + 1) - offsets(v)
+    def maxDegree: Int = (0 until n).foldLeft(0)((m, v) => math.max(m, degree(v)))
+    /** Index of `id`, or a negative number when it is not a node. */
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    /** Copies the values of `v`'s neighbours into `buf`; returns how many. */
+    def gather(v: Int, values: Array[Long], buf: Array[Long]): Int = {
+      var j = offsets(v)
+      val end = offsets(v + 1)
+      while (j < end) { buf(j - offsets(v)) = values(nbrs(j)); j += 1 }
+      end - offsets(v)
+    }
+  }
+
+  object DriverGraph {
+    /** Undirected graph over the endpoints of `pairs` (interleaved
+      * `a0, b0, a1, b1, …`): each pair links both ways. */
+    def undirected(pairs: Array[Long]): DriverGraph =
+      build(distinctSorted(pairs), pairs, both = true)
+
+    /** Undirected graph over `ids` (sorted distinct): a pair naming an id
+      * outside `ids` is dropped. */
+    def undirected(ids: Array[Long], pairs: Array[Long]): DriverGraph =
+      build(ids, pairs, both = true)
+
+    /** In-edge graph over `ids` (sorted distinct): node `dst` lists every
+      * `src` of a `(src, dst)` pair; a pair naming an id outside `ids`
+      * is dropped. */
+    def inEdges(ids: Array[Long], pairs: Array[Long]): DriverGraph =
+      build(ids, pairs, both = false)
+
+    private def build(ids: Array[Long], pairs: Array[Long],
+        both: Boolean): DriverGraph = {
+      val m = pairs.length / 2
+      // resolve every endpoint once; -1 marks a dropped pair
+      val src = new Array[Int](m)
+      val dst = new Array[Int](m)
+      val offsets = new Array[Int](ids.length + 1)
+      var j = 0
+      while (j < m) {
+        val s = java.util.Arrays.binarySearch(ids, pairs(2 * j))
+        val d = java.util.Arrays.binarySearch(ids, pairs(2 * j + 1))
+        if (s >= 0 && d >= 0) {
+          src(j) = s; dst(j) = d
+          offsets(d + 1) += 1
+          if (both) offsets(s + 1) += 1
+        } else src(j) = -1
+        j += 1
+      }
+      var v = 0
+      while (v < ids.length) { offsets(v + 1) += offsets(v); v += 1 }
+      val fill = java.util.Arrays.copyOf(offsets, ids.length)
+      val nbrs = new Array[Int](offsets(ids.length))
+      j = 0
+      while (j < m) {
+        if (src(j) >= 0) {
+          nbrs(fill(dst(j))) = src(j); fill(dst(j)) += 1
+          if (both) { nbrs(fill(src(j))) = dst(j); fill(src(j)) += 1 }
+        }
+        j += 1
+      }
+      new DriverGraph(ids, offsets, nbrs)
+    }
+  }
+
+  /** A per-node round kernel: node `v`'s next value from the current
+    * values `cur` (indexed like [[DriverGraph.ids]]). */
+  trait Kernel { def apply(cur: Array[Long], v: Int): Long }
+
+  /** Driver-loop fixpoint over `g` from the values `init` (consumed: the
+    * loop reuses it as a buffer). Every round computes each node's next
+    * value with `kernel` from the current ones, on the driver, starting
+    * no job. Stops after the first round where `done(current, next)`
+    * holds, or after `maxRounds` rounds; returns the last values and
+    * whether `done` held. */
+  def fixpoint(g: DriverGraph, init: Array[Long], maxRounds: Int,
+      done: (Array[Long], Array[Long]) => Boolean =
+        java.util.Arrays.equals(_: Array[Long], _: Array[Long]))(
+      kernel: Kernel): (Array[Long], Boolean) = {
     var cur = init
+    var next = new Array[Long](init.length)
     var held = false
     var round = 0
     while (!held && round < maxRounds) {
-      val bc = adj.sparkSession.sparkContext.broadcast(cur)
-      val step = udf((node: Long, nbs: Seq[Long]) => kernel(bc.value, node, nbs))
-      val rows = try adj.select(col("node"), step(col("node"), col("nbs")))
-        .collect() finally bc.unpersist(false)
-      val next = new NodeMap(cur)
-      rows.foreach { r =>
-        if (next.containsKey(r.getLong(0))) next.put(r.getLong(0), r.getLong(1))
-      }
+      var v = 0
+      while (v < g.n) { next(v) = kernel(cur, v); v += 1 }
       held = done(cur, next)
-      cur = next
+      val t = cur; cur = next; next = t
       round += 1
     }
     (cur, held)
+  }
+
+  /** The driver values as a `(node, valueCol)` frame, over the nodes
+    * whose value passes `keep`. */
+  def nodeFrame(spark: SparkSession, ids: Array[Long], values: Array[Long],
+      valueCol: String, keep: Long => Boolean = _ => true): DataFrame = {
+    import spark.implicits._
+    ids.indices.filter(i => keep(values(i))).map(i => (ids(i), values(i)))
+      .toDF("node", valueCol)
+  }
+
+  /** Names the jobs of one operator: `job(step)(body)` runs `body` with
+    * every job it starts described `"<op>: <step>"`
+    * ([[graft.JobStats.labeled]]). */
+  final class Labels(spark: SparkSession, op: String) {
+    def apply[T](step: String)(body: => T): T =
+      graft.JobStats.labeled(spark, s"$op: $step")(body)
   }
 
   /** Distributed loop of a MONOTONE fixpoint — every `step` can only

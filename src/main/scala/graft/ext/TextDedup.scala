@@ -176,12 +176,14 @@ object TextDedup {
     * graph diameter, and dup clusters are near-cliques, so 2-3 rounds
     * in practice — the standard large-scale CC layout (cf. the
     * large-star/small-star refinement for adversarial diameters).
-    * Pinning per round ([[ScaleGate.materialize]]: reliable when the
-    * context has a checkpoint dir, local otherwise) truncates lineage
-    * so plans don't grow per round; the symmetrized edge set is
-    * materialized ONCE before the loop, so an expensive upstream (e.g.
-    * the full MinHash pipeline behind [[lshCandidates]]) is never
-    * recomputed per round.
+    * When the pairs and the nodes each fit the graph bound
+    * ([[Graph.driverRows]]), one collect of each is the only job and
+    * every round runs on the driver. Past it, pinning per round
+    * ([[ScaleGate.materialize]]: reliable when the context has a
+    * checkpoint dir, local otherwise) truncates lineage so plans don't
+    * grow per round; the symmetrized edge set is materialized ONCE
+    * before the loop, so an expensive upstream (e.g. the full MinHash
+    * pipeline behind [[lshCandidates]]) is never recomputed per round.
     *
     * Node universe: `nodes`. A pair that names an id outside it is
     * ignored, so the components are those of the subgraph `nodes`
@@ -197,22 +199,9 @@ object TextDedup {
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
       nodeCol: String = "id", maxRounds: Int = 15): DataFrame = {
-    // pinned REPARTITIONED on the per-round join key, so every round's
-    // edge-side exchange is pre-satisfied (the [[Graph.pageRank]] edge
-    // discipline) — only the node-sized label frame shuffles per round
-    val sym = ScaleGate.materialize(
-      pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
-        .union(pairs.select(col(dstCol).as("a"), col(srcCol).as("b")))
-        .repartition(col("b")))
-    // ONE bounded collect of the node ids answers the gate and seeds the
-    // driver loop (every node starts as its own component —
-    // [[ScaleGate.collectUnder]]); the label frame is materialized and
-    // counted only on the distributed path
+    val job = new ScaleGate.Labels(pairs.sparkSession,
+      "TextDedup.connectedComponents")
     val nodeIds = nodes.select(col(nodeCol).as("node"))
-    val driverNodes =
-      if (Graph.isLongType(nodeIds, "node"))
-        ScaleGate.collectUnder(nodeIds, Graph.driverLoopMaxNodes(nodeIds))
-      else None
     // Partially-propagated labels would silently keep extra "unique" docs
     // downstream — refuse to return them. Diameter > maxRounds means the
     // pair graph is a long chain, not the near-clique dup clusters this
@@ -221,30 +210,42 @@ object TextDedup {
     val refusal = s"connectedComponents did not converge in $maxRounds rounds " +
       "(graph diameter exceeds maxRounds); raise maxRounds or use " +
       "connectedComponentsStar"
-    driverNodes.foreach { nodeRows =>
-      // Driver-loop rounds: per-row min(own, min(neighbors)) over the
-      // label map. Ids outside the map are skipped and their rows
-      // dropped, exactly propagate's inner join; nodes without pairs
-      // keep their label, exactly its left join.
-      val adj = ScaleGate.materialize(
-        sym.groupBy(col("a").as("node")).agg(collect_list(col("b")).as("nbs")))
-      val (m, held) = ScaleGate.driverRounds(adj,
-          ScaleGate.nodeMap(nodeRows)(_.getLong(0)), maxRounds) { (m, node, nbs) =>
-        nbs.foldLeft(m.getOrDefault(node, node).longValue) { (best, nb) =>
-          val v = m.get(nb)
-          if (v != null && v < best) v.longValue else best
-        }
+    // ONE bounded collect of the pairs and one of the node ids, under
+    // the graph bound, are the gate ([[Graph.driverRows]])
+    val driver = for {
+      edges <- job("collect pairs")(
+        Graph.driverRows(pairs.select(col(srcCol), col(dstCol))))
+      ids <- job("collect nodes")(Graph.driverRows(nodeIds))
+    } yield (edges, ScaleGate.distinctSorted(ids))
+    driver.foreach { case (edges, ids) =>
+      // Driver-loop rounds from every node as its own component: per
+      // node min(own, min(neighbors)). A pair naming an id outside the
+      // nodes is dropped, exactly propagate's inner join; nodes without
+      // pairs keep their label, exactly its left join.
+      val g = ScaleGate.DriverGraph.undirected(ids, edges)
+      val (m, held) = ScaleGate.fixpoint(g, ids.clone(), maxRounds) { (m, v) =>
+        var best = m(v)
+        var j = g.offsets(v)
+        while (j < g.offsets(v + 1)) { best = math.min(best, m(g.nbrs(j))); j += 1 }
+        best
       }
       if (!held) throw new IllegalStateException(refusal)
-      return ScaleGate.nodeFrame(pairs.sparkSession, m, "component")
+      return ScaleGate.nodeFrame(pairs.sparkSession, ids, m, "component")
     }
-    val labels = ScaleGate.materialize(
-      nodeIds.withColumn("component", col("node")))
+    // pinned REPARTITIONED on the per-round join key, so every round's
+    // edge-side exchange is pre-satisfied (the [[Graph.pageRank]] edge
+    // discipline) — only the node-sized label frame shuffles per round
+    val sym = job("pin pairs")(ScaleGate.materialize(
+      pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
+        .union(pairs.select(col(dstCol).as("a"), col(srcCol).as("b")))
+        .repartition(col("b"))))
+    val labels = job("pin labels")(ScaleGate.materialize(
+      nodeIds.withColumn("component", col("node"))))
     // node-sized label frame vs edge-sized sym: broadcast-gate the
     // per-round joins (guide §3.1) — the localCheckpoint's unknown stats
     // otherwise force a sort-merge join that re-sorts the edge-sized
     // side every round
-    val nNodes = labels.count()
+    val nNodes = job("count nodes")(labels.count())
     def maybeB(df: DataFrame): DataFrame =
       if (nNodes <= Graph.broadcastMaxEdges(labels))
         org.apache.spark.sql.functions.broadcast(df)
@@ -259,8 +260,8 @@ object TextDedup {
             .as("component"))
     }
     // labels are min-ids, monotone NON-INCREASING per node
-    ScaleGate.monotoneRounds(labels, "component", maxRounds,
-      refusal)(propagate)
+    job("rounds")(ScaleGate.monotoneRounds(labels, "component", maxRounds,
+      refusal)(propagate))
   }
 
   /** Connected components via alternating large-star / small-star

@@ -563,14 +563,6 @@ object StreamEval {
     * `_`-prefixed, so parquet readers never see it. */
   private val FpCompactMarker = "_compacted_through"
 
-  /** Label the jobs an eager block submits (guide §1.5) so profiler
-    * output attributes each monitor job; description restored after. */
-  private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(null)
-  }
-
   private type HPath = org.apache.hadoop.fs.Path
 
   private def fsOf(spark: SparkSession, p: HPath) =
@@ -587,15 +579,21 @@ object StreamEval {
     val root = new HPath(statePath)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (-1L, Nil)
-    val gens = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(s => (s.getPath.getName.stripPrefix("batch_id=").toLong, s.getPath))
-      .sortBy(_._1).toSeq
+    val gens = allGenerations(fs, root)
     val wm = gens.filter { case (_, p) =>
       fs.exists(new HPath(p, FpCompactMarker))
     }.map(_._1).lastOption.getOrElse(-1L)
     (wm, gens.filter(_._1 >= wm))
   }
+
+  /** Every `batch_id=` generation under `root`, live or stale,
+    * ascending by id. */
+  private def allGenerations(fs: org.apache.hadoop.fs.FileSystem,
+      root: HPath): Seq[(Long, HPath)] =
+    fs.listStatus(root)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
+      .map(s => (s.getPath.getName.stripPrefix("batch_id=").toLong, s.getPath))
+      .sortBy(_._1).toSeq
 
   /** Repair a [[compactFingerprintGenerations]] run that crashed in
     * its two-rename swap window. The swap order is: write tmp (parquet,
@@ -703,7 +701,7 @@ object StreamEval {
     val tmp = new HPath(root, s"_tmp_b$batchId")
     if (fs.exists(tmp)) fs.delete(tmp, true) // leftover from a crash
     val obs = org.apache.spark.sql.Observation(s"fp_append_b$batchId")
-    labeled(spark, s"fp_append b=$batchId: generation write (+obs)")(
+    graft.JobStats.labeled(spark, s"fp_append b=$batchId: generation write (+obs)")(
       novel.observe(obs, count(lit(1)).as("n"))
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString))
     val n = obs.get("n").asInstanceOf[Long]
@@ -778,9 +776,12 @@ object StreamEval {
         "failed; original generation preserved at " + aside +
         " (recoverFingerprintState restores it)")
     fs.delete(aside, true)
-    // sweep the now-redundant generations BELOW the new watermark —
-    // pruned by the read rule either way; failures retried next round
-    toCompact.filter(_._1 < upTo)
+    // sweep EVERY generation below the new watermark: the ones just
+    // compacted, and any stale one an earlier compaction left below its
+    // own watermark (a crash between its renames, rolled forward by
+    // recoverFingerprintState, leaves its sources unswept). Pruned by
+    // the read rule either way; failures retried next round
+    allGenerations(fs, root).filter(_._1 < upTo)
       .foreach { case (_, p) => fs.delete(p, true) }
     n
   }

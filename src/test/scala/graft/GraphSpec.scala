@@ -124,14 +124,14 @@ class GraphSpec extends SparkSpec {
       Graph.kCore(toDf(es), 2, maxRounds = rounds).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (bound <- Seq(None, Some(0L))) {
-      bound.foreach(b => spark.conf.set("graft.driverLoopMaxNodes", b.toString))
+      bound.foreach(b => spark.conf.set("graft.broadcastMaxEdges", b.toString))
       try {
         assert(core(k4 ++ path, 13) === (0L to 3L).map(_ -> 3L).toMap,
           s"bound $bound")
         intercept[IllegalStateException](core(k4 ++ path, 12))
         assert(core(star, 2) === Map.empty[Long, Long], s"bound $bound")
         intercept[IllegalStateException](core(star, 1))
-      } finally spark.conf.unset("graft.driverLoopMaxNodes")
+      } finally spark.conf.unset("graft.broadcastMaxEdges")
     }
   }
 
@@ -279,5 +279,45 @@ class GraphSpec extends SparkSpec {
     val early = Graph.labelPropagation(toDf(g), maxRounds = 12)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(early === fixedDeep)
+  }
+
+  /** A path 0 - 1 - … - (n - 1). */
+  private def path(n: Int): Seq[(Long, Long)] =
+    (0 until n - 1).map(i => (i.toLong, i + 1L))
+
+  test("graph fixpoints on the driver: the job count does not grow with " +
+    "the rounds") {
+    // coreness on a path relaxes one hop per round from each end, so the
+    // 40-node path runs ~4x the rounds of the 10-node one
+    def corenessJobs(n: Int): Int =
+      jobStats(Graph.coreness(toDf(path(n))).collect())._1
+    assert(corenessJobs(40) === corenessJobs(10))
+    val g = toDf(samples(edgeGen(12, 0L), 1).head)
+    def lpaJobs(rounds: Int): Int = jobStats(Graph.labelPropagation(g,
+      maxRounds = rounds, earlyStop = false).collect())._1
+    assert(lpaJobs(10) === lpaJobs(1))
+  }
+
+  test("every job of a graph fixpoint is labeled with its operator, on " +
+    "the driver path and forced distributed") {
+    val g = toDf(samples(edgeGen(12, 0L), 1).head)
+    def descriptions(): Seq[String] =
+      JobStats.measure(spark)(Graph.coreness(g))._2.jobs.map(_.description)
+    val driver = descriptions()
+    spark.conf.set("graft.broadcastMaxEdges", "0")
+    val distributed = try descriptions()
+    finally spark.conf.unset("graft.broadcastMaxEdges")
+    for ((what, ds) <- Seq("driver" -> driver, "distributed" -> distributed)) {
+      assert(ds.nonEmpty, s"$what: no job recorded")
+      assert(ds.forall(_.startsWith("Graph.coreness: ")), s"$what: $ds")
+    }
+    assert(distributed.size > driver.size)
+    // the caller's own description is back in place afterwards
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      Graph.coreness(g)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+    } finally sc.setJobDescription(null)
   }
 }

@@ -64,19 +64,24 @@ class Round19OptSpec extends SparkSpec {
     }
   }
 
-  /** Driver-loop gate boundaries: `run` at driverLoopMaxNodes = `n`
-    * (the size of the frame the gate collects: driver loop) and `n - 1`
+  /** Graph gate boundaries: `run` at broadcastMaxEdges = `n` (the most
+    * rows one of the gate's collects takes: driver loop) and `n - 1`
     * (distributed loop), and at bounds past Int.MaxValue (which must
     * not overflow the collect limit), each == the forced-distributed
     * rows `dist`. */
   private def gateSweep[T](what: String, n: Long, dist: T)(run: => T): Unit =
     Seq(n, n - 1L, Int.MaxValue.toLong, 4294967295L, Long.MaxValue)
-      .foreach(b => withConf("graft.driverLoopMaxNodes", b) {
+      .foreach(b => withConf("graft.broadcastMaxEdges", b) {
         assert(run === dist, s"$what at bound $b")
       })
 
   private def forced[T](run: => T): T =
-    withConf("graft.driverLoopMaxNodes", 0L)(run)
+    withConf("graft.broadcastMaxEdges", 0L)(run)
+
+  /** Rows of the canonical (u < v, distinct) edge set the undirected
+    * fixpoints collect. */
+  private def canonicalRows(edges: Seq[(Long, Long)]): Long =
+    edges.map { case (a, b) => (a min b, a max b) }.distinct.size.toLong
 
   private def pairs(rows: Array[org.apache.spark.sql.Row]): Set[(Long, Long)] =
     rows.map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -86,7 +91,7 @@ class Round19OptSpec extends SparkSpec {
     rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("coreness/labelPropagation: forced distributed " +
-    "(driverLoopMaxNodes=0) == driver loop, random graphs") {
+    "(broadcastMaxEdges=0) == driver loop, random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(23)
     (0 until 2).foreach { trial =>
@@ -102,13 +107,12 @@ class Round19OptSpec extends SparkSpec {
       val (cD, lD) = forced((coreness(), lpa()))
       assert(coreness() === cD, s"trial $trial: coreness diverged")
       assert(lpa() === lD, s"trial $trial: LPA diverged")
-      val nNodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
-      gateSweep(s"trial $trial: coreness", nNodes, cD)(coreness())
+      gateSweep(s"trial $trial: coreness", canonicalRows(edges), cD)(coreness())
     }
   }
 
   test("kCore/labelPropagation/personalizedPageRank/connectedComponents: " +
-    "driver loop at the node bound and distributed loop past it == forced " +
+    "driver loop at the edge bound and distributed loop past it == forced " +
     "distributed, random graph") {
     import spark.implicits._
     val rnd = new scala.util.Random(31)
@@ -117,36 +121,39 @@ class Round19OptSpec extends SparkSpec {
       (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter { case (a, b) => a != b }.distinct
     val df = edges.toDF("u", "v")
-    val nNodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
+    val nCanon = canonicalRows(edges)
 
     def kCore(): Set[(Long, Long)] =
       pairs(graft.ext.Graph.kCore(df, k = 3).collect())
     val kD = forced(kCore())
     assert(kD.nonEmpty, "the 3-core should not be empty on this graph")
-    gateSweep("kCore", nNodes, kD)(kCore())
+    gateSweep("kCore", nCanon, kD)(kCore())
 
     def lpa(): Set[(Long, Long)] =
       pairs(graft.ext.Graph.labelPropagation(df, maxRounds = 5).collect())
-    gateSweep("labelPropagation", nNodes, forced(lpa()))(lpa())
+    gateSweep("labelPropagation", nCanon, forced(lpa()))(lpa())
 
-    // directed both ways; one seed (n + 5) has no out-edges (d = 0)
-    val directed = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      .distinct.toDF("src", "dst")
+    // directed both ways; one seed (n + 5) has no out-edges (d = 0). The
+    // gate collects the edges and the 4 seed rows: the edges are more
+    val directedRows = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .distinct
+    val directed = directedRows.toDF("src", "dst")
     val seedIds = Seq(0L, 1L, 2L, n + 5L)
     val seeds = seedIds.toDF("node")
     def ppr(): Set[(Long, Long, Long)] = triples(graft.ext.Graph
       .personalizedPageRank(directed, seeds, maxIterations = 8,
         checkConvergence = true).collect())
-    val universe = (edges.flatMap { case (a, b) => Seq(a, b) } ++ seedIds)
-      .distinct.size
-    gateSweep("personalizedPageRank", universe, forced(ppr()))(ppr())
+    gateSweep("personalizedPageRank", directedRows.size.toLong,
+      forced(ppr()))(ppr())
 
-    // isolated nodes (n until n + 3) stay singleton components
+    // isolated nodes (n until n + 3) stay singleton components; the gate
+    // collects the pairs as given and the n + 3 node rows
     val nodeIds = (0L until n + 3L).toDF("id")
     val ccPairs = edges.toDF("id_a", "id_b")
     def cc(): Set[(Long, Long)] = pairs(graft.ext.TextDedup
       .connectedComponents(ccPairs, nodeIds, maxRounds = 40).collect())
-    gateSweep("connectedComponents", n + 3L, forced(cc()))(cc())
+    gateSweep("connectedComponents", math.max(edges.size, n + 3).toLong,
+      forced(cc()))(cc())
   }
 
   test("empty edge set: every graph driver-loop gate == forced " +
@@ -175,8 +182,9 @@ class Round19OptSpec extends SparkSpec {
     assert(forced(runAll()) === expected, "forced distributed")
   }
 
-  test("pageRank with convergence: driver loop at the node bound and " +
-    "distributed loop past it == forced distributed, random graphs") {
+  test("pageRank with convergence and in fixed rounds: driver loop at the " +
+    "edge bound and distributed loop past it == forced distributed, " +
+    "random graphs") {
     import spark.implicits._
     // one 30-node graph: each distributed run goes up to 30 convergence
     // supersteps, so a second, larger trial doubled the test's time
@@ -190,9 +198,14 @@ class Round19OptSpec extends SparkSpec {
     def run(): Set[(Long, Long, Long)] = triples(graft.ext.Graph
       .pageRank(df, maxIterations = 30, checkConvergence = true).collect())
     val dist = forced(run())
-    val nSrc = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
-    gateSweep("pageRank", nSrc, dist)(run())
+    val nEdges = df.count()
+    gateSweep("pageRank", nEdges, dist)(run())
     assert(run() === dist, "pageRank at the default bound")
+    // q134's mode: 3 fixed supersteps, a lazy chain when distributed
+    def fixed(): Set[(Long, Long, Long)] = triples(graft.ext.Graph
+      .pageRank(df, maxIterations = 3, checkConvergence = false).collect())
+    gateSweep("pageRank fixed rounds", nEdges, forced(fixed()))(fixed())
+    val nSrc = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.size
     // pageRank is personalizedPageRank with every src node seeded, with
     // convergence on and off, in both regimes; on no edges it has no rows
     val srcs = df.select(col("src").as("node")).distinct()

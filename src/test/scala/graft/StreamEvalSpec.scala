@@ -583,6 +583,18 @@ class StreamEvalSpec extends SparkSpec {
       assert(readOut(st) === want012, s"$name: read-out after the next " +
         "append != no-crash run")
     }
+
+    // posture (b) rolled forward leaves its source generation 0 below
+    // the watermark 1; the next compaction must sweep it with the rest
+    val st = twoGens("sevalcrsweep")
+    postures(1)._2(st)
+    append(st, b2, 2L)
+    append(st, arriving, 3L)
+    val before = readOut(st)
+    StreamEval.compactFingerprintGenerations(spark, st, upTo = 3L)
+    assert(listGens(st) === Seq("batch_id=3"),
+      "a generation below the old watermark survived the compaction")
+    assert(readOut(st) === before, "compaction changed the read-out")
   }
 
   test("appendFingerprintBatch returns counts without re-reading the " +
